@@ -21,10 +21,15 @@ reference inside the body is a cheap bound-variable read.
 
 from __future__ import annotations
 
+import re
 from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# "(?=", "(?!", "(?<=" or "(?<!" behind an even run of backslashes (an
+# unescaped paren); named groups "(?<name>" do not match
+_LOOKAROUND = re.compile(r"(?<!\\)(?:\\\\)*\(\?(?:=|!|<=|<!)")
 
 
 def let(val: Column, body: Callable[[Column], Column]) -> Column:
@@ -48,8 +53,11 @@ def zip_match_groups(text: Column, pattern: str, names: list[str]) -> Column:
     candidate paths fail at end-of-input exactly where they failed on
     the full text, and edge ``\\b`` assertions hold at SOS/EOS iff they
     held at the original boundaries (the adjacent chars were non-word).
-    Callers must not pass patterns with lookarounds that inspect text
-    OUTSIDE the match."""
+    A lookaround may inspect text OUTSIDE the match, which breaks that
+    argument, so a pattern containing one raises ``ValueError``."""
+    if _LOOKAROUND.search(pattern):
+        raise ValueError(
+            f"zip_match_groups: lookaround in pattern {pattern!r}")
     return F.transform(
         F.regexp_extract_all(text, F.lit(pattern), 0),
         lambda m: F.struct(*[

@@ -24,9 +24,8 @@ int arithmetic — no float appears anywhere in the hash.
   undecodable payloads yield NULL, never a batch failure).  Output is
   nullable Int64 — the same float64-coercion trap documented in
   ``imagehash.image_hashes`` applies.
-- ``audio_neardup`` / ``audio_index``: the shared 4x16-bit pigeonhole
-  band machinery (``imagehash.banded_index`` /
-  ``banded_neardup_pairs``), complete for Hamming <= 3.
+- ``audio_neardup`` / ``audio_index``: the shared banded-Hamming
+  kernel (``hamming.py``), complete for Hamming <= 3.
 
 Scale shape: one narrow Arrow pass decodes + fingerprints (payload
 bytes never leave the stage); the only shuffle is the band-bucket
@@ -42,7 +41,12 @@ the multimodal dedup family SURVEY §2 adds.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .hamming import (
+    banded_index,
+    banded_neardup_pairs,
+    incremental_banded_pairs,
+)
 
 __all__ = ["audio_fp64", "afp_from_payload", "encode_wav16",
            "audio_hashes", "audio_index", "audio_neardup",
@@ -193,8 +197,6 @@ def audio_index(
     """The persistable audio-dedup index ``(id, afp, bi, bv)`` —
     decode + fingerprint happen once, at ingest (the
     ``imagehash.image_index`` shape on the audio plane)."""
-    from .imagehash import banded_index
-
     return banded_index(audio_hashes(media, id_col, payload_col), "afp")
 
 
@@ -207,8 +209,6 @@ def audio_neardup(
     """Near-dup audio pairs ``(a, b, hamming)`` with
     Hamming(fingerprint) <= ``max_hamming`` (complete for <= 3 by the
     4-band pigeonhole)."""
-    from .imagehash import banded_neardup_pairs
-
     return banded_neardup_pairs(
         audio_index(media, id_col, payload_col), "afp", max_hamming)
 
@@ -223,40 +223,12 @@ def incremental_audio_candidates(
     """Incremental audio near-dup: NEW clips vs the EXISTING corpus
     index (``audio_index`` rows), plus new-vs-new — corpus samples are
     never re-decoded. Completes the stored-index symmetry across all
-    three dedup modalities (text SimHash / image dHash / this); the
-    decomposition guarantee and probe-cost shape are identical to
-    ``imagehash.incremental_image_candidates``.
+    three dedup modalities (text SimHash / image dHash / this). A thin
+    wrapper over ``hamming.incremental_banded_pairs``.
 
-    Returns ``(pairs, delta_index)``."""
-    from .imagehash import _first_match
-
-    # the delta index feeds the probe leg, the new-vs-new pair
-    # generator, AND the caller's append — without a boundary the
-    # delta's Arrow decode+hash pass re-runs per consumer
-    delta_index = audio_index(new_media, id_col, payload_col).localCheckpoint(
-        eager=False
-    )
-    corpus = index.select(
-        "bi", "bv", F.col("id").alias("x"), F.col("afp").alias("hx")
-    )
-    fresh = delta_index.select(
-        "bi", "bv", F.col("id").alias("y"), F.col("afp").alias("hy")
-    )
-    new_vs_old = (
-        corpus.join(fresh, ["bi", "bv"])
-        .filter(F.col("x") != F.col("y"))
-        .filter(F.col("bi") == _first_match(F.col("hx"), F.col("hy")))
-        .withColumn("hamming",
-                    F.bit_count(F.col("hx").bitwiseXOR(F.col("hy"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.least("x", "y").alias("a"),
-            F.greatest("x", "y").alias("b"),
-            F.col("hamming").cast("int").alias("hamming"),
-        )
-    )
-    from .imagehash import banded_neardup_pairs
-
-    new_vs_new = banded_neardup_pairs(delta_index, "afp", max_hamming)
-    # distinct: a re-fed clip can surface the same pair from both legs
-    return new_vs_old.unionByName(new_vs_new).distinct(), delta_index
+    Returns ``(pairs, delta_index)``. The returned ``delta_index``
+    is a lazy ``localCheckpoint``: executor-local, lost on executor
+    loss, and holding storage while the caller keeps a reference."""
+    return incremental_banded_pairs(
+        audio_index(new_media, id_col, payload_col), index, "afp",
+        max_hamming)

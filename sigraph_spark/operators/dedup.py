@@ -11,8 +11,8 @@ Five families, all first-class at 100 TB (driver brief):
   records this family rows-only; the downstream Jaccard verify IS
   oracle-checked in integer form).
 * **SimHash**      — 64-bit sign-aggregated shingle hash; near-dups =
-  Hamming distance <= k, found via 4-way band blocking (pigeonhole: any
-  pair within Hamming<=3 shares at least one of 4 16-bit bands).
+  Hamming distance <= k, found by the shared banded-Hamming kernel
+  (``hamming.py``: 4 16-bit bands, pigeonhole-complete for Hamming<=3).
 * **n-gram Jaccard** — exact Jaccard over shingle sets for a candidate
   pair set (the verify step after LSH blocking).
 * **embedding cosine** — near-dup by cosine >= t over an
@@ -37,6 +37,12 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .hamming import (
+    banded_index,
+    banded_neardup_pairs,
+    incremental_banded_pairs,
+)
 
 # 61-bit Mersenne prime keeps (a*h+b) mod p exact in signed 64-bit range
 # only if a*h fits — so we work mod 2^31-1 with 32-bit shingle hashes
@@ -537,24 +543,6 @@ def simhash_udf(family: str = "blake2b"):
     return F.pandas_udf(_simhash_batch_factory(family), "long")
 
 
-def _sh_band(sh: Column, i: int) -> Column:
-    """16-bit band i of a 64-bit SimHash (pigeonhole for Hamming<=3)."""
-    return F.shiftright(sh, i * 16).bitwiseAND(F.lit(0xFFFF))
-
-
-def _sh_first_match(sha: Column, shb: Column) -> Column:
-    """Index of the FIRST band where two signatures agree. A pair
-    colliding in k bands appears k times in the band self-join; keeping
-    only the first-matching-band row dedups as a per-row filter instead
-    of a distinct() shuffle over the (possibly quadratic) pairs."""
-    first_match = F.lit(None).cast("int")
-    for i in range(3, -1, -1):
-        first_match = F.when(
-            _sh_band(sha, i) == _sh_band(shb, i), F.lit(i)
-        ).otherwise(first_match)
-    return first_match
-
-
 def simhash_index(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -570,21 +558,10 @@ def simhash_index(
     each crawl snapshot deduplicates against the corpus WITHOUT
     re-signing it (see ``incremental_simhash_candidates``). One narrow
     Arrow pass + explode; no shuffle until the consumer joins."""
-    sim = docs.select(
+    return banded_index(docs.select(
         F.col(id_col).alias("id"),
         simhash_udf(hash_family)(F.col(text_col)).alias("sh"),
-    )
-    return sim.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("bi"),
-                         _sh_band(F.col("sh"), i).alias("bv"))
-                for i in range(4)
-            ])
-        ).alias("bk"),
-    ).select("id", "sh", F.col("bk.bi").alias("bi"), F.col("bk.bv").alias("bv"))
+    ), "sh")
 
 
 def simhash_candidates(
@@ -594,27 +571,14 @@ def simhash_candidates(
     max_hamming: int = 3,
     hash_family: str = "blake2b",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: block on 4 16-bit bands (pigeonhole for
-    Hamming<=3), verify exact Hamming distance via bit_count(xor).
+    """Near-dup pairs ``(a, b, hamming)`` by SimHash: the banded-Hamming
+    self-join (``hamming.banded_neardup_pairs``) over ``simhash_index``.
 
     Signature via the Arrow pandas UDF (see ``_simhash_batch_factory``);
     banding, the bucket self-join, and Hamming verification stay JVM-side."""
-    # lazy checkpoint: both self-join legs consume the index, and the
-    # aliased subplans would otherwise each re-run the Arrow signature
-    # UDF over the whole corpus
-    bands = simhash_index(docs, id_col, text_col, hash_family).localCheckpoint(
-        eager=False
-    )
-    a = bands.select("bi", "bv", F.col("id").alias("a"), F.col("sh").alias("sha"))
-    b = bands.select("bi", "bv", F.col("id").alias("b"), F.col("sh").alias("shb"))
-    return (
-        a.join(b, ["bi", "bv"])
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("bi") == _sh_first_match(F.col("sha"), F.col("shb")))
-        .withColumn("hamming", F.bit_count(F.col("sha").bitwiseXOR(F.col("shb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
+    return banded_neardup_pairs(
+        simhash_index(docs, id_col, text_col, hash_family), "sh",
+        max_hamming)
 
 
 def incremental_simhash_candidates(
@@ -627,53 +591,18 @@ def incremental_simhash_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental SimHash near-dup: NEW docs vs the EXISTING corpus
     index (``simhash_index`` rows), plus new-vs-new — without touching
-    corpus text. The MinHash twin of ``incremental_minhash_candidates``
-    with the extra Hamming verification the stored ``sh`` enables.
+    corpus text. A thin wrapper over ``hamming.incremental_banded_pairs``
+    (oracled by the ``simhash_incremental`` gate).
 
     Returns ``(pairs, delta_index)``: verified pairs ``(a, b, hamming)``
     (a < b) where at least one endpoint is new, and the delta index
-    rows the caller appends to the stored index.
-
-    Equivalence (oracled by the ``simhash_incremental`` gate): bands
-    are per-doc independent, so ``candidates(old ∪ new) =
-    candidates(old) ∪ incremental(new, index(old))`` exactly. Probe
-    cost is O(|delta| x 4) rows against a bucketed index; band values
-    are near-uniform hash bits, so no head-key skew by construction."""
-    delta_index = simhash_index(
-        new_docs, id_col, text_col, hash_family
-    ).localCheckpoint(eager=False)
-    corpus = index.select(
-        "bi", "bv", F.col("id").alias("x"), F.col("sh").alias("shx")
-    )
-    fresh = delta_index.select(
-        "bi", "bv", F.col("id").alias("y"), F.col("sh").alias("shy")
-    )
-    new_vs_old = (
-        corpus.join(fresh, ["bi", "bv"])
-        .filter(F.col("x") != F.col("y"))
-        .filter(F.col("bi") == _sh_first_match(F.col("shx"), F.col("shy")))
-        .withColumn("hamming", F.bit_count(F.col("shx").bitwiseXOR(F.col("shy"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.least("x", "y").alias("a"),
-            F.greatest("x", "y").alias("b"),
-            "hamming",
-        )
-    )
-    n1 = delta_index.select("bi", "bv", F.col("id").alias("a"),
-                            F.col("sh").alias("sha"))
-    n2 = delta_index.select("bi", "bv", F.col("id").alias("b"),
-                            F.col("sh").alias("shb"))
-    new_vs_new = (
-        n1.join(n2, ["bi", "bv"])
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("bi") == _sh_first_match(F.col("sha"), F.col("shb")))
-        .withColumn("hamming", F.bit_count(F.col("sha").bitwiseXOR(F.col("shb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
-    # distinct: a re-fed doc can surface the same pair from both legs
-    return new_vs_old.unionByName(new_vs_new).distinct(), delta_index
+    rows the caller appends to the stored index. The returned
+    ``delta_index`` is a lazy ``localCheckpoint``: executor-local, lost
+    on executor loss, and holding storage while the caller keeps a
+    reference."""
+    return incremental_banded_pairs(
+        simhash_index(new_docs, id_col, text_col, hash_family), index,
+        "sh", max_hamming)
 
 
 # ---------------------------------------------------------------------------

@@ -17,10 +17,9 @@ MinHash/SimHash (Krawetz's dHash; same family as pHash/aHash).
 - ``image_hashes``: mapInPandas over payload bytes through the repo's
   own pure-Python codecs (PNG/GIF/BMP/JPEG — undecodable payloads yield
   NULL, never a batch failure).
-- ``image_neardup``: the SimHash blocking shape re-used on the image
-  plane (``dedup.py``): 4 16-bit bands (pigeonhole for Hamming<=3),
-  bucket self-join, per-pair first-matching-band filter (no distinct),
-  exact Hamming verify via ``bit_count(xor)``.
+- ``image_neardup``: the shared banded-Hamming kernel (``hamming.py``)
+  over dHash: 4 16-bit bands (pigeonhole for Hamming<=3), bucket
+  self-join, first-matching-band filter, exact Hamming verify.
 
 Scale shape: one narrow Arrow pass decodes + hashes (payload bytes
 never leave the stage); the only shuffle is the band-bucket join on
@@ -31,12 +30,16 @@ plane — this extends the multimodal dedup family SURVEY §2 adds.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .hamming import (
+    banded_index,
+    banded_neardup_pairs,
+    incremental_banded_pairs,
+)
 
 __all__ = ["dhash64", "dhash_from_payload", "decode_rgb_payload",
            "image_hashes", "image_neardup", "image_index",
-           "incremental_image_candidates", "banded_index",
-           "banded_neardup_pairs"]
+           "incremental_image_candidates"]
 
 _GRID_W, _GRID_H = 9, 8  # dHash grid: 8 comparisons per row x 8 rows
 
@@ -160,75 +163,6 @@ def image_hashes(
     return media.select(id_col, payload_col).mapInPandas(run, schema)
 
 
-def _band(col, bi: int):
-    """16-bit band ``bi`` (0..3) of a signed-long hash, JVM-side."""
-    return F.shiftrightunsigned(col, 16 * (3 - bi)).bitwiseAND(
-        F.lit(0xFFFF))
-
-
-def _first_match(ca, cb):
-    """Index of the first band where two hashes agree (pair dedup:
-    a bucket-join pair is kept only at its first matching band, so no
-    ``distinct`` shuffle is needed)."""
-    return (
-        F.when(_band(ca, 0) == _band(cb, 0), 0)
-        .when(_band(ca, 1) == _band(cb, 1), 1)
-        .when(_band(ca, 2) == _band(cb, 2), 2)
-        .otherwise(3)
-    )
-
-
-def banded_index(hashes: DataFrame, hash_col: str = "dh") -> DataFrame:
-    """Explode a 64-bit-hash relation ``(id, <hash_col>)`` into the
-    4x16-bit pigeonhole band relation ``(id, <hash_col>, bi, bv)`` —
-    the shared storage/blocking shape of every Hamming<=3 modality
-    (SimHash text, dHash images, Haar-band audio). NULL hashes drop."""
-    h = hashes.filter(F.col(hash_col).isNotNull())
-    return h.select(
-        "id",
-        hash_col,
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(bi).alias("bi"),
-                         _band(F.col(hash_col), bi).alias("bv"))
-                for bi in range(4)
-            ])
-        ).alias("band"),
-    ).select("id", hash_col, F.col("band.bi").alias("bi"),
-             F.col("band.bv").alias("bv"))
-
-
-def banded_neardup_pairs(
-    banded: DataFrame,
-    hash_col: str = "dh",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs from a ``banded_index`` relation: bucket
-    self-join on (bi, bv), first-matching-band dedup (no distinct),
-    exact Hamming verify via bit_count(xor). Complete for Hamming <=
-    3 by the pigeonhole principle; best-effort above."""
-    # the index feeds BOTH self-join legs, and its upstream is usually
-    # the Arrow decode+hash pass — an opaque subplan the optimizer
-    # cannot share across aliased legs (the dedup.simhash lesson), so
-    # without a boundary every payload decodes twice. One lazy
-    # materialization serves both legs; a deployment reads the STORED
-    # index here anyway.
-    banded = banded.localCheckpoint(eager=False)
-    a = banded.select("bi", "bv", F.col("id").alias("a"),
-                      F.col(hash_col).alias("ha"))
-    b = banded.select("bi", "bv", F.col("id").alias("b"),
-                      F.col(hash_col).alias("hb"))
-    return (
-        a.join(b, ["bi", "bv"])
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("bi") == _first_match(F.col("ha"), F.col("hb")))
-        .withColumn("hamming",
-                    F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", F.col("hamming").cast("int").alias("hamming"))
-    )
-
-
 def image_index(
     media: DataFrame,
     id_col: str = "media_id",
@@ -255,60 +189,19 @@ def incremental_image_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental image near-dup: NEW images vs the EXISTING corpus
     index (``image_index`` rows), plus new-vs-new — corpus pixels are
-    never re-decoded. The image twin of
-    ``dedup.incremental_simhash_candidates``.
+    never re-decoded. A thin wrapper over
+    ``hamming.incremental_banded_pairs`` (oracled by the
+    ``imagehash_incremental`` gate).
 
     Returns ``(pairs, delta_index)``: verified pairs ``(a, b,
     hamming)`` (a < b) where at least one endpoint is new, and the
-    delta index rows the caller appends to the stored index.
-
-    Equivalence (oracled by the ``imagehash_incremental`` gate): bands
-    are per-image independent, so ``neardup(old ∪ new) = neardup(old)
-    ∪ incremental(new, index(old))`` exactly. Probe cost is
-    O(|delta| x 4) rows against a bucketed index; dHash band values
-    have no crawl-side hot key amplification beyond true duplicate
-    clusters (the hot-bucket diagnostic ``dedup.bucket_histogram``
-    applies unchanged)."""
-    # the delta index feeds the probe leg, both new-vs-new legs, AND
-    # the caller's append — without a boundary the delta's Arrow
-    # decode+hash pass re-runs per consumer (opaque subplan, no reuse)
-    delta_index = image_index(new_media, id_col, payload_col).localCheckpoint(
-        eager=False
-    )
-    corpus = index.select(
-        "bi", "bv", F.col("id").alias("x"), F.col("dh").alias("dhx")
-    )
-    fresh = delta_index.select(
-        "bi", "bv", F.col("id").alias("y"), F.col("dh").alias("dhy")
-    )
-    new_vs_old = (
-        corpus.join(fresh, ["bi", "bv"])
-        .filter(F.col("x") != F.col("y"))
-        .filter(F.col("bi") == _first_match(F.col("dhx"), F.col("dhy")))
-        .withColumn("hamming",
-                    F.bit_count(F.col("dhx").bitwiseXOR(F.col("dhy"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.least("x", "y").alias("a"),
-            F.greatest("x", "y").alias("b"),
-            F.col("hamming").cast("int").alias("hamming"),
-        )
-    )
-    n1 = delta_index.select("bi", "bv", F.col("id").alias("a"),
-                            F.col("dh").alias("dha"))
-    n2 = delta_index.select("bi", "bv", F.col("id").alias("b"),
-                            F.col("dh").alias("dhb"))
-    new_vs_new = (
-        n1.join(n2, ["bi", "bv"])
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("bi") == _first_match(F.col("dha"), F.col("dhb")))
-        .withColumn("hamming",
-                    F.bit_count(F.col("dha").bitwiseXOR(F.col("dhb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", F.col("hamming").cast("int").alias("hamming"))
-    )
-    # distinct: a re-fed image can surface the same pair from both legs
-    return new_vs_old.unionByName(new_vs_new).distinct(), delta_index
+    delta index rows the caller appends to the stored index. The
+    returned ``delta_index`` is a lazy ``localCheckpoint``: executor-
+    local, lost on executor loss, and holding storage while the caller
+    keeps a reference."""
+    return incremental_banded_pairs(
+        image_index(new_media, id_col, payload_col), index, "dh",
+        max_hamming)
 
 
 def image_neardup(

@@ -107,34 +107,6 @@ def build_inverted_index(
     return idx
 
 
-def merge_index(state: DataFrame, delta_index: DataFrame) -> DataFrame:
-    """Fold a crawl delta's index into the stored one — the incremental
-    path: only NEW documents are tokenized (``build_inverted_index`` over
-    the delta, min_df=1), then (term, shard) rows merge by summation and
-    posting-list concatenation. Document ids are append-only across
-    crawls (the curation intake dedups re-crawls upstream), so merged
-    postings re-sorted by doc_id are EXACTLY the full rebuild's.
-
-    A global ``min_df`` floor must be applied AFTER merging (it is a
-    corpus-wide statistic) — merge raw min_df=1 indexes and floor last.
-
-    Scale: one shuffle on (term, shard); per-row posting arrays stay
-    bounded by the shard size — the same bound the build guarantees.
-    The Iceberg binding is a MERGE INTO on (term, shard) with
-    ``df = df + s.df, cf = cf + s.cf, postings = array_sort(postings ||
-    s.postings)`` (the entity_shingle_df summation pattern).
-    """
-    return (
-        state.unionByName(delta_index)
-        .groupBy("term", "shard")
-        .agg(
-            F.sum("df_shard").alias("df_shard"),
-            F.sum("cf_shard").alias("cf_shard"),
-            F.array_sort(F.flatten(F.collect_list("postings"))).alias("postings"),
-        )
-    )
-
-
 def doc_norms(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -211,25 +211,25 @@ def ordered_sequences(
 ) -> DataFrame:
     """Syslog sequence retrieval (reference db_session.py:155-214, F1):
     filter by unit (and optionally trace), storage order (timestamp, doc_id)
-    then the reference's second sort by the payload Timestamp string —
-    replicated via sort_array over (payload_ts, struct) pairs."""
+    then the reference's STABLE second sort by the payload Timestamp
+    string — so payload-timestamp ties keep storage order. Replicated by
+    one array_sort over (payload_ts, timestamp, doc_id, payload) structs
+    (collect_list order is not defined after the shuffle, so a pre-sort
+    would carry nothing)."""
     d = docs.filter(F.col("unit_id") == unit_id)
     if trace_id is not None:
         d = d.filter(F.col("trace_id") == trace_id)
-    return (
-        d.orderBy("timestamp", "doc_id")
-        .groupBy("trace_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("raw_data.Timestamp").alias("payload_ts"),
-                        F.col("doc_id"),
-                        F.col("raw_data").alias("payload"),
-                    )
+    return d.groupBy("trace_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("raw_data.Timestamp").alias("payload_ts"),
+                    F.col("timestamp"),
+                    F.col("doc_id"),
+                    F.col("raw_data").alias("payload"),
                 )
-            ).alias("sequence")
-        )
+            )
+        ).alias("sequence")
     )
 
 

@@ -582,12 +582,3 @@ SENTENCE_BANK: tuple[GoldenSentence, ...] = (
         ),
     ),
 )
-
-
-def golden_triples() -> list[tuple[str, str, str, str]]:
-    """Flattened (group, actor, verb, object) golden rows for P/R scoring."""
-    out = []
-    for s in SENTENCE_BANK:
-        for (a, v, o) in s.expected:
-            out.append((s.group, a, v, o))
-    return out

@@ -79,15 +79,14 @@ def _hash_index(media: DataFrame) -> DataFrame:
 
 
 def _pairs(index: DataFrame, max_hamming: int) -> DataFrame:
-    from sigraph_spark.operators.imagehash import banded_neardup_pairs
+    from sigraph_spark.operators.hamming import banded_neardup_pairs
 
     out = None
     for plane in ("image", "audio"):
         banded = index.filter(F.col("plane") == plane).select(
-            F.col("media_id").alias("id"), F.col("h").alias("dh"),
-            "bi", "bv",
+            F.col("media_id").alias("id"), "h", "bi", "bv",
         )
-        p = banded_neardup_pairs(banded, "dh", max_hamming) \
+        p = banded_neardup_pairs(banded, "h", max_hamming) \
             .withColumn("plane", F.lit(plane))
         out = p if out is None else out.unionByName(p)
     return out

@@ -71,44 +71,3 @@ def build_session(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def conf_for_scale(
-    executors: int,
-    cores_per_executor: int = 4,
-    executor_mem_gb: int = 16,
-    input_tb: float = 100.0,
-) -> dict[str, str]:
-    """Sizing arithmetic for a real cluster run (SURVEY.md §4 physical
-    notes); pass the result as ``extra_conf`` to :func:`build_session` or
-    as ``--conf`` pairs to spark-submit.
-
-    * shuffle partitions: ~2.5x total cores, floored so the average
-      post-shuffle partition of the largest shuffle (the triple table,
-      ~1/3 of input bytes) stays under ~256 MB — whichever is larger;
-    * maxPartitionBytes 256 MB: the html-bearing scan is byte-heavy but
-      rows are small, so fewer/bigger splits amortize task overhead;
-    * AQE on with skew-join splitting (head entities) and partition
-      coalescing (the many tiny post-filter partitions);
-    * Arrow batch 4096 rows: ~6 MB of html per batch to the two pandas
-      UDFs — large enough to amortize IPC, small enough to keep worker
-      memory flat.
-    """
-    total_cores = executors * cores_per_executor
-    shuffle_bytes = input_tb * (1 << 40) / 3
-    parts_by_cores = int(total_cores * 2.5)
-    parts_by_bytes = int(shuffle_bytes // (256 << 20)) or 1
-    shuffle_parts = max(parts_by_cores, parts_by_bytes)
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(cores_per_executor),
-        "spark.executor.memory": f"{executor_mem_gb}g",
-        "spark.sql.shuffle.partitions": str(shuffle_parts),
-        "spark.sql.files.maxPartitionBytes": str(256 << 20),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(128 << 20),
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
-        "spark.sql.session.timeZone": "UTC",
-    }

@@ -1,38 +1,12 @@
-"""Source/sink helpers: testdata tables + warehouse DDL.
-
-The driver's TPC-H-ish parquet tables live at
-``/root/testdata/sf{0.001,0.01,0.1}/<name>.parquet`` (TESTDATA.md). In
-production the same loaders bind to Iceberg catalogs (``spark.table``);
-locally they are parquet reads — the query layer is agnostic.
-
-Column pruning / predicate pushdown discipline: every loader returns the
-raw scan; callers select only what they need so ``ReadSchema`` in the
-physical plan stays minimal (verified in tests/test_plans.py).
+"""Sink helpers: bucketed tables and size-targeted parquet writes — the
+local bindings of Iceberg's ``bucket(N, col)`` partitioning and its
+target-file-size property.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql plans)."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
 
 
 def write_bucketed_table(
@@ -69,21 +43,6 @@ def write_bucketed_table(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table_name)
-
-
-def write_atomic_parquet(df: DataFrame, out_dir: str, partition_by: list[str] | None = None) -> None:
-    """Overwrite-atomically: write tmp, rename into place (the local-mode
-    stand-in for an Iceberg commit)."""
-    import shutil
-
-    tmp = out_dir + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.replace(tmp, out_dir)
 
 
 def write_sized_parquet(

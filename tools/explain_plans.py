@@ -388,11 +388,22 @@ def main() -> int:
         E.q_table_triples(spark, sf_dir),
         forbid=("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"),
     )
+    # hearst extraction: the (hypo, hyper) pair count combines map-side
+    # and stays pure Column (no Python eval, no Cartesian join)
+    from sigraph_spark.operators.hearst import hearst_pairs
+
+    check(
+        "hearst_pairs",
+        hearst_pairs(E._hearst_corpus(spark))
+        .groupBy("hypo", "hyper").count(),
+        want=("partial_count",),
+        forbid=("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"),
+    )
     # hearst taxonomy: the pair aggregate materializes ONCE (r6 — it
     # feeds both legs of the reciprocal join, so the visible plan is a
     # broadcast self-join over the checkpointed vocabulary-sized table;
-    # the algebraic map-side combine now lives inside that boundary and
-    # is asserted on the un-checkpointed extraction via hearst_pairs)
+    # the algebraic map-side combine lives inside that boundary, which
+    # is why it is asserted by the hearst_pairs check above)
     check(
         "taxonomy_induction",
         E.q_taxonomy_induction(spark, sf_dir),
