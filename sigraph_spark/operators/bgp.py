@@ -35,6 +35,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark.functions.fixpoint import semi_naive
+
 Pattern = tuple[str, str, str]
 
 _POSITIONS = ("src", "predicate", "dst")
@@ -300,36 +302,21 @@ def _path_closure(
     pairs: DataFrame, max_depth: int, graph: bool = False
 ) -> DataFrame:
     keys = (["g"] if graph else []) + ["a", "b"]
-    reach = pairs.distinct().localCheckpoint(eager=True)
-    base = reach
-    frontier = reach
-    for _ in range(max_depth - 1):
-        cond = F.col("f.b") == F.col("p.a")
-        if graph:
-            # closure composes only WITHIN a named graph
-            cond = cond & (F.col("f.g") == F.col("p.g"))
-        sel = ([F.col("f.g").alias("g")] if graph else []) + [
-            F.col("f.a").alias("a"), F.col("p.b").alias("b"),
-        ]
-        nxt = (
-            frontier.alias("f")
-            .join(base.alias("p"), cond)
-            .select(*sel)
-            .distinct()
-            .join(reach, keys, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        # plain union of already-materialized frontiers: every child is
-        # a LogicalRDD, so nothing recomputes, the plan stays <= depth
-        # unions wide, and we avoid checkpointing a raw union (Spark's
-        # LogicalRDD constraint rewrite loses second-child attrs when a
-        # filter constraint — e.g. GRAPH's g IS NOT NULL — survives to
-        # the union output: "key not found" in rewriteStatsAndConstraints)
-        reach = reach.unionByName(nxt)
-        frontier = nxt
-    return reach
+    # lazy: semi_naive's eager seed checkpoint materializes it too, and
+    # every round's join then reads it instead of re-deriving pairs
+    base = pairs.distinct().localCheckpoint(eager=False)
+    cond = F.col("f.b") == F.col("p.a")
+    if graph:
+        # closure composes only WITHIN a named graph
+        cond = cond & (F.col("f.g") == F.col("p.g"))
+    sel = ([F.col("f.g").alias("g")] if graph else []) + [
+        F.col("f.a").alias("a"), F.col("p.b").alias("b"),
+    ]
+
+    def step(frontier: DataFrame, _reach: DataFrame) -> DataFrame:
+        return frontier.alias("f").join(base.alias("p"), cond).select(*sel).distinct()
+
+    return semi_naive(base, step, keys, max_depth - 1)[0]
 
 
 def eval_path(

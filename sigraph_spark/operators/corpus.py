@@ -745,12 +745,12 @@ def unigram_logprob(
     Returns ``(doc_id, n_tokens, mean_logprob)`` (natural log, 6dp).
     """
     words = F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+")
-    # toks feeds the frequency aggregation AND the scoring join's left
-    # leg; freq feeds the total AND the join — without boundaries each
-    # consumer re-tokenizes the corpus / re-counts the vocabulary
+    # freq (vocabulary-sized) feeds the total AND the join: one boundary.
+    # toks (one row per corpus token) stays un-materialized on purpose: a
+    # narrow re-split is cheaper than pinning it in block-manager memory
     toks = docs.select(
         F.col(id_col), F.explode(words).alias("token")
-    ).filter(F.col("token") != "").localCheckpoint(eager=False)
+    ).filter(F.col("token") != "")
     freq = toks.groupBy("token").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark.functions.fixpoint import semi_naive
+
 
 def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct undirected edges oriented low(degree, id) -> high."""
@@ -107,49 +109,34 @@ def shortest_paths(
     ``(node_id, distance)`` for every node reachable from ``seeds``
     (a one-column DataFrame of seed node ids, distance 0).
 
-    The standard iterative-frontier formulation: each round joins only the
-    FRONTIER (nodes first reached last round) against the edge table, so
-    per-round work is O(edges out of the frontier), not O(all edges); the
-    settled-distance table only ever grows by anti-join novelty. Rounds =
-    graph eccentricity, each one equi-join + one min-agg + one anti-join —
-    all on node-id keys (uniform after hash partitioning). For 100 TB
-    graphs the edge table should be pre-bucketed on ``src`` so every
-    round's join is storage-partitioned (no re-shuffle of the big side).
+    Frontier rounds of ``functions/fixpoint.py``'s :func:`semi_naive`
+    (set mode): rounds = graph eccentricity, each one equi-join + one
+    min-agg + one anti-join on node-id keys. For 100 TB graphs pre-bucket
+    the edge table on ``src`` so every round's join is storage-partitioned.
 
     Deterministic: distances are unique minima, independent of partition
-    order. Convergence: stops when a round yields no new nodes (one count
-    per round, on the frontier — the small side). If ``max_iter`` rounds
-    are exhausted first, the result is a PARTIAL distance table (nodes at
-    depth > max_iter are missing, not unreachable); pass a ``metrics``
-    dict and check ``metrics["converged"]`` to distinguish the cases on
+    order. If ``max_iter`` rounds are exhausted first, the result is a
+    PARTIAL distance table (nodes at depth > max_iter are missing, not
+    unreachable); pass a ``metrics`` dict and check
+    ``metrics["converged"]`` to distinguish the cases on
     high-eccentricity graphs.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-    dist = (
+    seed = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
         .withColumn("distance", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    frontier = dist
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        rounds += 1
-        reached = (
+
+    def step(frontier: DataFrame, _dist: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier.node == e.u)
             .select(F.col("v").alias("node"), (F.col("distance") + 1).alias("distance"))
             .groupBy("node")
             .agg(F.min("distance").alias("distance"))
         )
-        new = reached.join(dist.select("node"), "node", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new.limit(1).count() == 0:
-            converged = True
-            break
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
+
+    dist, rounds, converged = semi_naive(seed, step, ["node"], max_iter)
     if metrics is not None:
         metrics["rounds"] = rounds
         # distinguish an emptied frontier (true BFS completion) from
@@ -179,12 +166,10 @@ def weighted_shortest_paths(
     achieves. If relaxation quiesces earlier (no cost improved), that is
     the true unbounded shortest path and the loop stops.
 
-    Same frontier discipline as :func:`shortest_paths` — each round
-    relaxes only out-edges of nodes whose cost IMPROVED last round, so
-    per-round work is O(frontier out-edges); parallel edges collapse to
-    their min weight once, up front. Costs are exact BIGINT sums (no
-    float drift between engines). For 100 TB graphs pre-bucket the edge
-    table on ``src`` so every round's join is storage-partitioned.
+    Rounds are ``functions/fixpoint.py``'s :func:`semi_naive` in min
+    mode; parallel edges collapse to their min weight once, up front.
+    Costs are exact BIGINT sums (no float drift between engines). For
+    100 TB graphs pre-bucket the edge table on ``src``.
 
     Deterministic: min-aggregates only. Pass ``metrics`` to read
     ``rounds`` and ``converged`` (True = quiesced before the bound, the
@@ -199,39 +184,21 @@ def weighted_shortest_paths(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    dist = (
+    seed = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
         .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    frontier = dist
-    rounds = 0
-    converged = False
-    for _ in range(max_hops):
-        rounds += 1
-        relaxed = (
+
+    def step(frontier: DataFrame, _dist: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier.node == e.u)
             .select(F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
         )
-        improved = (
-            relaxed.alias("r")
-            .join(dist.alias("d"), "node", "left")
-            .filter(F.col("d.cost").isNull() | (F.col("r.cost") < F.col("d.cost")))
-            .select("node", F.col("r.cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.limit(1).count() == 0:
-            converged = True
-            break
-        dist = (
-            dist.join(improved.select("node"), "node", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
+
+    dist, rounds, converged = semi_naive(seed, step, ["node"], max_hops, minimize="cost")
     if metrics is not None:
         metrics["rounds"] = rounds
         metrics["converged"] = converged
@@ -285,7 +252,7 @@ def temporal_reachability(
     propagating per-node minima loses nothing (Wu et al., "Path Problems
     in Temporal Graphs", VLDB'14).
 
-    Same frontier discipline and hop-bound contract as
+    Same rounds (:func:`semi_naive` min mode) and hop-bound contract as
     :func:`weighted_shortest_paths`: after round r the table holds
     exactly the min arrival over time-respecting paths of <= r edges, so
     truncation is a defined semantics, not an approximation; quiescing
@@ -299,47 +266,31 @@ def temporal_reachability(
         F.col(dst).alias("v"),
         F.col(time).cast("long").alias("t"),
     ).distinct()
-    seed_df = (
+    # seeds carry _seed=True: they sit at the origin, which no edge time
+    # improves on, and report a NULL arrival
+    seed = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .select("node", F.lit(_origin).cast("long").alias("arr"),
+                F.lit(True).alias("_seed"))
     )
-    arr = seed_df.withColumn("arr", F.lit(_origin).cast("long"))
-    frontier = arr
-    rounds = 0
-    converged = False
-    for _ in range(max_hops):
-        rounds += 1
-        relaxed = (
+
+    def step(frontier: DataFrame, _arr: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, (frontier.node == e.u) & (e.t >= frontier.arr))
             .select(F.col("v").alias("node"), F.col("t").alias("arr"))
             .groupBy("node")
             .agg(F.min("arr").alias("arr"))
+            .withColumn("_seed", F.lit(False))
         )
-        improved = (
-            relaxed.alias("r")
-            .join(arr.alias("d"), "node", "left")
-            .filter(F.col("d.arr").isNull() | (F.col("r.arr") < F.col("d.arr")))
-            .select("node", F.col("r.arr").alias("arr"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.limit(1).count() == 0:
-            converged = True
-            break
-        arr = (
-            arr.join(improved.select("node"), "node", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
+
+    arr, rounds, converged = semi_naive(seed, step, ["node"], max_hops, minimize="arr")
     if metrics is not None:
         metrics["rounds"] = rounds
         metrics["converged"] = converged
-    return arr.join(
-        seed_df.withColumn("_seed", F.lit(True)), "node", "left"
-    ).select(
+    return arr.select(
         F.col("node").alias("node_id"),
-        F.when(F.col("_seed").isNull(), F.col("arr")).alias("earliest_arrival"),
+        F.when(~F.col("_seed"), F.col("arr")).alias("earliest_arrival"),
     )
 
 
@@ -995,23 +946,15 @@ def strongly_connected_components(
             if moved == 0:
                 break
         # --- backward sweep from roots within color classes -----------
-        member = color.filter(F.col("node") == F.col("color")).localCheckpoint(
-            eager=True
-        )
-        frontier = member
-        while True:
+        def sweep(frontier: DataFrame, _member: DataFrame) -> DataFrame:
             cand = (
                 frontier.join(e_rem, frontier.node == e_rem.v)
                 .select(F.col("u").alias("node"), "color")
             )
-            same = cand.join(color, ["node", "color"], "left_semi")
-            new = same.distinct().join(member, "node", "left_anti").localCheckpoint(
-                eager=True
-            )
-            if new.limit(1).count() == 0:
-                break
-            member = member.unionByName(new).localCheckpoint(eager=True)
-            frontier = new
+            return cand.join(color, ["node", "color"], "left_semi").distinct()
+
+        roots = color.filter(F.col("node") == F.col("color"))
+        member = semi_naive(roots, sweep, ["node"], None)[0]
         assigned = _acc(assigned, member.select("node", F.col("color").alias("scc_id")))
         remaining = remaining.join(member, "node", "left_anti").localCheckpoint(
             eager=True

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sigraph_spark.functions.fixpoint import pointer_double
+
 HREF_RE = r"""href=["']([^"']+)["']"""
 
 
@@ -381,60 +383,19 @@ def resolve_redirects(
       successors — deterministic, and for every url ON a cycle this is
       the cycle's min member, so cycle members agree on one canonical.
 
-    Implementation is Wyllie pointer doubling: ``log2(max_steps)``
-    rounds, each ONE self-equi-join of the O(|aliases|) pointer table
-    composing (reach, running-min, terminal-found) pairs — never a
-    row-at-a-time walk, never O(chain) rounds. ``metrics['unterminated']``
-    counts walks that hit the cap (cycle members land here by design).
+    ``max_steps`` must be a power of two >= 1 (``ValueError``). Runs
+    ``functions/fixpoint.py``'s :func:`pointer_double` with ``least``:
+    at most log2(max_steps) self-joins of the O(|aliases|) pointer table.
+    ``metrics['unterminated']`` counts walks that hit the cap (cycle
+    members land here by design).
     """
-    import math
-
-    rounds = max(0, math.ceil(math.log2(max_steps)))
-    # nxt feeds BOTH legs of the terminal-detection join (itself and
-    # dom); without a boundary each leg re-runs the min-dst aggregation
-    # from the alias table. One lazy materialization serves both.
-    nxt = (
-        aliases.groupBy(F.col(src_col).alias("x"))
-        .agg(F.min(dst_col).alias("y"))
-        .localCheckpoint(eager=False)
+    ptr = pointer_double(
+        aliases.groupBy(F.col(src_col).alias("x")).agg(F.min(dst_col).alias("y")),
+        F.col("y"), F.least, max_steps,
     )
-    dom = nxt.select(F.col("x").alias("_d"))
-    ptr = (
-        nxt.join(dom, nxt["y"] == dom["_d"], "left")
-        .select(
-            "x", "y", F.col("y").alias("m"), F.col("_d").isNull().alias("done")
-        )
-    )
-    # pointer doubling with EARLY TERMINATION (the page_chains device):
-    # each round is checkpointed and probed for still-active pointers,
-    # so the loop stops after ceil(log2(longest chain)) rounds instead
-    # of the fixed log2(max_steps) unroll — a round where every walk is
-    # done passes rows through unchanged (provable no-op). Cycle
-    # members never finish and keep the loop running to the cap, which
-    # the min-over-successors semantics requires.
-    ptr = ptr.localCheckpoint(eager=True)
-    for _ in range(rounds):
-        if ptr.filter(~F.col("done")).isEmpty():
-            break
-        a = ptr.alias("a")
-        b = ptr.select(
-            F.col("x").alias("_bx"), F.col("y").alias("_by"),
-            F.col("m").alias("_bm"), F.col("done").alias("_bdone"),
-        )
-        ptr = (
-            a.join(b, F.col("a.y") == F.col("_bx"), "left")
-            .select(
-                F.col("a.x").alias("x"),
-                F.when(F.col("a.done"), F.col("a.y")).otherwise(F.col("_by")).alias("y"),
-                F.when(F.col("a.done"), F.col("a.m"))
-                .otherwise(F.least(F.col("a.m"), F.col("_bm"))).alias("m"),
-                (F.col("a.done") | F.col("_bdone")).alias("done"),
-            )
-            .localCheckpoint(eager=True)
-        )
     if metrics is not None:
         metrics["unterminated"] = ptr.filter(~F.col("done")).count()
     return ptr.select(
         F.col("x").alias("url"),
-        F.when(F.col("done"), F.col("y")).otherwise(F.col("m")).alias("resolved"),
+        F.when(F.col("done"), F.col("y")).otherwise(F.col("acc")).alias("resolved"),
     )

@@ -10,13 +10,12 @@ aggregates. This family stitches them:
   declaration per page wins (DOCUMENT order — the successor a browser
   would follow);
 * :func:`page_chains` — every chain member labeled with its chain HEAD
-  (the member with no incoming next-edge) and 0-based position, via
-  Wyllie pointer doubling over the REVERSED edges with DISTANCE
-  accumulation (citing the device of ``links.resolve_redirects``:
-  log2(max_steps) self-joins, each composing (reach, dist, done); never
-  an O(chain-length) loop). Cyclic or over-long chains (> ``max_steps``
-  backward steps) DROP loudly via ``metrics['unterminated']`` —
-  a malformed pagination loop must not fabricate a head;
+  (the member with no incoming next-edge) and 0-based position:
+  ``functions/fixpoint.py``'s :func:`pointer_double` over the REVERSED
+  edges, ``+`` accumulating the distance. Cyclic or over-long chains
+  (> ``max_steps`` backward steps) DROP loudly via
+  ``metrics['unterminated']`` — a malformed pagination loop must not
+  fabricate a head;
 * :func:`stitch_chains` — chain texts concatenated in position order:
   one groupBy(head) with ``array_agg`` of (pos, text) structs sorted
   in-group. The group key is the chain head, so group size is bounded
@@ -29,10 +28,10 @@ not O(pages)); stitching is ONE shuffle keyed by head.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sigraph_spark.functions.fixpoint import pointer_double
 
 NEXT_RE = (
     r"(?is)<(?:link|a)\b[^>]*\brel=[\"']?next[\"']?[^>]*"
@@ -67,49 +66,18 @@ def page_chains(
     metrics: dict | None = None,
 ) -> DataFrame:
     """Next-edges -> ``(url, head, pos)`` for every chain member
-    (heads included at pos 0)."""
+    (heads included at pos 0). ``max_steps``, a power of two >= 1
+    (``ValueError``), caps how far behind its head a member may be."""
     # backward pointers: member -> predecessor (min on fan-in conflicts)
-    # prev feeds BOTH legs of the head-detection join (itself and dom);
-    # without a boundary each leg re-runs the min-src aggregation — and
-    # the upstream link extraction — from scratch. One lazy
-    # materialization serves both.
-    prev = (
-        next_links.groupBy(F.col(dst_col).alias("x"))
-        .agg(F.min(src_col).alias("y"))
-        .localCheckpoint(eager=False)
+    ptr = pointer_double(
+        next_links.groupBy(F.col(dst_col).alias("x")).agg(F.min(src_col).alias("y")),
+        F.lit(1), lambda a, b: a + b, max_steps,
     )
-    dom = prev.select(F.col("x").alias("_d"))
-    ptr = prev.join(dom, prev["y"] == dom["_d"], "left").select(
-        "x", "y", F.lit(1).alias("d"), F.col("_d").isNull().alias("done")
-    )
-    # pointer doubling with EARLY TERMINATION: each round is
-    # checkpointed and probed for still-active pointers, so the loop
-    # runs ceil(log2(actual longest chain)) rounds, not
-    # log2(max_steps). Real pagination chains are a handful of pages —
-    # the fixed 6-round unroll paid 2 shuffles per round for rounds
-    # that were provably no-ops (done rows pass through unchanged).
-    # The probe is an isEmpty (limit-1 scan of the checkpointed round).
-    ptr = ptr.localCheckpoint(eager=True)
-    for _ in range(max(0, math.ceil(math.log2(max_steps)))):
-        if ptr.filter(~F.col("done")).isEmpty():
-            break
-        a = ptr.alias("a")
-        b = ptr.select(
-            F.col("x").alias("_bx"), F.col("y").alias("_by"),
-            F.col("d").alias("_bd"), F.col("done").alias("_bdone"),
-        )
-        ptr = a.join(b, F.col("a.y") == F.col("_bx"), "left").select(
-            F.col("a.x").alias("x"),
-            F.when(F.col("a.done"), F.col("a.y")).otherwise(F.col("_by")).alias("y"),
-            F.when(F.col("a.done"), F.col("a.d"))
-            .otherwise(F.col("a.d") + F.col("_bd")).alias("d"),
-            (F.col("a.done") | F.col("_bdone")).alias("done"),
-        ).localCheckpoint(eager=True)
     if metrics is not None:
         metrics["unterminated"] = ptr.filter(~F.col("done")).count()
     members = ptr.filter(F.col("done")).select(
         F.col("x").alias("url"), F.col("y").alias("head"),
-        F.col("d").alias("pos"),
+        F.col("acc").alias("pos"),
     )
     heads = members.select(F.col("head").alias("url")).distinct().select(
         "url", F.col("url").alias("head"), F.lit(0).alias("pos")

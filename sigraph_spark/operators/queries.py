@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark.functions.fixpoint import semi_naive
+
 
 def neighborhood(
     edges: DataFrame,
@@ -50,8 +52,9 @@ def related_traces(
     """Trace-to-trace connectivity (reference schema.py:89-110, D4):
     (t1)-[*1..max_hop]-(t2) within one unit, deduped t1 < t2, ordered by
     path length. Implemented as an iterative frontier BFS over the
-    undirected edge set rooted at each trace's contained nodes; each round
-    is one join + dedup, so round r materializes only the hop-r frontier."""
+    undirected edge set rooted at each trace's contained nodes
+    (``functions/fixpoint.py``'s :func:`semi_naive`); each round is one
+    join + dedup, so round r materializes only the hop-r frontier."""
     # und joins every frontier round; without a boundary each round
     # re-runs the union + distinct from the edge table
     und = (
@@ -60,28 +63,23 @@ def related_traces(
         .distinct()
         .localCheckpoint(eager=False)
     )
+    # traces sharing a node are 0 graph-hops apart but the reference walks
+    # CONTAINS (1 hop each side); we report graph hops between node sets.
     seed = (
         trace_contains.filter(F.col("unit_id") == unit_id)
         .select("trace_id", F.col("node_id").alias("x"))
         .distinct()
+        .withColumn("hops", F.lit(0))
     )
-    # traces sharing a node are 0 graph-hops apart but the reference walks
-    # CONTAINS (1 hop each side); we report graph hops between node sets.
-    reached = seed.withColumn("hops", F.lit(0))
-    frontier = reached
-    for h in range(1, max_hop + 1):
-        nxt = (
+
+    def step(frontier: DataFrame, _reached: DataFrame) -> DataFrame:
+        return (
             frontier.join(und, "x")
-            .select("trace_id", F.col("y").alias("x"))
+            .select("trace_id", F.col("y").alias("x"), (F.col("hops") + 1).alias("hops"))
             .distinct()
-            .join(reached.select("trace_id", "x"), ["trace_id", "x"], "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        reached = reached.unionByName(nxt)
-        frontier = nxt
+
+    reached, _, _ = semi_naive(seed, step, ["trace_id", "x"], max_hop)
     # pair traces that reach a common node; path length = hops1 + hops2
     a = reached.select(F.col("trace_id").alias("t1"), "x", F.col("hops").alias("h1"))
     b = reached.select(F.col("trace_id").alias("t2"), "x", F.col("hops").alias("h2"))

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark.functions.fixpoint import semi_naive
+
 __all__ = ["rdfs_closure"]
 
 TYPE = "rdf:type"
@@ -50,25 +52,25 @@ RANGE = "rdfs:range"
 
 def _transitive_close(pairs: DataFrame, max_depth: int = 32) -> DataFrame:
     """Transitive closure of a vocabulary-sized (a, b) relation by
-    iterated join (doubling would be fine too; the relation is tiny).
+    iterated join (``functions/fixpoint.py``'s :func:`semi_naive`; the
+    delta joins the whole closure so far, so path lengths double).
     Raises when ``max_depth`` rounds don't converge — a hierarchy
     deeper than that is a data bug, not a workload."""
-    closed = pairs.distinct().localCheckpoint(eager=True)
-    delta = closed
-    for _ in range(max_depth):
-        step = (
+
+    def step(delta: DataFrame, closed: DataFrame) -> DataFrame:
+        return (
             delta.select(F.col("a"), F.col("b").alias("m"))
             .join(closed.select(F.col("a").alias("m"), "b"), "m")
             .select("a", "b")
+            .distinct()
         )
-        new = step.join(closed, ["a", "b"], "left_anti") \
-            .distinct().localCheckpoint(eager=True)
-        if new.limit(1).count() == 0:
-            return closed
-        closed = closed.unionByName(new).localCheckpoint(eager=True)
-        delta = new
-    raise ValueError(f"transitive closure did not converge in "
-                     f"{max_depth} rounds")
+
+    closed, _, converged = semi_naive(pairs.distinct(), step, ["a", "b"],
+                                      max_depth)
+    if not converged:
+        raise ValueError(f"transitive closure did not converge in "
+                         f"{max_depth} rounds")
+    return closed
 
 
 def rdfs_closure(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from sigraph_spark.operators.links import extract_links, host_link_graph, page_host
 from pyspark.sql import functions as F
 
@@ -241,6 +243,10 @@ def test_resolve_redirects_long_chain_capped(spark):
         _aliases(spark, rows), max_steps=16
     ).collect()}
     assert all(v == "n9" for v in full.values())
+    # a cap of 3 steps is not reachable by doubling (it would silently
+    # run 4 steps and resolve n5 to n9): rejected up front
+    with pytest.raises(ValueError, match="power of two"):
+        resolve_redirects(_aliases(spark, rows), max_steps=3)
 
 
 def test_extract_canonical_aliases_both_attr_orders(spark):
