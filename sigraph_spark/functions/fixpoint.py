@@ -2,9 +2,10 @@
 :func:`semi_naive` expansion, whose rounds join only the rows new or
 improved last round (O(frontier out-edges) per round), and Wyllie
 :func:`pointer_double` (log2(max_steps) self-joins, not O(chain)
-rounds). Both checkpoint every round eagerly, so round r's plan never
+rounds). Both checkpoint every round, so round r's plan never
 re-derives rounds 0..r-1, and stop at the first round that changes
-nothing."""
+nothing. New frontiers are checkpointed eagerly; min mode's merged
+``reach`` lazily, as the next round's join materializes it anyway."""
 
 from __future__ import annotations
 
@@ -39,10 +40,12 @@ def semi_naive(
     ``converged`` is True only when a round proposed nothing, i.e. not
     a ``max_rounds`` truncation. ``max_rounds=None`` runs to fixpoint.
 
-    ``reach`` is built from eager ``localCheckpoint`` parts: executor-
-    local blocks with no lineage, lost with their executor, holding
+    ``reach`` is built from ``localCheckpoint`` parts: executor-local
+    blocks with no lineage, lost with their executor, holding
     block-manager storage while the caller keeps a reference to
-    ``reach`` or anything derived from it.
+    ``reach`` or anything derived from it. Set mode's parts are eager;
+    min mode's merged ``reach`` is lazy: the next round's join, or the
+    caller's first action, materializes it, with the same caveat.
     """
     reach = seed.localCheckpoint(eager=True)
     frontier = reach
@@ -76,7 +79,7 @@ def semi_naive(
             reach = (
                 reach.join(new.select(*keys), keys, "left_anti")
                 .unionByName(new)
-                .localCheckpoint(eager=True)
+                .localCheckpoint(eager=False)
             )
         frontier = new
     return reach, rounds, False

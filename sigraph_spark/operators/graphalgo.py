@@ -856,21 +856,23 @@ def strongly_connected_components(
     * **Trim** peels trivial SCCs — nodes lacking in- or out-edges
       within the remaining subgraph — iteratively (kills DAG chains
       that would otherwise cost one peel round per node).
-    * **Color**: forward min-label propagation to fixpoint; ``c(v)`` =
-      min id among remaining nodes that reach v. Each color class has
-      one root (the node equal to its color).
+    * **Color**: forward min-label propagation to fixpoint, at most
+      ``max_prop`` rounds; ``c(v)`` = min id among remaining nodes that
+      reach v. Each color class has one root (the node equal to its
+      color).
     * **Backward sweep**: from all roots at once, walk reversed edges
       restricted to the root's own color class; everything reached is
       exactly the root's SCC (mutual reachability through the root).
     * Remove finished SCCs, repeat.
 
-    Every step is a frontier-style equi-join on node keys (uniform after
-    hash partitioning); per-round frontiers are localCheckpointed to cut
-    lineage. At 100 TB the edge table should be bucketed on both
-    endpoints so the repeated joins are storage-partitioned. Rounds are
-    data-dependent: pass ``metrics`` and check ``metrics['converged']``
-    — on truncation the unassigned remainder is NOT emitted (absent
-    rows, never wrong labels).
+    Coloring and sweep are ``functions/fixpoint.py``'s :func:`semi_naive`
+    (min and set mode): frontier-style equi-joins on node keys (uniform
+    after hash partitioning). At 100 TB the edge table should be
+    bucketed on both endpoints so the repeated joins are
+    storage-partitioned. Rounds are data-dependent: pass ``metrics`` and
+    check ``metrics['converged']`` — on truncation (``max_peel`` peels,
+    or a coloring cut at ``max_prop`` rounds) the unassigned remainder
+    is NOT emitted (absent rows, never wrong labels).
     """
     e_all = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -892,7 +894,7 @@ def strongly_connected_components(
         return extra if base is None else base.unionByName(extra)
 
     for _ in range(max_peel):
-        if remaining.limit(1).count() == 0:
+        if remaining.isEmpty():
             converged = True
             break
         # --- trim loop: peel nodes without both in- and out-edges -----
@@ -908,7 +910,7 @@ def strongly_connected_components(
             trivial = remaining.join(nontrivial, "node", "left_anti").localCheckpoint(
                 eager=True
             )
-            if trivial.limit(1).count() == 0:
+            if trivial.isEmpty():
                 break
             assigned = _acc(
                 assigned, trivial.select("node", F.col("node").alias("scc_id"))
@@ -916,35 +918,23 @@ def strongly_connected_components(
             remaining = remaining.join(trivial, "node", "left_anti").localCheckpoint(
                 eager=True
             )
-        if remaining.limit(1).count() == 0:
+        if remaining.isEmpty():
             converged = True
             break
         peels += 1  # counts FW-BW phases; trim-only resolution costs none
         # --- forward min-label coloring to fixpoint -------------------
-        color = remaining.select("node", F.col("node").alias("color")).localCheckpoint(
-            eager=True
-        )
-        for _ in range(max_prop):
-            pushed = (
-                color.join(e_rem, color.node == e_rem.u)
-                .select(F.col("v").alias("node"), "color")
-            )
-            newc = (
-                color.unionByName(pushed)
-                .groupBy("node")
+        def push(frontier: DataFrame, _color: DataFrame) -> DataFrame:
+            return (
+                frontier.join(e_rem, frontier.node == e_rem.u)
+                .groupBy(F.col("v").alias("node"))
                 .agg(F.min("color").alias("color"))
-                .localCheckpoint(eager=True)
             )
-            moved = (
-                newc.alias("n")
-                .join(color.alias("o"), "node")
-                .filter(F.col("n.color") != F.col("o.color"))
-                .limit(1)
-                .count()
-            )
-            color = newc
-            if moved == 0:
-                break
+
+        seed = remaining.select("node", F.col("node").alias("color"))
+        color, _, colored = semi_naive(seed, push, ["node"], max_prop, minimize="color")
+        if not colored:
+            # partial colors would split cycles into wrong labels
+            break
         # --- backward sweep from roots within color classes -----------
         def sweep(frontier: DataFrame, _member: DataFrame) -> DataFrame:
             cand = (
@@ -960,7 +950,7 @@ def strongly_connected_components(
             eager=True
         )
     else:
-        converged = remaining.limit(1).count() == 0
+        converged = remaining.isEmpty()
     if metrics is not None:
         metrics["peels"] = peels
         metrics["converged"] = converged
@@ -1005,49 +995,39 @@ def topo_levels(
     """Longest-path layering of a DAG: ``(node_id, level)`` with sources
     at level 0 and ``level(v) = 1 + max(level(u) : u→v)`` — the standard
     scheduling/critical-path view (nodes at the same level are mutually
-    unordered and can process in parallel). Fixpoint of a frontier-free
-    max-propagation: each round one equi-join + max-agg; rounds = DAG
-    depth. Raises ValueError if ``max_iter`` rounds don't converge — on
-    a true DAG that means depth > max_iter; on a cyclic input levels
+    unordered and can process in parallel). Rounds are
+    ``functions/fixpoint.py``'s :func:`semi_naive` in min mode on the
+    negated level (longest path = min of ``-level``): each round one
+    equi-join + min-agg over the nodes raised last round; rounds = DAG
+    depth + 1. Raises ValueError if ``max_iter`` rounds don't converge —
+    on a true DAG that means depth >= max_iter; on a cyclic input levels
     would diverge, so failing loudly beats looping forever."""
     e = dag.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     e = e.localCheckpoint(eager=True)
-    nodes = (
+    seed = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
+        .withColumn("neg", F.lit(0).cast("long"))
     )
-    lvl = nodes.withColumn("level", F.lit(0).cast("long")).localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        pushed = (
-            lvl.join(e, lvl.node == e.u)
-            .select(F.col("v").alias("node"), (F.col("level") + 1).alias("level"))
+
+    def step(frontier: DataFrame, _lvl: DataFrame) -> DataFrame:
+        return (
+            frontier.join(e, frontier.node == e.u)
+            .groupBy(F.col("v").alias("node"))
+            .agg(F.min(F.col("neg") - 1).alias("neg"))
         )
-        newl = (
-            lvl.unionByName(pushed)
-            .groupBy("node")
-            .agg(F.max("level").alias("level"))
-            .localCheckpoint(eager=True)
+
+    lvl, rounds, converged = semi_naive(seed, step, ["node"], max_iter, minimize="neg")
+    if not converged:
+        raise ValueError(
+            f"topo_levels did not converge in {max_iter} rounds "
+            "(cyclic input or depth > max_iter)"
         )
-        moved = (
-            newl.alias("n")
-            .join(lvl.alias("o"), "node")
-            .filter(F.col("n.level") != F.col("o.level"))
-            .limit(1)
-            .count()
-        )
-        lvl = newl
-        if moved == 0:
-            if metrics is not None:
-                metrics["rounds"] = rounds
-                metrics["converged"] = True
-            return lvl.select(F.col("node").alias("node_id"), "level")
-    raise ValueError(
-        f"topo_levels did not converge in {max_iter} rounds "
-        "(cyclic input or depth > max_iter)"
-    )
+    if metrics is not None:
+        metrics["rounds"] = rounds
+        metrics["converged"] = True
+    return lvl.select(F.col("node").alias("node_id"), (-F.col("neg")).alias("level"))
 
 
 def communities_lpa(

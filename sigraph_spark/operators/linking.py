@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark.functions.fixpoint import semi_naive
+
 
 def normalize_entity(c: Column) -> Column:
     """Exact unification (ai_agent.py:389-403): lower, strip, re-fang.
@@ -329,9 +331,9 @@ def connected_components(
     per round checks convergence (edge set unchanged). Pass ``metrics`` to
     capture {rounds, edges_final} for the stage manifest.
 
-    The previous propagation routine is kept as
-    ``connected_components_propagation`` (fast path for known-shallow
-    graphs; equality pinned in tests)."""
+    The min-label propagation routine
+    ``connected_components_propagation`` is kept only as the reference
+    the tests compare this one against."""
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -393,11 +395,9 @@ def connected_components(
         # are distinct sets, so |A| == |B| and A\B == ∅ imply A == B —
         # one count (on checkpointed data) + ONE exceptAll, not two.
         n_new = e2.count()
-        changed = (
-            1 if n_new != n_prev else e2.exceptAll(e).limit(1).count()
-        )
+        changed = n_new != n_prev or not e2.exceptAll(e).isEmpty()
         e, n_prev = e2, n_new
-        if changed == 0:
+        if not changed:
             break
     if metrics is not None:
         metrics["rounds"] = rounds
@@ -443,39 +443,26 @@ def connected_components_propagation(
     dst: str = "b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Min-label propagation (legacy r1 routine): O(component diameter)
-    rounds — fine for known-shallow match graphs, replaced by star
-    contraction as the default. Kept for cross-checking."""
+    """Min-label propagation: O(component diameter) rounds, the rounds
+    being ``functions/fixpoint.py``'s :func:`semi_naive` in min mode.
+    Kept only as the test reference for :func:`connected_components`;
+    after ``max_iter`` rounds the labels are returned as they stand."""
     und = (
         edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
         .unionAll(edges.select(F.col(dst).alias("x"), F.col(src).alias("y")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        und.select(F.col("x").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            und.join(labels, und.y == labels.node)
-            .groupBy("x")
-            .agg(F.min("label").alias("nlabel"))
+    seed = und.select(F.col("x").alias("node")).distinct().withColumn("label", F.col("node"))
+
+    def step(frontier: DataFrame, _labels: DataFrame) -> DataFrame:
+        return (
+            frontier.join(und, frontier.node == und.y)
+            .groupBy(F.col("x").alias("node"))
+            .agg(F.min("label").alias("label"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.x, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias("label"),
-                (F.col("nlabel") < F.col("label")).alias("changed"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("changed")).limit(1).count()
-        labels = new_labels.drop("changed")
-        if changed == 0:
-            break
+
+    labels = semi_naive(seed, step, ["node"], max_iter, minimize="label")[0]
     return labels.select(F.col("node").alias("entity"), F.col("label").alias("canonical_id"))
 
 
@@ -551,7 +538,7 @@ def link_entities(
     )
     # clean-corpus fast path: no verified near-duplicates means identity
     # mapping — skip the CC round trips (each round is several driver jobs)
-    if matches.limit(1).count() == 0:
+    if matches.isEmpty():
         return vocab.select("entity", F.col("entity").alias("canonical_id"))
     cc = connected_components(matches)
     return (
@@ -733,7 +720,7 @@ def incremental_link_entities(
         .localCheckpoint(eager=True)
     )
 
-    if matches.limit(1).count() == 0:
+    if matches.isEmpty():
         new_mapping = new.select(
             "entity", F.col("entity").alias("canonical_id")
         )

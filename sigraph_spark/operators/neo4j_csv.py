@@ -128,7 +128,7 @@ def write_neo4j_import(
     returned ``neo4j-admin`` invocation uses header+regex file groups, the
     importer's native multi-file form.
     """
-    if array_delim_conflicts(nodes).limit(1).count():
+    if not array_delim_conflicts(nodes).isEmpty():
         raise ValueError(
             "node array property contains the ';' array delimiter; "
             "route offenders via array_delim_conflicts() before export"

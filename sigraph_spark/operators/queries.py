@@ -105,7 +105,9 @@ def provenance_subgraph(
     """Subgraph export for a unit (reference schema.py:127-152, D5):
     anchor at the unit's contained nodes, expand out-edges up to max_hop
     with the reference's label filters (src not MODULE; no PROCESS->PROCESS
-    edges), dedup nodes/edges per round. Returns (sub_nodes, sub_edges)."""
+    edges). The hops are ``functions/fixpoint.py``'s :func:`semi_naive`
+    in set mode; the exported edges are those out of nodes first reached
+    within max_hop-1 hops. Returns (sub_nodes, sub_edges)."""
     lbl = nodes.select("node_id", "label")
     e = (
         edges.join(lbl.withColumnRenamed("node_id", "src").withColumnRenamed("label", "src_label"), "src")
@@ -121,32 +123,26 @@ def provenance_subgraph(
         trace_contains.filter(F.col("unit_id") == unit_id)
         .select(F.col("node_id").alias("src"))
         .distinct()
+        .withColumn("hops", F.lit(0))
     )
-    reached = anchor
-    frontier = anchor
-    sub_edges = None
-    for _ in range(max_hop):
-        hop = frontier.join(e, "src").localCheckpoint(eager=True)
-        sub_edges = hop if sub_edges is None else sub_edges.unionByName(hop)
-        nxt = (
-            hop.select(F.col("dst").alias("src"))
+
+    def step(frontier: DataFrame, _reached: DataFrame) -> DataFrame:
+        return (
+            frontier.join(e, "src")
+            .select(F.col("dst").alias("src"), (F.col("hops") + 1).alias("hops"))
             .distinct()
-            .join(reached, "src", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        reached = reached.unionByName(nxt).distinct()
-        frontier = nxt
+
+    reached, _, _ = semi_naive(anchor, step, ["src"], max_hop)
     sub_edges = (
-        sub_edges.dropDuplicates(["src", "predicate", "dst"])
-        if sub_edges is not None
-        else e.limit(0)
+        reached.filter(F.col("hops") < max_hop).select("src")
+        .join(e, "src")
+        .dropDuplicates(["src", "predicate", "dst"])
     )
     sub_nodes = nodes.join(
         sub_edges.select(F.col("src").alias("node_id"))
         .union(sub_edges.select(F.col("dst").alias("node_id")))
-        .union(anchor.select(F.col("src").alias("node_id")))
+        .union(reached.filter(F.col("hops") == 0).select(F.col("src").alias("node_id")))
         .distinct(),
         "node_id",
     )

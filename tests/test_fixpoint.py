@@ -77,6 +77,10 @@ def test_min_mode_later_cheaper_path_replaces(spark):
     assert (rounds, converged) == (3, True)
     assert sorted((r["node"], r["cost"]) for r in reach.collect()) == [
         ("a", 0), ("b", 2), ("c", 1)]
+    reach, rounds, converged = _relax(spark, edges, "a", 1)
+    assert (rounds, converged) == (1, False)
+    assert sorted((r["node"], r["cost"]) for r in reach.collect()) == [
+        ("a", 0), ("b", 10), ("c", 1)]
 
 
 def _ptr(spark, rows):

@@ -75,12 +75,12 @@ EDGES = [
 ]
 
 
-def _run(spark, edges):
+def _run(spark, edges, **kw):
     df = spark.createDataFrame(edges, "src string, dst string")
     m: dict = {}
     got = {
         r["node_id"]: r["scc_id"]
-        for r in strongly_connected_components(df, metrics=m).collect()
+        for r in strongly_connected_components(df, metrics=m, **kw).collect()
     }
     return got, m
 
@@ -112,6 +112,11 @@ def test_one_big_cycle(spark):
     assert m["converged"]
     assert set(got.values()) == {"n00"}
     assert len(got) == n
+    # coloring cut at 3 rounds: the cycle is left unassigned, never split
+    # into singletons
+    got, m = _run(spark, cyc, max_prop=3)
+    assert m["converged"] is False
+    assert got == {}
 
 
 def test_partition_invariance(spark):
