@@ -4,8 +4,9 @@ improved last round (O(frontier out-edges) per round), and Wyllie
 :func:`pointer_double` (log2(max_steps) self-joins, not O(chain)
 rounds). Both checkpoint every round, so round r's plan never
 re-derives rounds 0..r-1, and stop at the first round that changes
-nothing. New frontiers are checkpointed eagerly; min mode's merged
-``reach`` lazily, as the next round's join materializes it anyway."""
+nothing. New frontiers are checkpointed eagerly; the seed and min
+mode's merged ``reach`` lazily, as the next round's checkpoint job
+materializes them anyway."""
 
 from __future__ import annotations
 
@@ -43,11 +44,13 @@ def semi_naive(
     ``reach`` is built from ``localCheckpoint`` parts: executor-local
     blocks with no lineage, lost with their executor, holding
     block-manager storage while the caller keeps a reference to
-    ``reach`` or anything derived from it. Set mode's parts are eager;
-    min mode's merged ``reach`` is lazy: the next round's join, or the
-    caller's first action, materializes it, with the same caveat.
+    ``reach`` or anything derived from it. The seed's checkpoint and min
+    mode's merged ``reach`` are lazy: round 1's frontier checkpoint (the
+    next round's, for the merged ``reach``), or the caller's first
+    action, materializes them, with the same caveat; every round's new
+    frontier is eager.
     """
-    reach = seed.localCheckpoint(eager=True)
+    reach = seed.localCheckpoint(eager=False)
     frontier = reach
     rounds = 0
     while max_rounds is None or rounds < max_rounds:

@@ -51,18 +51,17 @@ def related_traces(
 ) -> DataFrame:
     """Trace-to-trace connectivity (reference schema.py:89-110, D4):
     (t1)-[*1..max_hop]-(t2) within one unit, deduped t1 < t2, ordered by
-    path length. Implemented as an iterative frontier BFS over the
-    undirected edge set rooted at each trace's contained nodes
-    (``functions/fixpoint.py``'s :func:`semi_naive`); each round is one
-    join + dedup, so round r materializes only the hop-r frontier."""
-    # und joins every frontier round; without a boundary each round
-    # re-runs the union + distinct from the edge table
-    und = (
-        edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-        .unionAll(edges.select(F.col("dst").alias("x"), F.col("src").alias("y")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    path length, where length is the undirected graph-hop distance
+    between the two traces' contained node sets.
+
+    Meet in the middle: a shortest path of length L <= max_hop has a node
+    within ceil(L/2) hops of both ends, so a frontier BFS of only
+    ``(max_hop + 1) // 2`` rounds from every trace (``functions/
+    fixpoint.py``'s :func:`semi_naive`) reaches it from both sides, and
+    the pairing below recovers L as the minimum ``h1 + h2 <= max_hop``
+    over shared nodes. Each round joins the frontier to ``edges`` once
+    per direction, so no undirected copy of the whole edge table is
+    built."""
     # traces sharing a node are 0 graph-hops apart but the reference walks
     # CONTAINS (1 hop each side); we report graph hops between node sets.
     seed = (
@@ -71,15 +70,19 @@ def related_traces(
         .distinct()
         .withColumn("hops", F.lit(0))
     )
+    fwd = edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+    bwd = edges.select(F.col("dst").alias("x"), F.col("src").alias("y"))
 
     def step(frontier: DataFrame, _reached: DataFrame) -> DataFrame:
         return (
-            frontier.join(und, "x")
+            frontier.join(fwd, "x")
+            .unionByName(frontier.join(bwd, "x"))
             .select("trace_id", F.col("y").alias("x"), (F.col("hops") + 1).alias("hops"))
             .distinct()
         )
 
-    reached, _, _ = semi_naive(seed, step, ["trace_id", "x"], max_hop)
+    reached, _, _ = semi_naive(
+        seed, step, ["trace_id", "x"], (max_hop + 1) // 2)
     # pair traces that reach a common node; path length = hops1 + hops2
     a = reached.select(F.col("trace_id").alias("t1"), "x", F.col("hops").alias("h1"))
     b = reached.select(F.col("trace_id").alias("t2"), "x", F.col("hops").alias("h2"))
@@ -105,9 +108,12 @@ def provenance_subgraph(
     """Subgraph export for a unit (reference schema.py:127-152, D5):
     anchor at the unit's contained nodes, expand out-edges up to max_hop
     with the reference's label filters (src not MODULE; no PROCESS->PROCESS
-    edges). The hops are ``functions/fixpoint.py``'s :func:`semi_naive`
-    in set mode; the exported edges are those out of nodes first reached
-    within max_hop-1 hops. Returns (sub_nodes, sub_edges)."""
+    edges). The exported edges are those out of nodes first reached
+    within max_hop-1 hops, so the hops are ``max_hop - 1`` rounds of
+    ``functions/fixpoint.py``'s :func:`semi_naive` in set mode (none for
+    ``max_hop=1``: the anchors' own out-edges); the nodes a last round
+    would reach are exactly the exported edges' ``dst`` side. Returns
+    (sub_nodes, sub_edges)."""
     lbl = nodes.select("node_id", "label")
     e = (
         edges.join(lbl.withColumnRenamed("node_id", "src").withColumnRenamed("label", "src_label"), "src")
@@ -133,8 +139,9 @@ def provenance_subgraph(
             .distinct()
         )
 
-    reached, _, _ = semi_naive(anchor, step, ["src"], max_hop)
+    reached, _, _ = semi_naive(anchor, step, ["src"], max(max_hop - 1, 0))
     sub_edges = (
+        # the filter only bites at max_hop <= 0, where nothing is exported
         reached.filter(F.col("hops") < max_hop).select("src")
         .join(e, "src")
         .dropDuplicates(["src", "predicate", "dst"])
@@ -165,7 +172,10 @@ def export_envelope(sub_nodes: DataFrame, sub_edges: DataFrame) -> dict:
 
     The envelope is ONE unit's bounded subgraph (an API response), so the
     final assembly collects — every upstream step (BFS expansion, label
-    filters, dedup) stays distributed in provenance_subgraph."""
+    filters, dedup) stays distributed in provenance_subgraph — and sorts
+    the collected rows on the driver: Python's code-point order on the
+    (non-NULL) id strings is Spark's UTF-8 binary order, without a
+    range-partition sampling job and an exchange per table."""
     nodes = [
         {
             "elementId": r["node_id"],
@@ -177,9 +187,12 @@ def export_envelope(sub_nodes: DataFrame, sub_edges: DataFrame) -> dict:
                 "related_trace_ids": list(r["related_trace_ids"]),
             },
         }
-        for r in sub_nodes.select(
-            "node_id", "label", "image", "related_span_ids", "related_trace_ids"
-        ).distinct().orderBy("node_id").collect()
+        for r in sorted(
+            sub_nodes.select(
+                "node_id", "label", "image", "related_span_ids", "related_trace_ids"
+            ).distinct().collect(),
+            key=lambda r: r["node_id"],
+        )
     ]
     rels = [
         {
@@ -192,8 +205,11 @@ def export_envelope(sub_nodes: DataFrame, sub_edges: DataFrame) -> dict:
                 "weight": r["weight"],
             },
         }
-        for r in sub_edges.select("src", "predicate", "dst", "start_time", "weight")
-        .distinct().orderBy("src", "predicate", "dst").collect()
+        for r in sorted(
+            sub_edges.select("src", "predicate", "dst", "start_time", "weight")
+            .distinct().collect(),
+            key=lambda r: (r["src"], r["predicate"], r["dst"]),
+        )
     ]
     return {"nodes": nodes, "rels": rels}
 

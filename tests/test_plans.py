@@ -30,6 +30,7 @@ def test_run_stage_writes_manifest_and_resumes(spark, tmp_path):
     m = read_manifest(out)
     assert m["stage"] == "s" and m["rows"] == 10
     assert len(m["partitions"]) >= 1
+    assert m["output_fingerprint"] == table_fingerprint(df1)
     # matching fingerprint -> resumed, no recompute
     df2 = run_stage(spark, "s", out, build, input_fingerprint="fp-A")
     assert calls["n"] == 1
