@@ -59,13 +59,6 @@ def parse_events(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     Validation mirrors element_behavior.py:295-308 (weight >= 1) plus the
     parser checks; the reference silently swallows bad events
     (graph_session.py:128-132) — we emit them on an error side-channel.
-    """
-    return _split_parsed(_parse_checked(events))
-
-
-def _parse_checked(events: DataFrame) -> DataFrame:
-    """The parse before the good/error split: every input column, the
-    staged parse attributes and the ``_error`` verdict (NULL = valid).
 
     Semantics are exactly ``parse_actor``/``parse_parent_artifact``
     (functions/provenance.py — parity pinned by test_provenance and every
@@ -159,11 +152,6 @@ def _parse_checked(events: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.col("_error").isNotNull().cast("long")).alias("error_rows"),
     )
-    return parsed
-
-
-def _split_parsed(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, errors) of a :func:`_parse_checked` frame."""
     good = parsed.filter(F.col("_error").isNull()).select(
         "trace_id",
         "span_id",
@@ -397,13 +385,6 @@ def build_graph(events: DataFrame, check_label_conflicts: bool = False) -> Graph
     so it is opt-in for pipelines that want the reference's hard-failure
     signal as data."""
     parsed, errors = parse_events(events)
-    return _graph_from_parsed(parsed, errors, check_label_conflicts)
-
-
-def _graph_from_parsed(
-    parsed: DataFrame, errors: DataFrame, check_label_conflicts: bool = False
-) -> GraphTables:
-    """The graph tables of one (good, errors) :func:`parse_events` pair."""
     nodes = build_nodes(parsed)
     if check_label_conflicts:
         conflicts = node_label_conflicts(nodes).select(
@@ -538,21 +519,18 @@ def merge_traces(
 def merge_graph_tables(existing: GraphTables, delta_events: DataFrame) -> GraphTables:
     """Incrementally upsert a batch of raw events into an existing graph —
     the batch analog of the reference's per-event MERGE round-trips
-    (element_behavior.py:260-522). Builds the delta's tables with the
+    (element_behavior.py:260-522). Builds the delta's five tables with the
     shared stage functions, then merges each against the existing table
     with the §1.3 combiners above. Errors append (side channel).
 
-    The delta is parsed ONCE: the pre-split parse is a lazy
-    ``localCheckpoint`` that the first table write materializes, and all
-    delta tables and the error append read it, instead of each of the
-    seven writes re-reading, re-mapping and re-parsing (re-planning and
-    re-generating code for) the batch. The checkpoint is batch-sized
-    state — executor-local blocks with no lineage, lost with their
-    executor and held while the returned tables are referenced — which
-    is why :func:`build_graph`, whose input is corpus-sized, stays lazy.
-    """
-    delta = _graph_from_parsed(*_split_parsed(
-        _parse_checked(delta_events).localCheckpoint(eager=False)))
+    The raw batch is read and mapped ONCE: it is a lazy
+    ``localCheckpoint`` that the first table write materializes, instead
+    of each of the seven writes re-reading and re-mapping it (each write
+    still re-parses it). The checkpoint is batch-sized state —
+    executor-local blocks with no lineage, lost with their executor and
+    held while the returned tables are referenced — which is why
+    :func:`build_graph`, whose input is corpus-sized, stays lazy."""
+    delta = build_graph(delta_events.localCheckpoint(eager=False))
     spans = merge_trace_spans(existing.trace_spans, delta.trace_spans)
     return GraphTables(
         nodes=merge_nodes(existing.nodes, delta.nodes),

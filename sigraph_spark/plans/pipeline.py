@@ -49,6 +49,11 @@ def _row_hash(df: DataFrame):
     return F.pmod(F.xxhash64(*cols), F.lit(_HASH_MOD))
 
 
+def _fingerprint(hash_sum: int, rows: int) -> str:
+    """The fingerprint string of a table's row-hash sum and row count."""
+    return f"{hash_sum}:{rows}"
+
+
 def table_fingerprint(df: DataFrame) -> str:
     """Order-insensitive content fingerprint of a DataFrame: sum of folded
     per-row hashes over canonically stringified columns + row count. One
@@ -57,7 +62,7 @@ def table_fingerprint(df: DataFrame) -> str:
         F.sum(F.col("h")).alias("s"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    return f"{row['s'] or 0}:{row['n']}"
+    return _fingerprint(row["s"] or 0, row["n"])
 
 
 def partition_lineage(df: DataFrame) -> list[dict]:
@@ -134,8 +139,8 @@ def run_stage(
         "input_fingerprint": input_fingerprint,
         # table_fingerprint(out) without a second pass: its hash sum and
         # row count are the sums of the per-partition lineage rows
-        "output_fingerprint": (
-            f"{sum(int(p['content_hash']) for p in lineage)}:{rows}"),
+        "output_fingerprint": _fingerprint(
+            sum(int(p["content_hash"]) for p in lineage), rows),
         "rows": rows,
         "partitions": lineage,
         "wall_s": round(time.monotonic() - t0, 3),

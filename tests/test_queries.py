@@ -41,46 +41,34 @@ def test_ordered_sequences_ties_break_by_storage_timestamp(spark):
 
 def test_provenance_subgraph_stops_at_max_hop(spark):
     # chain a -> b -> c -> d anchored at a: 2 hops export a->b and b->c;
-    # c is reached (a node of the subgraph), d is not
+    # c is reached (a node of the subgraph), d is not. The anchors p and
+    # m only have label-filtered out-edges (p->q is PROCESS->PROCESS, m is
+    # a MODULE source), so they join the export as bare anchors.
+    labels = {"a": "FILE", "b": "FILE", "c": "FILE", "d": "FILE",
+              "p": "PROCESS", "q": "PROCESS", "m": "MODULE", "x": "FILE"}
     edges = spark.createDataFrame(
         [(u, "WRITE", v, datetime(2024, 1, 1), 1)
-         for u, v in (("a", "b"), ("b", "c"), ("c", "d"))],
-        "src string, predicate string, dst string, start_time timestamp,"
-        " weight int",
-    )
-    nodes = spark.createDataFrame(
-        [(n, "FILE") for n in "abcd"], "node_id string, label string")
-    contains = spark.createDataFrame(
-        [("u1", "a"), ("u2", "c")], "unit_id string, node_id string")
-    sub_nodes, sub_edges = provenance_subgraph(
-        contains, edges, nodes, "u1", max_hop=2)
-    assert {(r["src"], r["dst"]) for r in sub_edges.collect()} == {
-        ("a", "b"), ("b", "c")}
-    got = {r["node_id"] for r in sub_nodes.collect()}
-    assert got == {"a", "b", "c"}
-
-
-def test_provenance_subgraph_max_hop_1_exports_anchor_out_edges(spark):
-    # max_hop=1 expands nothing: the export is the anchors' own
-    # label-filtered out-edges (p->q is PROCESS->PROCESS, m is a MODULE
-    # source) plus the anchors; f->g is one hop too far
-    labels = {"p": "PROCESS", "q": "PROCESS", "f": "FILE", "g": "FILE",
-              "m": "MODULE", "x": "FILE"}
-    edges = spark.createDataFrame(
-        [(u, "WRITE", v, datetime(2024, 1, 1), 1)
-         for u, v in (("p", "q"), ("p", "f"), ("f", "g"), ("m", "x"))],
+         for u, v in (("a", "b"), ("b", "c"), ("c", "d"), ("p", "q"), ("m", "x"))],
         "src string, predicate string, dst string, start_time timestamp,"
         " weight int",
     )
     nodes = spark.createDataFrame(
         list(labels.items()), "node_id string, label string")
     contains = spark.createDataFrame(
-        [("u1", "p"), ("u1", "m"), ("u2", "f")],
+        [("u1", "a"), ("u1", "p"), ("u1", "m"), ("u2", "c")],
         "unit_id string, node_id string")
     sub_nodes, sub_edges = provenance_subgraph(
+        contains, edges, nodes, "u1", max_hop=2)
+    assert {(r["src"], r["dst"]) for r in sub_edges.collect()} == {
+        ("a", "b"), ("b", "c")}
+    got = {r["node_id"] for r in sub_nodes.collect()}
+    assert got == {"a", "b", "c", "p", "m"}
+    # max_hop=1 expands nothing: the export is the anchors' own
+    # label-filtered out-edges plus the anchors; b->c is one hop too far
+    sub_nodes, sub_edges = provenance_subgraph(
         contains, edges, nodes, "u1", max_hop=1)
-    assert {(r["src"], r["dst"]) for r in sub_edges.collect()} == {("p", "f")}
-    assert {r["node_id"] for r in sub_nodes.collect()} == {"p", "f", "m"}
+    assert {(r["src"], r["dst"]) for r in sub_edges.collect()} == {("a", "b")}
+    assert {r["node_id"] for r in sub_nodes.collect()} == {"a", "b", "p", "m"}
 
 
 # Traces of unit u1 on an undirected path whose edges alternate direction,
