@@ -6,7 +6,13 @@ rounds). Both checkpoint every round, so round r's plan never
 re-derives rounds 0..r-1, and stop at the first round that changes
 nothing. New frontiers are checkpointed eagerly; the seed and min
 mode's merged ``reach`` lazily, as the next round's checkpoint job
-materializes them anyway."""
+materializes them anyway.
+
+A :func:`semi_naive` step may read all of ``reach``, not only the
+frontier. The peels use this: k-core, k-truss and the SCC trim grow a
+set of deleted keys from an empty seed, and each round's step tests the
+survivors (the input minus ``reach``), ignoring the frontier; the rule
+chase joins the frontier against older rounds of ``reach``."""
 
 from __future__ import annotations
 
@@ -30,7 +36,9 @@ def semi_naive(
     Each round ``step(frontier, reach)`` proposes rows with the seed's
     columns (round 1's frontier is the seed); the survivors become the
     next frontier and are merged into ``reach``. ``step`` proposes each
-    key at most once per round (``distinct`` or a per-key aggregate).
+    key at most once per round (``distinct`` or a per-key aggregate) and
+    may read all of ``reach`` (a peel's step reads only ``reach``, its
+    deleted set, and ignores the frontier).
 
     - set mode (``minimize=None``): keys not yet in ``reach`` survive.
     - min mode (``minimize="<col>"``): new keys and rows whose non-NULL

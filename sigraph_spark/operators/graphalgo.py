@@ -25,15 +25,16 @@ triple-join restated in SQL, which DuckDB computes directly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sigraph_spark.functions.fixpoint import semi_naive
 
 
-def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Distinct undirected edges oriented low(degree, id) -> high."""
-    und = (
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct undirected edges ``(x, y)`` with ``x < y``; self-loops
+    dropped."""
+    return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("x"),
             F.greatest(F.col(src), F.col(dst)).alias("y"),
@@ -41,12 +42,22 @@ def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
         .filter(F.col("x") != F.col("y"))
         .distinct()
     )
-    deg = (
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """Undirected degree per endpoint of ``(x, y)`` edges: ``(n, d)``."""
+    return (
         und.select(F.col("x").alias("n"))
         .unionAll(und.select(F.col("y").alias("n")))
         .groupBy("n")
         .agg(F.count("*").alias("d"))
     )
+
+
+def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct undirected edges oriented low(degree, id) -> high."""
+    und = _undirected(edges, src, dst)
+    deg = _degrees(und)
     dx = deg.select(F.col("n").alias("x"), F.col("d").alias("dx"))
     dy = deg.select(F.col("n").alias("y"), F.col("d").alias("dy"))
     j = und.join(dx, "x").join(dy, "y")
@@ -59,11 +70,8 @@ def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle participation counts: ``(node, triangles)``.
-    Nodes in no triangle are omitted (join the node table for zeros)."""
+def _triangles(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Every triangle of the undirected graph once: ``(m, u, v)``."""
     o = _oriented(edges, src, dst).localCheckpoint(eager=False)
     # wedge (u, v) at middle m, BOTH orderings (u != v): the orientation
     # total order is (degree, id), so filtering u < v lexicographically
@@ -74,27 +82,29 @@ def triangle_count(
     w2 = o.select(F.col("a").alias("m"), F.col("b").alias("v"))
     wedges = w1.join(w2, "m").filter(F.col("u") != F.col("v"))
     closer = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    tri = wedges.join(closer, ["u", "v"])  # (m, u, v) triangles, each once
+    return wedges.join(closer, ["u", "v"])
+
+
+def triangle_count(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Per-node triangle participation counts: ``(node, triangles)``.
+    Nodes in no triangle are omitted (join the node table for zeros)."""
     # one corner row per triangle vertex via explode — the unionAll-of-
     # three-projections form re-derived the whole wedge join once per
     # leg (three executions of the O(wedges) step; same multiset of
     # corner nodes either way)
-    per_node = (
-        tri.select(F.explode(F.array("m", "u", "v")).alias("node"))
+    return (
+        _triangles(edges, src, dst)
+        .select(F.explode(F.array("m", "u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("triangles"))
     )
-    return per_node
 
 
 def triangle_total(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:
     """Global triangle count (each triangle counted once)."""
-    o = _oriented(edges, src, dst).localCheckpoint(eager=False)
-    w1 = o.select(F.col("a").alias("m"), F.col("b").alias("u"))
-    w2 = o.select(F.col("a").alias("m"), F.col("b").alias("v"))
-    wedges = w1.join(w2, "m").filter(F.col("u") != F.col("v"))
-    closer = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    return wedges.join(closer, ["u", "v"]).count()
+    return _triangles(edges, src, dst).count()
 
 
 def shortest_paths(
@@ -331,51 +341,76 @@ def kcore(
 
     The k-core is the standard "is this node in a genuinely dense region"
     audit (complements triangles: a 2-core strips all tree-like fringe).
-    Each peel round is one degree aggregation + two semi-joins filtering
-    the edge set — all node-id keys. Rounds are bounded by the peel depth
-    (degeneracy ordering), which is tiny for web-like graphs; convergence
-    is one count per round on the (shrinking) checkpointed edge set.
+    The peel is ``functions/fixpoint.py``'s :func:`semi_naive` in set
+    mode growing the set of deleted node ids: each round one degree
+    aggregation over the edges with neither endpoint deleted, whose
+    nodes below ``k`` join the set. Rounds are bounded by the peel depth
+    (degeneracy ordering), tiny for web-like graphs; ``metrics['rounds']``
+    counts them, the final round that deletes nothing included. A peel
+    cut at ``max_iter`` rounds reports degrees over the edges it left.
+    The deleted set is built from
+    ``localCheckpoint`` parts (the :func:`semi_naive` storage caveat:
+    no lineage, lost with their executor) that the returned frame reads.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("x"),
-            F.greatest(F.col(src), F.col(dst)).alias("y"),
+    e = _undirected(edges, src, dst).localCheckpoint(eager=True)
+
+    def live(gone: DataFrame) -> DataFrame:
+        return (
+            e.join(gone.withColumnRenamed("n", "x"), "x", "left_anti")
+            .join(gone.withColumnRenamed("n", "y"), "y", "left_anti")
         )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_prev = e.count()
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        deg = (
-            e.select(F.col("x").alias("n"))
-            .unionAll(e.select(F.col("y").alias("n")))
-            .groupBy("n")
-            .agg(F.count("*").alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("n")
-        e2 = (
-            e.join(keep.withColumnRenamed("n", "x"), "x", "left_semi")
-            .join(keep.withColumnRenamed("n", "y"), "y", "left_semi")
-            .select("x", "y")
-            .localCheckpoint(eager=True)
-        )
-        n_new = e2.count()
-        e = e2
-        if n_new == n_prev:
-            break
-        n_prev = n_new
+
+    def peel(_frontier: DataFrame, gone: DataFrame) -> DataFrame:
+        return _degrees(live(gone)).filter(F.col("d") < k).select("n")
+
+    nothing = e.select(F.col("x").alias("n")).limit(0)
+    gone, rounds, _ = semi_naive(nothing, peel, ["n"], max_iter)
     if metrics is not None:
         metrics["rounds"] = rounds
-    deg = (
-        e.select(F.col("x").alias("node_id"))
-        .unionAll(e.select(F.col("y").alias("node_id")))
-        .groupBy("node_id")
-        .agg(F.count("*").cast("long").alias("core_degree"))
+    return (
+        _degrees(live(gone))
+        .filter(F.col("d") >= k)
+        .select(F.col("n").alias("node_id"), F.col("d").alias("core_degree"))
     )
-    return deg.filter(F.col("core_degree") >= k)
+
+
+def _edge_support(ek: DataFrame) -> DataFrame:
+    """Triangles each oriented edge of ``ek`` (``x, y, u, v, dv``, see
+    :func:`ktruss`) closes within ``ek``: ``(x, y, support)``, edges in
+    no triangle omitted."""
+    o1, o2 = ek.alias("o1"), ek.alias("o2")
+    wedge = (
+        o1.join(o2, F.col("o1.u") == F.col("o2.u"))
+        .filter(
+            (F.col("o1.dv") < F.col("o2.dv"))
+            | ((F.col("o1.dv") == F.col("o2.dv")) & (F.col("o1.v") < F.col("o2.v")))
+        )
+        .select(
+            F.col("o1.u").alias("a"), F.col("o1.v").alias("b"), F.col("o2.v").alias("c")
+        )
+    )
+    tri = wedge.join(
+        ek.select(F.col("u").alias("b"), F.col("v").alias("c")), ["b", "c"]
+    )
+
+    def und_edge(p: str, q: str) -> Column:
+        return F.struct(
+            F.least(F.col(p), F.col(q)).alias("x"),
+            F.greatest(F.col(p), F.col(q)).alias("y"),
+        )
+
+    # one edge row per triangle side via explode — the unionByName-of-
+    # three-projections form re-derived the whole wedge join once per
+    # leg (same edge multiset either way)
+    return (
+        tri.select(
+            F.explode(
+                F.array(und_edge("a", "b"), und_edge("a", "c"), und_edge("b", "c"))
+            ).alias("_e")
+        )
+        .groupBy(F.col("_e.x").alias("x"), F.col("_e.y").alias("y"))
+        .agg(F.count(F.lit(1)).alias("support"))
+    )
 
 
 def ktruss(
@@ -394,45 +429,36 @@ def ktruss(
     entity neighborhoods from boilerplate stars the core number misses.
 
     Returns surviving edges as ``(x, y, support)`` with ``x < y`` and
-    support = triangles the edge closes in the final subgraph.
+    support = triangles the edge closes in the returned subgraph — also
+    when ``max_iter`` cuts the peel short.
 
-    Peel loop: per round, count per-edge triangle support with the
-    degree-ORIENTED wedge join (the triangle_count device — wedge fan-out
-    bounded by O(sqrt(E)) per node, no last-reducer hub), explode each
-    triangle to its three edges, aggregate, drop edges below ``k - 2``,
-    repeat until no edge drops. Each round is two equi-joins + one count
-    agg on edge keys; rounds = peel depth (small in practice). Converged
-    vs truncated lands in ``metrics`` (the kcore/shortest_paths
-    contract). Deterministic: counts and thresholds only.
+    The peel is ``functions/fixpoint.py``'s :func:`semi_naive` in set
+    mode growing the set of deleted ``(x, y)`` edge keys: each round
+    counts per-edge triangle support over the edges not yet deleted with
+    the degree-ORIENTED wedge join (the triangle_count device — wedge
+    fan-out bounded by O(sqrt(E)) per node, no last-reducer hub), and
+    edges below ``k - 2`` join the set. Each round is two equi-joins +
+    one count agg on edge keys; rounds = peel depth (small in practice),
+    the final round that deletes nothing included. Converged vs truncated
+    lands in ``metrics`` (the kcore/shortest_paths contract). The deleted
+    set is built from ``localCheckpoint`` parts (the :func:`semi_naive`
+    storage caveat: no lineage, lost with their executor) that the
+    returned frame reads. Deterministic: counts and thresholds only.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("x"),
-            F.greatest(F.col(src), F.col(dst)).alias("y"),
-        )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     # DEGREE-oriented wedge enumeration (the triangle_count device):
     # every edge orients from its lower-(degree, id) endpoint to the
     # higher, wedges fan out at u over its OUT-edges, and the closure
     # edge (v, w) is oriented v->w by the same total order — each
     # triangle exactly once, out-degree bounded by O(sqrt(E)). Keying
     # the wedge self-join on the lexicographic-low endpoint instead
-    # (the old shape) melts down on a hub that sorts low: ALL its d
-    # edges share one join key -> d^2 wedge candidates per peel round
-    # (measured 2.7x zipf/uniform in tools/bench_skew.py's graph leg).
-    # The orientation only needs A total order, not the current
-    # subgraph's degrees — so it is computed ONCE from the input
-    # degrees and rides along through the peel (the per-round work
-    # stays two equi-joins + one agg, as before).
-    deg = (
-        und.select(F.col("x").alias("n"))
-        .unionByName(und.select(F.col("y").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    # melts down on a hub that sorts low: ALL its d edges share one join
+    # key -> d^2 wedge candidates per peel round (measured 2.7x
+    # zipf/uniform in tools/bench_skew.py's graph leg). The orientation
+    # only needs A total order, not the current subgraph's degrees — so
+    # it is computed ONCE from the input degrees and rides along through
+    # the peel.
+    deg = _degrees(und)
     ed = (
         und.join(deg.select(F.col("n").alias("x"), F.col("d").alias("dx")), "x")
         .join(deg.select(F.col("n").alias("y"), F.col("d").alias("dy")), "y")
@@ -447,86 +473,31 @@ def ktruss(
         F.when(low_first, F.col("dy")).otherwise(F.col("dx")).alias("dv"),
     ).localCheckpoint(eager=True)
 
-    rounds = 0
-    converged = False
-    support = None
-    for _ in range(max_iter):
-        rounds += 1
-        o1, o2 = ek.alias("o1"), ek.alias("o2")
-        wedge = (
-            o1.join(o2, F.col("o1.u") == F.col("o2.u"))
-            .filter(
-                (F.col("o1.dv") < F.col("o2.dv"))
-                | (
-                    (F.col("o1.dv") == F.col("o2.dv"))
-                    & (F.col("o1.v") < F.col("o2.v"))
-                )
-            )
-            .select(
-                F.col("o1.u").alias("a"),
-                F.col("o1.v").alias("b"),
-                F.col("o2.v").alias("c"),
-            )
-        )
-        tri = wedge.join(
-            ek.select(F.col("u").alias("b"), F.col("v").alias("c")),
-            ["b", "c"],
-        ).select("a", "b", "c")
-
-        def und_edge(p, q):
-            return F.struct(
-                F.least(p, q).alias("x"), F.greatest(p, q).alias("y")
-            )
-
-        # one edge row per triangle side via explode — the unionByName-
-        # of-three-projections form re-derived the whole wedge join once
-        # per leg, three executions of the O(wedges) step PER ROUND
-        # (same edge multiset either way)
-        tri_edges = tri.select(
-            F.explode(
-                F.array(
-                    und_edge(F.col("a"), F.col("b")),
-                    und_edge(F.col("a"), F.col("c")),
-                    und_edge(F.col("b"), F.col("c")),
-                )
-            ).alias("_e")
-        ).select(F.col("_e.x").alias("x"), F.col("_e.y").alias("y"))
-        support = tri_edges.groupBy("x", "y").agg(
-            F.count(F.lit(1)).alias("support")
-        )
-        kept = (
-            ek.join(support, ["x", "y"], "left")
-            .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
-            .select("x", "y", "u", "v", "dv")
-            .localCheckpoint(eager=True)
-        )
-        if kept.count() == ek.count():
-            converged = True
-            ek = kept
-            break
-        ek = kept
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["converged"] = converged
-    und = ek.select("x", "y")
-    # final support over the surviving subgraph (k=2 trusses may have
-    # support-0 edges — coalesce keeps them honest)
-    return (
-        und.join(support, ["x", "y"], "left")
-        .select(
+    def with_support(gone: DataFrame) -> DataFrame:
+        # edges in no triangle keep support 0 (a k=2 truss returns them)
+        live = ek.join(gone, ["x", "y"], "left_anti")
+        return live.join(_edge_support(live), ["x", "y"], "left").select(
             "x", "y",
             F.coalesce(F.col("support"), F.lit(0)).cast("long").alias("support"),
         )
-        if support is not None
-        else und.withColumn("support", F.lit(0).cast("long"))
-    )
+
+    def peel(_frontier: DataFrame, gone: DataFrame) -> DataFrame:
+        return with_support(gone).filter(F.col("support") < k - 2).select("x", "y")
+
+    nothing = ek.select("x", "y").limit(0)
+    gone, rounds, converged = semi_naive(nothing, peel, ["x", "y"], max_iter)
+    if metrics is not None:
+        metrics["rounds"] = rounds
+        metrics["converged"] = converged
+    return with_support(gone)
 
 
 def ktruss_oracle_sql(edges_cte: str, k: int, rounds: int) -> str:
     """The identical peel unrolled to ``rounds`` SQL CTE rounds (the
     kcore_oracle_sql device; every round MATERIALIZED for the same
-    fan-out reason). Equals the Spark fixpoint whenever the peel
-    converges within ``rounds`` — pin with the convergence metric."""
+    fan-out reason). Equals ``ktruss(..., max_iter=rounds)``, and so the
+    Spark fixpoint whenever the peel converges within ``rounds`` — pin
+    with the convergence metric."""
     parts = [
         f"""tund0 AS MATERIALIZED (
           SELECT DISTINCT least(src, dst) AS x, greatest(src, dst) AS y
@@ -628,20 +599,9 @@ def node_features(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataF
     from sigraph_spark.operators.linking import connected_components
     from sigraph_spark.operators.pagerank import pagerank
 
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("x"),
-            F.greatest(F.col(src), F.col(dst)).alias("y"),
-        )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("x").alias("node_id"))
-        .unionAll(und.select(F.col("y").alias("node_id")))
-        .groupBy("node_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
+    deg = _degrees(und).select(
+        F.col("n").alias("node_id"), F.col("d").alias("degree")
     )
     tri = triangle_count(edges, src, dst).select(
         F.col("node").alias("node_id"), F.col("triangles").cast("long")
@@ -786,14 +746,7 @@ def link_prediction(
     joins are broadcast-able degree lookups plus one anti-join against
     the existing edge set.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("x"),
-            F.greatest(F.col(src), F.col(dst)).alias("y"),
-        )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     adj = und.select(F.col("x").alias("n"), F.col("y").alias("nb")).unionAll(
         und.select(F.col("y").alias("n"), F.col("x").alias("nb"))
     )
@@ -837,6 +790,14 @@ def link_prediction(
     )
 
 
+def _within(e: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The ``(u, v)`` edges of ``e`` with both endpoints in ``nodes``."""
+    return (
+        e.join(nodes.withColumnRenamed("node", "u"), "u", "left_semi")
+        .join(nodes.withColumnRenamed("node", "v"), "v", "left_semi")
+    )
+
+
 def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -865,14 +826,19 @@ def strongly_connected_components(
       exactly the root's SCC (mutual reachability through the root).
     * Remove finished SCCs, repeat.
 
-    Coloring and sweep are ``functions/fixpoint.py``'s :func:`semi_naive`
-    (min and set mode): frontier-style equi-joins on node keys (uniform
-    after hash partitioning). At 100 TB the edge table should be
-    bucketed on both endpoints so the repeated joins are
-    storage-partitioned. Rounds are data-dependent: pass ``metrics`` and
-    check ``metrics['converged']`` — on truncation (``max_peel`` peels,
-    or a coloring cut at ``max_prop`` rounds) the unassigned remainder
-    is NOT emitted (absent rows, never wrong labels).
+    Trim, coloring and sweep are ``functions/fixpoint.py``'s
+    :func:`semi_naive`: the trim in set mode growing the set of trimmed
+    node ids (each round one in/out-degree test on the remaining nodes
+    not yet trimmed), the coloring in min mode, the sweep in set mode —
+    equi-joins on node keys (uniform after hash partitioning). At
+    100 TB the edge table should be bucketed on both endpoints so the
+    repeated joins are storage-partitioned. Rounds are data-dependent:
+    pass ``metrics`` and check ``metrics['converged']`` — on truncation
+    (``max_peel`` peels, or a coloring cut at ``max_prop`` rounds) the
+    unassigned remainder is NOT emitted (absent rows, never wrong
+    labels). The returned frame reads ``localCheckpoint`` parts (the
+    :func:`semi_naive` storage caveat: no lineage, lost with their
+    executor).
     """
     e_all = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -897,27 +863,21 @@ def strongly_connected_components(
         if remaining.isEmpty():
             converged = True
             break
-        # --- trim loop: peel nodes without both in- and out-edges -----
-        while True:
-            e_rem = (
-                e_all.join(remaining.withColumnRenamed("node", "u"), "u", "left_semi")
-                .join(remaining.withColumnRenamed("node", "v"), "v", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            has_out = e_rem.select(F.col("u").alias("node")).distinct()
-            has_in = e_rem.select(F.col("v").alias("node")).distinct()
+        # --- trim: peel nodes without both in- and out-edges ----------
+        def trim(_frontier: DataFrame, gone: DataFrame) -> DataFrame:
+            live = remaining.join(gone, "node", "left_anti")
+            e_live = _within(e_all, live)
+            has_out = e_live.select(F.col("u").alias("node")).distinct()
+            has_in = e_live.select(F.col("v").alias("node")).distinct()
             nontrivial = has_out.join(has_in, "node", "left_semi")
-            trivial = remaining.join(nontrivial, "node", "left_anti").localCheckpoint(
-                eager=True
-            )
-            if trivial.isEmpty():
-                break
-            assigned = _acc(
-                assigned, trivial.select("node", F.col("node").alias("scc_id"))
-            )
-            remaining = remaining.join(trivial, "node", "left_anti").localCheckpoint(
-                eager=True
-            )
+            return live.join(nontrivial, "node", "left_anti")
+
+        trivial = semi_naive(remaining.limit(0), trim, ["node"], None)[0]
+        assigned = _acc(assigned, trivial.select("node", F.col("node").alias("scc_id")))
+        remaining = remaining.join(trivial, "node", "left_anti").localCheckpoint(
+            eager=False
+        )
+        e_rem = _within(e_all, remaining).localCheckpoint(eager=False)
         if remaining.isEmpty():
             converged = True
             break
@@ -1259,15 +1219,7 @@ def modularity(
     join onto the assignment (x2), one degree agg, one community agg —
     all algebraic.
     """
-    und = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("x"), F.greatest("x", "y").alias("y")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     a = assignment.select(
         F.col(assignment.columns[0]).alias("node"),
         F.col(assignment.columns[1]).alias("c"),

@@ -310,6 +310,32 @@ def _small_star(e: DataFrame) -> DataFrame:
     return attached.unionAll(selfed).filter(F.col("u") != F.col("v")).distinct()
 
 
+def _min_roots(nodes: list, pairs: list) -> dict:
+    """Driver-side union-find: ``{node: component minimum}`` over
+    ``nodes`` and the endpoints of the ``(u, v)`` ``pairs``. Union by
+    min keeps every root its component's minimum (for strings Python
+    order == UTF-8 byte order == Spark order); finds compress paths."""
+    parent = {x: x for x in nodes}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in pairs:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            if rv < ru:
+                ru, rv = rv, ru
+            parent[rv] = ru
+    return {x: find(x) for x in parent}
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "a",
@@ -352,29 +378,7 @@ def connected_components(
         # above the threshold nothing changes. ~100k edges is well
         # under a driver heartbeat of memory; a 100 TB near-dup graph
         # takes the distributed path as before.
-        rows = e.collect()
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for r_ in rows:
-            u, v = r_["u"], r_["v"]
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                # union by min: the smaller id roots the tree, so the
-                # root IS the component minimum at all times
-                if rv < ru:
-                    ru, rv = rv, ru
-                parent[rv] = ru
-        mapping = sorted((x, find(x)) for x in parent)
+        mapping = sorted(_min_roots([], e.collect()).items())
         if metrics is not None:
             metrics["rounds"] = 0
             metrics["edges_final"] = sum(1 for x, c in mapping if x != c)
@@ -505,28 +509,13 @@ def link_entities(
             .select("a", "b").collect()
         )
         ents = [r["entity"] for r in head]
-        parent = {e: e for e in ents}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for r_ in match_rows:
-            ru, rv = find(r_["a"]), find(r_["b"])
-            if ru != rv:
-                if rv < ru:  # min-id roots (Python str order == UTF-8
-                    ru, rv = rv, ru  # byte order == Spark string order)
-                parent[rv] = ru
+        root = _min_roots(ents, match_rows)
         # broadcast hint: a driver-built frame scans as ExistingRDD with
         # unknown stats, which silently demotes the downstream
         # canonicalize joins to sort-merge; the mapping is provably
         # <= small_vocab_max rows, the sanctioned broadcast size
         return F.broadcast(triples.sparkSession.createDataFrame(
-            [(e, find(e)) for e in ents],
+            [(e, root[e]) for e in ents],
             schema="entity string, canonical_id string",
         ))
     pairs = candidate_pairs(vocab)

@@ -51,8 +51,12 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from sigraph_spark.functions.fixpoint import semi_naive
 
 
 def _signature(
@@ -63,6 +67,37 @@ def _signature(
         F.col(pred_col).alias("p"),
         F.col(obj_col).alias("o"),
     ).distinct()
+
+
+def _hot_mids(sig: DataFrame, max_mid_degree: int) -> DataFrame:
+    """Entities ``z`` of ``sig`` that are both an object and a subject,
+    with in- or out-degree above ``max_mid_degree``."""
+    out_deg = sig.groupBy(F.col("s").alias("z")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_out")
+    )
+    in_deg = sig.groupBy(F.col("o").alias("z")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_in")
+    )
+    return (
+        in_deg.join(out_deg, "z")
+        .filter(
+            (F.col("n_in") > max_mid_degree) | (F.col("n_out") > max_mid_degree)
+        )
+        .select("z")
+    )
+
+
+def _chains(left: DataFrame, right: DataFrame, hot: DataFrame) -> DataFrame:
+    """Chain groundings ``(p1, p2, x, y)`` of a ``left`` fact
+    ``p1(x, z)`` into a ``right`` fact ``p2(z, y)`` through a mid ``z``
+    not in ``hot`` (not deduplicated)."""
+    hop_l = left.select(
+        F.col("s").alias("x"), F.col("p").alias("p1"), F.col("o").alias("z")
+    ).join(hot, "z", "left_anti")
+    hop_r = right.select(
+        F.col("s").alias("z"), F.col("p").alias("p2"), F.col("o").alias("y")
+    )
+    return hop_l.join(hop_r, "z").select("p1", "p2", "x", "y")
 
 
 def _chain_bodies(
@@ -76,30 +111,12 @@ def _chain_bodies(
     it); one with in- or out-degree above the cap is dropped from
     grounding and recorded in ``metrics['hot_mids']``.
     """
-    out_deg = sig.groupBy(F.col("s").alias("z")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_out")
-    )
-    in_deg = sig.groupBy(F.col("o").alias("z")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_in")
-    )
-    hot = (
-        in_deg.join(out_deg, "z")
-        .filter(
-            (F.col("n_in") > max_mid_degree) | (F.col("n_out") > max_mid_degree)
-        )
-        .select("z")
-    )
+    hot = _hot_mids(sig, max_mid_degree)
     if metrics is not None:
         sample = [r["z"] for r in hot.orderBy("z").limit(20).collect()]
         metrics["hot_mids"] = len(sample) if len(sample) < 20 else hot.count()
         metrics["hot_mid_sample"] = sample
-    left = sig.select(
-        F.col("s").alias("x"), F.col("p").alias("p1"), F.col("o").alias("z")
-    ).join(hot, "z", "left_anti")
-    right = sig.select(
-        F.col("s").alias("z"), F.col("p").alias("p2"), F.col("o").alias("y")
-    )
-    return left.join(right, "z").select("p1", "p2", "x", "y").distinct()
+    return _chains(sig, sig, hot).distinct()
 
 
 def mine_chain_rules(
@@ -192,22 +209,29 @@ def chase(
 
     Rules stay FIXED (mined once on the asserted KG — the standard
     materialization contract); only the fact set grows. Evaluation is
-    SEMI-NAIVE: after the first round, bodies are grounded only where
-    at least one hop comes from the previous round's delta
-    (``delta x all  UNION  all x delta``), so per-round work is
+    SEMI-NAIVE, on ``functions/fixpoint.py``'s :func:`semi_naive` in set
+    mode keyed on the triple: round r grounds bodies only where a hop
+    comes from round r-1's delta Δ (``Δ x all  UNION  old x Δ``, old =
+    the facts of rounds < r-1, so Δ x Δ is grounded once; round 1's Δ is
+    the whole input and old is empty), so per-round work is
     O(delta-adjacent chains), never a full re-derivation — the same
     delta-driven shape as ``plans/incremental.py``'s crawl appends.
-    Each round's delta is deduplicated against everything known via one
-    anti-join on the triple key and checkpointed, keeping lineage flat.
+    :func:`semi_naive` dedups each round's derivations against
+    everything known with one anti-join on the triple key and
+    checkpoints them, keeping lineage flat; the returned frame reads
+    those ``localCheckpoint`` parts (its storage caveat: no lineage,
+    lost with their executor).
 
     The hot-mid degree guard is re-evaluated on the CURRENT fact set
     each round (degrees only grow, so the hot set only grows — the
     semi-naive and naive groundings stay equivalent under it).
 
     ``metrics`` (optional) records ``rounds`` (per-round new-fact
-    counts) and ``converged`` — mirroring the ``graphalgo`` loop
-    contract, so callers can distinguish a fixpoint from a
-    ``max_rounds`` truncation.
+    counts, the final empty round of a fixpoint included; derived from
+    the output's ``round`` column, one extra Spark job) and
+    ``converged`` — mirroring the ``graphalgo`` loop contract, so
+    callers can distinguish a fixpoint from a ``max_rounds``
+    truncation.
     """
     keep = (
         rules.filter(
@@ -217,70 +241,33 @@ def chase(
         .distinct()
     )
     sig = _signature(facts, subj_col, pred_col, obj_col)
-    current = sig.withColumn("round", F.lit(0)).localCheckpoint(eager=True)
-    delta = current
-    rounds: list[int] = []
-    converged = False
-    for r in range(1, max_rounds + 1):
-        cur_sig = current.select("s", "p", "o")
-        out_deg = cur_sig.groupBy(F.col("s").alias("z")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_out")
-        )
-        in_deg = cur_sig.groupBy(F.col("o").alias("z")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_in")
-        )
-        hot = (
-            in_deg.join(out_deg, "z")
-            .filter(
-                (F.col("n_in") > max_mid_degree)
-                | (F.col("n_out") > max_mid_degree)
-            )
-            .select("z")
-        )
+    round_no = itertools.count(1)
 
-        def hop_l(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.col("s").alias("x"), F.col("p").alias("p1"), F.col("o").alias("z")
-            ).join(hot, "z", "left_anti")
-
-        def hop_r(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.col("s").alias("z"), F.col("p").alias("p2"), F.col("o").alias("y")
-            )
-
-        d_sig = delta.select("s", "p", "o")
-        if r == 1:
-            bodies = hop_l(cur_sig).join(hop_r(cur_sig), "z")
-        else:
-            bodies = hop_l(d_sig).join(hop_r(cur_sig), "z").unionByName(
-                hop_l(cur_sig).join(hop_r(d_sig), "z")
-            )
-        derived = (
-            bodies.select("p1", "p2", "x", "y")
-            .join(F.broadcast(keep), ["p1", "p2"])
+    def step(delta: DataFrame, known: DataFrame) -> DataFrame:
+        r = next(round_no)
+        hot = _hot_mids(known, max_mid_degree)
+        old = known.filter(F.col("round") < r - 1)
+        bodies = _chains(delta, known, hot).unionByName(_chains(old, delta, hot))
+        return (
+            bodies.join(F.broadcast(keep), ["p1", "p2"])
             .select(
                 F.col("x").alias("s"),
                 F.col("head").alias("p"),
                 F.col("y").alias("o"),
             )
             .distinct()
-        )
-        new = (
-            derived.join(current.select("s", "p", "o"), ["s", "p", "o"], "left_anti")
             .withColumn("round", F.lit(r))
-            .localCheckpoint(eager=True)
         )
-        n_new = new.count()
-        rounds.append(n_new)
-        if n_new == 0:
-            converged = True
-            break
-        current = current.unionByName(new).localCheckpoint(eager=True)
-        delta = new
+
+    seed = sig.withColumn("round", F.lit(0))
+    known, rounds, converged = semi_naive(seed, step, ["s", "p", "o"], max_rounds)
     if metrics is not None:
-        metrics["rounds"] = rounds
+        per_round = dict(
+            known.filter(F.col("round") >= 1).groupBy("round").count().collect()
+        )
+        metrics["rounds"] = [per_round.get(r, 0) for r in range(1, rounds + 1)]
         metrics["converged"] = converged
-    return current.select(
+    return known.select(
         F.col("s").alias(subj_col),
         F.col("p").alias(pred_col),
         F.col("o").alias(obj_col),

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from itertools import combinations
 
+import pytest
+
 from sigraph_spark.operators.graphalgo import triangle_count, triangle_total
 
 
@@ -197,32 +199,36 @@ def test_kcore_empty_when_k_exceeds_density(spark):
 def test_kcore_oracle_matches_duckdb(spark):
     """The unrolled-CTE oracle generator equals the Spark fixpoint on a
     fixture with a real peel sequence (guards the MATERIALIZED CTE
-    chain's correctness, not just the gate fixture)."""
+    chain's correctness, not just the gate fixture), and a peel cut at
+    ``max_iter=1`` (h gone, g left: a keeps degree 3) equals the oracle
+    unrolled to one round."""
     import duckdb
 
     from sigraph_spark.operators.graphalgo import kcore, kcore_oracle_sql
 
     edges = [
         ("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
-        ("e", "f"), ("f", "d"), ("d", "c"), ("g", "a"),
+        ("e", "f"), ("f", "d"), ("d", "c"), ("g", "a"), ("h", "g"),
     ]
     e = spark.createDataFrame(edges, "src string, dst string")
-    got = sorted(
-        (r["node_id"], r["core_degree"]) for r in kcore(e, k=2).collect()
-    )
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE edges AS SELECT * FROM (VALUES "
         + ", ".join(f"('{a}', '{b}')" for a, b in edges)
         + ") t(src, dst)"
     )
-    want = sorted(
-        (r[0], r[1])
-        for r in con.execute(
-            "WITH " + kcore_oracle_sql("edges", 2, 8)
-        ).fetchall()
-    )
-    assert got == want
+    for max_iter, rounds in ((30, 8), (1, 1)):
+        got = sorted(
+            (r["node_id"], r["core_degree"])
+            for r in kcore(e, k=2, max_iter=max_iter).collect()
+        )
+        want = sorted(
+            (r[0], r[1])
+            for r in con.execute(
+                "WITH " + kcore_oracle_sql("edges", 2, rounds)
+            ).fetchall()
+        )
+        assert got == want, max_iter
 
 
 # ---------------------------------------------------------------------------
@@ -287,10 +293,13 @@ def test_ktruss_vs_kcore_separation(spark):
     }
 
 
-def test_ktruss_oracle_matches_duckdb(spark):
-    """The unrolled-CTE oracle equals the Spark fixpoint on the cascading
-    fixture (guards the three-way UNION ALL support count, not just the
-    gate fixture)."""
+@pytest.mark.parametrize("rounds", [1, 2, 6])
+def test_ktruss_oracle_matches_duckdb(spark, rounds):
+    """The unrolled-CTE oracle equals the Spark peel cut at the same
+    number of rounds on the cascading fixture (guards the three-way
+    UNION ALL support count, not just the gate fixture). At 1 and 2
+    rounds the peel is cut short, and support must still be counted
+    within the returned subgraph; 6 reaches the fixpoint."""
     import duckdb
 
     from itertools import combinations
@@ -303,7 +312,8 @@ def test_ktruss_oracle_matches_duckdb(spark):
     edges = k5 + strip
     e = spark.createDataFrame(edges, "src string, dst string")
     got = sorted(
-        (r["x"], r["y"], r["support"]) for r in ktruss(e, k=4).collect()
+        (r["x"], r["y"], r["support"])
+        for r in ktruss(e, k=4, max_iter=rounds).collect()
     )
     con = duckdb.connect()
     con.execute(
@@ -314,7 +324,7 @@ def test_ktruss_oracle_matches_duckdb(spark):
     want = sorted(
         tuple(r)
         for r in con.execute(
-            "WITH " + ktruss_oracle_sql("edges", 4, 6)
+            "WITH " + ktruss_oracle_sql("edges", 4, rounds)
         ).fetchall()
     )
     assert got == want
