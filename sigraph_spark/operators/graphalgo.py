@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sigraph_spark.functions.fixpoint import semi_naive
+from sigraph_spark.operators.pagerank import _edge_set, pagerank
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -41,6 +42,32 @@ def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
         )
         .filter(F.col("x") != F.col("y"))
         .distinct()
+    )
+
+
+def _two_way(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every non-self-loop edge, distinct: ``(x, y)``
+    means x hears y's label. Lazily checkpointed — every LPA round joins
+    it."""
+    return (
+        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+        .unionAll(edges.select(F.col(dst).alias("x"), F.col(src).alias("y")))
+        .filter(F.col("x") != F.col("y"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _majority(votes: DataFrame) -> DataFrame:
+    """``(x, label)`` votes -> ``(node, label)``: each node's most-voted
+    label, ties to the lexicographic minimum (the ``(-count, label)``
+    min-struct), so the result is partition-order invariant."""
+    return (
+        votes.groupBy("x", "label")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("x")
+        .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("m"))
+        .select(F.col("x").alias("node"), F.col("m.label").alias("label"))
     )
 
 
@@ -597,7 +624,6 @@ def node_features(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataF
     Returns ``(node_id, degree, triangles, pagerank, component)``.
     """
     from sigraph_spark.operators.linking import connected_components
-    from sigraph_spark.operators.pagerank import pagerank
 
     und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     deg = _degrees(und).select(
@@ -648,28 +674,13 @@ def label_propagation(
 
     Returns ``(node_id, label)`` for every node reached by a label.
     """
-    und = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .unionAll(edges.select(F.col(dst).alias("x"), F.col(src).alias("y")))
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _two_way(edges, src, dst)
     seed_df = seeds.select(
         F.col(seeds.columns[0]).alias("node"), F.col(seeds.columns[1]).alias("label")
     ).localCheckpoint(eager=False)
     labels = seed_df
     for _ in range(rounds):
-        votes = (
-            und.join(labels, und.y == labels.node)
-            .groupBy(F.col("x"), F.col("label"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        best = (
-            votes.groupBy("x")
-            .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("m"))
-            .select(F.col("x").alias("node"), F.col("m.label").alias("label"))
-        )
+        best = _majority(und.join(labels, und.y == labels.node).select("x", "label"))
         labels = seed_df.unionByName(
             best.join(seed_df.select("node"), "node", "left_anti")
         ).localCheckpoint(eager=False)
@@ -1014,37 +1025,16 @@ def communities_lpa(
     at least one edge; community ids are representative node ids (the
     dense-rank renumbering is the caller's presentation concern).
     """
-    und = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .unionAll(edges.select(F.col(dst).alias("x"), F.col(src).alias("y")))
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _two_way(edges, src, dst)
     labels = (
         und.select(F.col("x").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
     )
     for _ in range(rounds):
-        nb = und.join(labels, und.y == labels.node).select(
-            F.col("x"), F.col("label")
-        )
-        votes = (
-            nb.unionAll(labels.select(F.col("node").alias("x"), "label"))
-            .groupBy("x", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            votes.groupBy("x")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("label"))
-                ).alias("m")
-            )
-            .select(F.col("x").alias("node"), F.col("m.label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
+        nb = und.join(labels, und.y == labels.node).select("x", "label")
+        self_vote = labels.select(F.col("node").alias("x"), "label")
+        labels = _majority(nb.unionAll(self_vote)).localCheckpoint(eager=False)
     return labels.select(F.col("node").alias("node_id"), F.col("label").alias("community"))
 
 
@@ -1303,15 +1293,7 @@ def hits(
     normalization projection. Fixed ``rounds``, no convergence polling —
     the pagerank precedent, same reasoning.
     """
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e, nodes = _edge_set(edges, src, dst)
     n = nodes.count()
     if n == 0:
         return nodes.select(
@@ -1326,7 +1308,7 @@ def hits(
     # pure planning for a 6-edge graph at rounds=4) — same device as the
     # chase/shortest_paths loops
     nodes = nodes.localCheckpoint(eager=True)
-    e = e.localCheckpoint(eager=True)
+    e = e.drop("w").localCheckpoint(eager=True)
     hub = nodes.select("node", F.lit(HITS_SCALE // n).cast("long").alias("fp"))
     auth = None
     for _ in range(rounds):

@@ -539,11 +539,7 @@ def link_entities(
     )
 
 
-def canonicalize_triples(
-    triples: DataFrame,
-    mapping: DataFrame,
-    broadcast_max_rows: int | None = None,
-) -> DataFrame:
+def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite triples onto canonical entity ids (provenance columns kept).
 
     Two equi-joins against the mapping. The mapping is the DISTINCT ENTITY
@@ -552,8 +548,6 @@ def canonicalize_triples(
     picks broadcast at runtime when the built side is actually small, and
     falls back to a shuffled hash join otherwise (both sides shuffle on the
     same entity key, so the two joins reuse one exchange of the mapping).
-    Pass ``broadcast_max_rows`` to opt in to a size-guarded explicit hint
-    (one cheap count against a known-tiny vocabulary).
     """
     m_actor = mapping.select(
         F.col("entity").alias("_na"), F.col("canonical_id").alias("subj")
@@ -561,10 +555,6 @@ def canonicalize_triples(
     m_obj = mapping.select(
         F.col("entity").alias("_no"), F.col("canonical_id").alias("obj")
     )
-    if broadcast_max_rows is not None and (
-        mapping.limit(broadcast_max_rows + 1).count() <= broadcast_max_rows
-    ):
-        m_actor, m_obj = F.broadcast(m_actor), F.broadcast(m_obj)
     return (
         triples.withColumn("_na", normalize_entity(F.col("actor")))
         .withColumn("_no", normalize_entity(F.col("object")))

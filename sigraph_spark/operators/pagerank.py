@@ -4,6 +4,12 @@ Graph analytics the reference delegates to its graph store (Neo4j exposes
 centrality over the behavior graph; here the edge relation IS the store),
 re-expressed as iterative DataFrame aggregation.
 
+All four variants run one round loop, :func:`_power_iterate`, over edges
+``(src, dst, w)``: plain PageRank and its warm start pass ``w = 1`` over
+distinct pairs and differ only in their starting ranks; the weighted
+variant passes summed observation counts; personalized PageRank passes a
+per-node teleport that is non-zero only on the seeds.
+
 Design decisions, all scale-motivated:
 
 * **Fixed-point integer arithmetic** (``SCALE = 10^12`` micro-units in
@@ -22,7 +28,8 @@ Design decisions, all scale-motivated:
 * **One shuffle per iteration**: contributions join ranks to edges on
   ``src`` (both sides hash-partitioned on the node key; ranks are the
   small side and broadcast under AQE when they fit), then aggregate on
-  ``dst``. Degrees are computed once, outside the loop.
+  ``dst``. Out-weight sums (degrees, when ``w = 1``) are computed once,
+  outside the loop.
 * **Dangling nodes** (no out-edges) absorb rank: their mass is NOT
   redistributed (the classic simplification; documented so the oracle
   matches). Every node still receives the (1-d)/N teleport term.
@@ -30,12 +37,89 @@ Design decisions, all scale-motivated:
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10**12
+
+
+def _edge_set(
+    edges: DataFrame, src: str, dst: str, weight: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The string-cast edge set ``(src, dst, w)`` and its node list
+    ``(node)``. Without ``weight`` the pairs are distinct and ``w = 1``,
+    so a source's out-weight sum is its out-degree; with it, duplicate
+    pairs pre-aggregate their weights."""
+    e = edges.select(
+        F.col(src).cast("string").alias("src"),
+        F.col(dst).cast("string").alias("dst"),
+        (F.col(weight).cast("long") if weight else F.lit(1)).alias("w"),
+    )
+    e = e.groupBy("src", "dst").agg(F.sum("w").alias("w")) if weight else e.distinct()
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    return e, nodes
+
+
+def _power_iterate(
+    e: DataFrame,
+    base: DataFrame,
+    ranks: DataFrame,
+    damping_pct: int,
+    iterations: int,
+) -> DataFrame:
+    """The one round loop: ``iterations`` rounds of
+    ``rank'(v) = tele(v) + d * sum(rank(u) * w DIV wtot(u)) DIV 100`` over
+    edges ``(src, dst, w)``, from starting ``ranks`` ``(node, rank_fp)``
+    onto every node of ``base`` ``(node, tele)``. Out-weight sums are
+    computed once, outside the loop. Returns ``(node, rank_fp, rank)``."""
+    wsum = e.groupBy("src").agg(F.sum("w").alias("wtot"))
+    for _ in range(iterations):
+        summed = (
+            e.join(ranks.withColumnRenamed("node", "src"), "src")
+            .join(wsum, "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr("(rank_fp * w) DIV wtot")).alias("s"))
+        )
+        ranks = base.join(summed, "node", "left").select(
+            "node",
+            (
+                F.col("tele")
+                + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
+            ).cast("long").alias("rank_fp"),
+        )
+    return ranks.select(
+        "node",
+        "rank_fp",
+        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
+    )
+
+
+def _uniform(
+    e: DataFrame,
+    nodes: DataFrame,
+    damping_pct: int,
+    iterations: int,
+    prior: DataFrame | None = None,
+) -> DataFrame:
+    """Power iteration with the uniform (1-d)/N teleport, starting every
+    node at SCALE // N unless ``prior`` (node, rank_fp) holds its rank."""
+    # one small job; N is needed as an exact literal (an empty graph has
+    # no row that reads it)
+    n = max(nodes.count(), 1)
+    share = F.lit(SCALE // n).cast("long")
+    if prior is None:
+        ranks = nodes.select("node", share.alias("rank_fp"))
+    else:
+        ranks = nodes.join(prior.select("node", "rank_fp"), "node", "left").select(
+            "node", F.coalesce(F.col("rank_fp").cast("long"), share).alias("rank_fp")
+        )
+    tele = F.lit(((100 - damping_pct) * SCALE) // (100 * n)).cast("long")
+    base = nodes.select("node", tele.alias("tele"))
+    return _power_iterate(e, base, ranks, damping_pct, iterations)
 
 
 def pagerank(
@@ -52,56 +136,8 @@ def pagerank(
     ``damping_pct`` is an integer percentage so every multiplication stays
     in exact BIGINT arithmetic end-to-end.
     """
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()  # one small job; N is needed as an exact literal
-    if n == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("rank_fp"),
-            F.lit(0.0).alias("rank"),
-        )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    teleport = ((100 - damping_pct) * SCALE) // (100 * n)
-    ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank_fp"))
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fp DIV deg").alias("c"),
-            )
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(s, 0)) DIV 100"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        # keep lineage bounded: each round's plan is small, but 10+ rounds
-        # of joins still nest — localCheckpoint would truncate on a real
-        # cluster run; at gate scale the nested plan is fine and keeps the
-        # whole computation lazily explainable
-    return ranks.select(
-        "node",
-        "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
-    )
+    e, nodes = _edge_set(edges, src, dst)
+    return _uniform(e, nodes, damping_pct, iterations)
 
 
 def pagerank_weighted(
@@ -116,59 +152,20 @@ def pagerank_weighted(
     (``rank * w DIV wsum(src)``) instead of uniformly over distinct
     out-edges — the KG edge table carries observation counts as
     weights, and a heavily-evidenced edge SHOULD pull more rank.
+    Weights are positive observation counts: a (src, dst) pair whose
+    summed weight is <= 0 raises ``ValueError`` (it would carry negative
+    mass, or divide by a zero out-weight).
     Same exact fixed-point BIGINT contract as :func:`pagerank`
     (duplicate (src, dst) pairs pre-aggregate their weights; overflow
     headroom: rank_fp <= SCALE and BIGINT gives ~9e18, so per-edge
     weights up to ~9e6 are safe — the loud check below enforces it)."""
-    e = (
-        edges.select(
-            F.col(src).cast("string").alias("src"),
-            F.col(dst).cast("string").alias("dst"),
-            F.col(weight).cast("long").alias("w"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-    )
-    mx = e.agg(F.max("w").alias("m")).collect()[0]["m"]
-    if mx is not None and mx > 9_000_000:
-        raise ValueError(f"edge weight {mx} exceeds fixed-point headroom")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            "node", F.lit(0).cast("long").alias("rank_fp"),
-            F.lit(0.0).alias("rank"))
-    wsum = e.groupBy("src").agg(F.sum("w").alias("wtot"))
-    teleport = ((100 - damping_pct) * SCALE) // (100 * n)
-    ranks = nodes.select("node",
-                         F.lit(SCALE // n).cast("long").alias("rank_fp"))
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(wsum, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(rank_fp * w) DIV wtot").alias("c"),
-            )
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (F.lit(teleport)
-                 + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100"))
-                .cast("long").alias("rank_fp"),
-            )
-        )
-    return ranks.select(
-        "node", "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
-    )
+    e, nodes = _edge_set(edges, src, dst, weight)
+    lo, hi = e.agg(F.min("w"), F.max("w")).collect()[0]
+    if hi is not None and hi > 9_000_000:
+        raise ValueError(f"edge weight {hi} exceeds fixed-point headroom")
+    if lo is not None and lo <= 0:
+        raise ValueError(f"edge weight {lo} is not positive")
+    return _uniform(e, nodes, damping_pct, iterations)
 
 
 def pagerank_weighted_oracle_sql(
@@ -244,58 +241,8 @@ def pagerank_resume(
     engines and partitionings, so the oracle replays both phases
     exactly. One shuffle per round, degrees computed once.
     """
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("rank_fp"),
-            F.lit(0.0).alias("rank"),
-        )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    teleport = ((100 - damping_pct) * SCALE) // (100 * n)
-    ranks = (
-        nodes.join(prior_ranks.select("node", "rank_fp"), "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("rank_fp"), F.lit(SCALE // n))
-            .cast("long")
-            .alias("rank_fp"),
-        )
-    )
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fp DIV deg").alias("c"),
-            )
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-    return ranks.select(
-        "node",
-        "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
-    )
+    e, nodes = _edge_set(edges, src, dst)
+    return _uniform(e, nodes, damping_pct, iterations, prior_ranks)
 
 
 def pagerank_oracle_sql(
@@ -389,54 +336,23 @@ def personalized_pagerank(
     per round; the seed marker rides the node list as a broadcast-size
     column, adding no extra exchange.
     """
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e, nodes = _edge_set(edges, src, dst)
     seed = seeds.select(
         F.col(seeds.columns[0]).cast("string").alias("node")
     ).distinct().join(nodes, "node")  # seeds outside the graph carry no mass
     ns = seed.count()
     if ns == 0:
         raise ValueError("personalized_pagerank needs at least one seed in the graph")
-    marked = nodes.join(
-        seed.withColumn("_is_seed", F.lit(True)), "node", "left"
-    ).select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
-    teleport = F.when(
-        F.col("_is_seed"), F.lit(((100 - damping_pct) * SCALE) // (100 * ns))
-    ).otherwise(F.lit(0)).cast("long")
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    marked = nodes.join(seed.withColumn("_is_seed", F.lit(True)), "node", "left")
+    tele = ((100 - damping_pct) * SCALE) // (100 * ns)
+    base = marked.select(
+        "node", F.when(F.col("_is_seed"), tele).otherwise(0).cast("long").alias("tele")
+    )
     ranks = marked.select(
         "node",
-        F.when(F.col("_is_seed"), F.lit(SCALE // ns))
-        .otherwise(F.lit(0)).cast("long").alias("rank_fp"),
+        F.when(F.col("_is_seed"), SCALE // ns).otherwise(0).cast("long").alias("rank_fp"),
     )
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(F.col("dst").alias("node"), F.expr("rank_fp DIV deg").alias("c"))
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            marked.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    teleport
-                    + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-    return ranks.select(
-        "node", "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
-    )
+    return _power_iterate(e, base, ranks, damping_pct, iterations)
 
 
 def ppr_oracle_sql(

@@ -379,6 +379,49 @@ def test_label_propagation_tie_breaks_lexicographically(spark):
     assert got["m"] == "A"  # 1-1 tie -> lexicographic minimum
 
 
+# a self-loop and a duplicate pair exercise the shared two-way edge set
+_LPA_EDGES = [
+    ("a1", "m"), ("a2", "m"), ("b1", "m"), ("a1", "a2"), ("a1", "b1"),
+    ("a2", "b1"), ("m", "far"), ("far", "x"), ("m", "m"), ("m", "a1"),
+]
+
+
+def _duck_edges(edges):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE edges AS SELECT * FROM (VALUES %s) t(src, dst)"
+                % ", ".join("('%s','%s')" % p for p in edges))
+    return con
+
+
+def test_label_propagation_matches_duckdb_oracle(spark):
+    from sigraph_spark.operators.graphalgo import (
+        label_propagation, label_propagation_oracle_sql,
+    )
+
+    seeds = [("a1", "A"), ("b1", "B"), ("x", "B")]
+    con = _duck_edges(_LPA_EDGES)
+    con.execute("CREATE TABLE seeds AS SELECT * FROM (VALUES %s) t(node, label)"
+                % ", ".join("('%s','%s')" % p for p in seeds))
+    want = set(con.execute(
+        "WITH " + label_propagation_oracle_sql("edges", "seeds", 3)).fetchall())
+    e = spark.createDataFrame(_LPA_EDGES, "src string, dst string")
+    s = spark.createDataFrame(seeds, "node string, label string")
+    assert {tuple(r) for r in label_propagation(e, s, rounds=3).collect()} == want
+
+
+def test_communities_matches_duckdb_oracle(spark):
+    from sigraph_spark.operators.graphalgo import (
+        communities_lpa, communities_oracle_sql,
+    )
+
+    want = set(_duck_edges(_LPA_EDGES).execute(
+        "WITH " + communities_oracle_sql("edges", 4)).fetchall())
+    e = spark.createDataFrame(_LPA_EDGES, "src string, dst string")
+    assert {tuple(r) for r in communities_lpa(e, rounds=4).collect()} == want
+
+
 def _lpa_python(edges, rounds):
     und = set()
     for s, d in edges:

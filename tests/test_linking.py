@@ -196,9 +196,8 @@ def test_link_entities_merges_variants(spark):
 
 def test_canonicalize_no_forced_broadcast(spark):
     """The entity mapping is the distinct vocabulary — billions of rows at
-    web scale. The default plan must carry NO explicit broadcast hint
-    (AQE decides at runtime); the guarded opt-in applies it only under the
-    row cap (VERDICT r1 wrong-item 1)."""
+    web scale. The plan must carry NO explicit broadcast hint (AQE decides
+    at runtime; VERDICT r1 wrong-item 1)."""
     triples = spark.createDataFrame(
         [("u1", "A", "launch", "x.exe")],
         "url string, actor string, verb string, object string",
@@ -208,20 +207,6 @@ def test_canonicalize_no_forced_broadcast(spark):
     )
     plan_default = canonicalize_triples(triples, mapping)._jdf.queryExecution().optimizedPlan().toString()
     assert "UnresolvedHint" not in plan_default
-    # the optimized logical plan keeps an explicit hint only when forced:
-    plan_forced = canonicalize_triples(
-        triples, mapping, broadcast_max_rows=10
-    )._jdf.queryExecution().logical().toString()
-    assert "broadcast" in plan_forced.lower()
-    # over the cap -> guard refuses the hint
-    plan_guarded = canonicalize_triples(
-        triples, mapping, broadcast_max_rows=1
-    )._jdf.queryExecution().logical().toString()
-    assert "broadcast" not in plan_guarded.lower()
-    # results identical either way
-    a = canonicalize_triples(triples, mapping).collect()
-    b = canonicalize_triples(triples, mapping, broadcast_max_rows=10).collect()
-    assert a == b
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,18 @@ bit-identity with the unrolled-CTE SQL restatement."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
-from sigraph_spark.operators.pagerank import SCALE, pagerank, pagerank_oracle_sql
+from sigraph_spark.operators.pagerank import (
+    SCALE,
+    pagerank,
+    pagerank_oracle_sql,
+    pagerank_resume,
+    pagerank_weighted,
+    pagerank_weighted_oracle_sql,
+    personalized_pagerank,
+    ppr_oracle_sql,
+)
 
 EDGES = [
     ("a", "b"),
@@ -15,6 +25,7 @@ EDGES = [
     ("d", "c"),  # d is a source-only node (gets teleport share only)
     ("c", "a"),  # duplicate edge — must collapse
 ]
+WEIGHTS = [3, 1, 2, 5, 4, 6]  # per EDGES row; the duplicate (c, a) sums to 11
 
 
 def _edges_df(spark, partitions=1):
@@ -53,18 +64,37 @@ def test_pagerank_partition_order_invariant(spark):
     assert a == b
 
 
-def test_pagerank_matches_duckdb_oracle(spark):
+@pytest.mark.parametrize(
+    "variant",
+    ["pagerank", "pagerank_weighted", "pagerank_resume", "personalized_pagerank"],
+)
+def test_pagerank_matches_duckdb_oracle(spark, variant):
+    """Every variant equals its unrolled-CTE oracle bit for bit. The resume
+    case chains a cold block over the graph without d's edge into a warm
+    block over the full graph, so d starts at the uniform share."""
+    rows = [(s, d, w) for (s, d), w in zip(EDGES, WEIGHTS)]
     con = duckdb.connect()
-    con.execute("CREATE TABLE edges AS SELECT * FROM (VALUES %s) t(src, dst)"
-                % ", ".join("('%s','%s')" % p for p in EDGES))
-    want = {
-        r[0]: (r[1], r[2])
-        for r in con.execute("WITH " + pagerank_oracle_sql("edges")).fetchall()
-    }
-    got = {
-        r["node"]: (r["rank_fp"], r["rank"])
-        for r in pagerank(_edges_df(spark)).collect()
-    }
+    con.execute("CREATE TABLE edges AS SELECT * FROM (VALUES %s) t(src, dst, weight)"
+                % ", ".join("('%s','%s',%d)" % r for r in rows))
+    con.execute("CREATE TABLE base_e AS SELECT * FROM edges WHERE src <> 'd'")
+    e = spark.createDataFrame(rows, "src string, dst string, weight long")
+    if variant == "pagerank":
+        sql, out = pagerank_oracle_sql("edges"), pagerank(e)
+    elif variant == "pagerank_weighted":
+        sql, out = pagerank_weighted_oracle_sql("edges"), pagerank_weighted(e)
+    elif variant == "pagerank_resume":
+        sql = (
+            pagerank_oracle_sql("base_e", prefix="pb_", final_select=False) + ","
+            + pagerank_oracle_sql("edges", prefix="pw_", iterations=3, init_rel="pb_r5")
+        )
+        prior = pagerank(e.filter("src <> 'd'")).select("node", "rank_fp")
+        out = pagerank_resume(e, prior, iterations=3)
+    else:
+        sql = ppr_oracle_sql("edges", "node IN ('a', 'd')")
+        seeds = spark.createDataFrame([("a",), ("d",)], "node string")
+        out = personalized_pagerank(e, seeds)
+    want = {r[0]: (r[1], r[2]) for r in con.execute("WITH " + sql).fetchall()}
+    got = {r["node"]: (r["rank_fp"], r["rank"]) for r in out.collect()}
     assert got == want
 
 
@@ -202,3 +232,16 @@ def test_weighted_headroom_raises(spark):
         [("a", "b", 10_000_000)], "src string, dst string, weight long")
     with _pytest.raises(ValueError, match="headroom"):
         pagerank_weighted(edges)
+
+
+def test_weighted_nonpositive_raises(spark):
+    """Weights are positive observation counts. A negative pair weight would
+    hand c negative mass; a source whose weights sum to 0 would divide by
+    zero."""
+    for rows in (
+        [("a", "b", 2), ("a", "c", -1)],
+        [("a", "b", 1), ("a", "b", -1), ("b", "a", 1)],
+    ):
+        edges = spark.createDataFrame(rows, "src string, dst string, weight long")
+        with pytest.raises(ValueError, match="not positive"):
+            pagerank_weighted(edges)

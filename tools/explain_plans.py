@@ -192,6 +192,12 @@ def main() -> int:
         E.q_pagerank(spark, sf_dir),
         forbid=("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"),
     )
+    # the weighted variant runs the same power iteration
+    check(
+        "pagerank_weighted",
+        E.q_pagerank_weighted(spark, sf_dir),
+        forbid=("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"),
+    )
 
     # domain stats: algebraic aggregate -> map-side partial_count/sum
     # absorbs the power-law host head before the exchange
@@ -354,6 +360,12 @@ def main() -> int:
     check(
         "communities_round",
         communities_lpa(_pedges.select("src", "dst"), rounds=1),
+        forbid=("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"),
+    )
+    # seeded LPA shares the two-way edge set and the majority vote
+    check(
+        "label_propagation",
+        E.q_label_propagation(spark, sf_dir),
         forbid=("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"),
     )
 
