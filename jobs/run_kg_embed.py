@@ -17,8 +17,10 @@ rounds — training is exact-integer, so rerunning on unchanged facts
 reproduces the long cold run bit-for-bit, and an invocation that finds
 the target already reached prints ``{"resume_noop": true}`` and exits
 without touching state (replay-safe, the run_crawl_delta contract).
-State commits via tmp-dir + atomic rename; the manifest (rounds_done,
-dim, per-partition lineage) rides inside it.
+State commits through the ``plans/ledger.py`` state ledger: the vectors
+land in ``embeddings/v{N}/data``, then one atomic ``_state.json`` commit
+(carrying rounds_done, dim, lr) makes them live, so a crash at any point
+leaves the previous complete vectors and round count in place.
 
 After training, every ~eval-rate'th fact becomes a completion probe
 (filtered ranking) and the JSON line reports MRR / Hits@1 / Hits@10.
@@ -29,7 +31,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 import time
 
@@ -60,6 +61,7 @@ def main(argv: list[str] | None = None) -> int:
     from sigraph_spark.operators.transe import (
         transe_eval_summary, transe_rank_tails, transe_train,
     )
+    from sigraph_spark.plans import ledger
     from sigraph_spark.session import build_session
 
     spark = build_session(
@@ -90,18 +92,17 @@ def main(argv: list[str] | None = None) -> int:
     facts = facts.localCheckpoint(eager=True)
 
     state_dir = os.path.join(args.workdir, "embeddings")
-    manifest_path = os.path.join(state_dir, "_manifest.json")
-    prior, rounds_done = None, 0
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            m = json.load(f)
-        if m.get("dim") != args.dim:
+    st = ledger.load(state_dir, {"version": 0, "rounds_done": 0})
+    ledger.gc(state_dir, [os.path.join(f"v{st['version']}", "data")])
+    prior, rounds_done = None, st["rounds_done"]
+    if st["version"]:
+        if st["dim"] != args.dim:
             raise SystemExit(
-                f"stored embeddings have dim={m.get('dim')}, "
+                f"stored embeddings have dim={st['dim']}, "
                 f"requested {args.dim} — pick a new --workdir"
             )
-        rounds_done = int(m.get("rounds_done", 0))
-        prior = spark.read.parquet(os.path.join(state_dir, "data"))
+        prior = spark.read.parquet(
+            os.path.join(state_dir, f"v{st['version']}", "data"))
 
     if rounds_done >= args.total_rounds:
         print(json.dumps({
@@ -119,19 +120,16 @@ def main(argv: list[str] | None = None) -> int:
         init_emb=prior, round_offset=rounds_done, metrics=metrics,
     ).localCheckpoint(eager=True)
 
-    tmp = state_dir + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    emb.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-    with open(os.path.join(tmp, "_manifest.json"), "w") as f:
-        json.dump({
-            "dim": args.dim,
-            "rounds_done": args.total_rounds,
-            "lr": args.lr,
-            "violations_this_run": metrics.get("violations", []),
-        }, f, indent=1)
-    shutil.rmtree(state_dir, ignore_errors=True)
-    os.replace(tmp, state_dir)
+    rel = os.path.join(f"v{st['version'] + 1}", "data")
+    emb.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+    ledger.commit(state_dir, {
+        "version": st["version"] + 1,
+        "dim": args.dim,
+        "rounds_done": args.total_rounds,
+        "lr": args.lr,
+        "violations_this_run": metrics.get("violations", []),
+    })
+    ledger.gc(state_dir, [rel])
 
     report = {
         "entities": emb.filter(F.col("kind") == "e")

@@ -566,6 +566,34 @@ def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     )
 
 
+def canonical_edges(
+    triples: DataFrame, mapping: DataFrame, docs: DataFrame
+) -> DataFrame:
+    """The canonical edge table of ``triples``: one row per (subj,
+    predicate=verb, obj), ``weight`` = its triple count, and provenance
+    props last-writer-wins by (warc_ts, url) from ``docs`` —
+    deterministic under reshuffle. The batch S4 stage, the crawl-delta
+    append and the streaming sink all build edges here."""
+    canon = canonicalize_triples(triples, mapping).join(
+        docs.select("url", "warc_ts"), "url"
+    )
+    return (
+        canon.groupBy(
+            F.col("subj"), F.col("verb").alias("predicate"), F.col("obj")
+        )
+        .agg(
+            F.max(F.struct("warc_ts", "url")).alias("_lw"),
+            F.count(F.lit(1)).alias("weight"),
+        )
+        .select(
+            "subj", "predicate", "obj",
+            F.col("_lw.warc_ts").alias("start_time"),
+            F.col("_lw.url").alias("provenance_url"),
+            "weight",
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
 # Incremental entity linking (crawl-delta vs stored state)
 # ---------------------------------------------------------------------------

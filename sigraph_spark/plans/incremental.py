@@ -18,63 +18,55 @@ production Iceberg MERGEs (plans/iceberg_sql.py):
   nothing is ever rewritten (Iceberg twin: insert-if-absent MERGE);
 * ``shingle_df`` appends per-delta count INCREMENTS; the read view sums
   per shingle, and parts compact into one when they exceed
-  ``COMPACT_PARTS`` (amortized; Iceberg twin: ``_df = t._df + s._df``);
+  ``ledger.COMPACT_PARTS`` (amortized; Iceberg twin: ``_df = t._df + s._df``);
 * ``edges`` uses the versioned hash-bucket scheme of streaming/ingest.py:
   a delta rewrites ONLY the buckets its triples touch; untouched bucket
   files are never rewritten.
 
-Durability: all new part/bucket directories land first, then ONE atomic
-rename of ``_state.json`` — which carries the applied-delta ledger —
-makes everything live together. A crash before the swap leaves the old
-state fully intact (orphan dirs are garbage-collected on the next apply);
-a redelivered delta no-ops on the ledger, so weights can never
-double-count.
+Durability: the ``plans/ledger.py`` protocol — all new part/bucket
+directories land first, then ONE atomic commit of ``_state.json``, which
+carries the applied-delta ledger, makes everything live together. A
+crash before the commit leaves the old state fully intact (orphan dirs
+are garbage-collected on the next apply); a redelivered delta no-ops on
+the ledger, so weights can never double-count.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_STATE = "_state.json"
-COMPACT_PARTS = 32
+from sigraph_spark.plans import ledger
 
-# the edge combiner, bucket hash, and bucket count are SHARED with the
-# streaming sink — one definition, so the "same semilattice combiner"
-# contract between the two incremental paths is structural, not parallel
-# copies that could drift
-from sigraph_spark.streaming.ingest import (  # noqa: E402
-    N_BUCKETS as N_EDGE_BUCKETS,
-    _bucket_col as _edge_bucket_col,
-    _merge_edges,
-)
+# the touched-bucket merge (edge combiner, bucket hash and bucket count) is
+# SHARED with the streaming sink — one definition, so the "same semilattice
+# combiner" contract between the two incremental paths is structural, not
+# parallel copies that could drift
+from sigraph_spark.streaming.ingest import merge_buckets
 
 
-def _read_state(workdir: str) -> dict:
-    p = os.path.join(workdir, _STATE)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {
+def _state(workdir: str) -> dict:
+    return ledger.load(workdir, {
         "applied": [],
         "version": 0,
         "n_entities": 0,
         "parts": {"mapping": [], "band_index": [], "shingle_df": []},
         "edge_buckets": {},
-    }
+        "edge_bucket_rows": {},
+    })
 
 
-def _read_parts(
-    spark: SparkSession, workdir: str, st: dict, name: str
-) -> DataFrame | None:
-    rels = st["parts"][name]
-    if not rels:
-        return None
-    return spark.read.parquet(*[os.path.join(workdir, r) for r in rels])
+def _sum_df(df: DataFrame) -> DataFrame:
+    """shingle_df's read view: sum the appended per-shingle increments."""
+    return df.groupBy("sh").agg(F.sum("_df").alias("_df"))
+
+
+def _live(st: dict) -> list[str]:
+    return [r for rels in st["parts"].values() for r in rels] + list(
+        st["edge_buckets"].values()
+    )
 
 
 def crawl_state_tables(
@@ -83,52 +75,19 @@ def crawl_state_tables(
     """Current committed state: {edges, mapping, band_index, shingle_df}.
     shingle_df sums its appended increments; edges unions the live bucket
     versions."""
-    st = _read_state(workdir)
-    out: dict[str, DataFrame | None] = {
-        "mapping": _read_parts(spark, workdir, st, "mapping"),
-        "band_index": _read_parts(spark, workdir, st, "band_index"),
+    st = _state(workdir)
+
+    def read(rels):
+        return spark.read.parquet(
+            *[os.path.join(workdir, r) for r in rels]) if rels else None
+
+    df = read(st["parts"]["shingle_df"])
+    return {
+        "mapping": read(st["parts"]["mapping"]),
+        "band_index": read(st["parts"]["band_index"]),
+        "shingle_df": _sum_df(df) if df is not None else None,
+        "edges": read(sorted(st["edge_buckets"].values())),
     }
-    df = _read_parts(spark, workdir, st, "shingle_df")
-    out["shingle_df"] = (
-        df.groupBy("sh").agg(F.sum("_df").alias("_df")) if df is not None else None
-    )
-    bucket_rels = sorted(st["edge_buckets"].values())
-    out["edges"] = (
-        spark.read.parquet(*[os.path.join(workdir, r) for r in bucket_rels])
-        if bucket_rels
-        else None
-    )
-    return out
-
-
-def _gc(workdir: str, st: dict) -> None:
-    """Remove version dirs/subpaths no longer referenced by the committed
-    state (superseded edge buckets, compacted-away parts, crash orphans).
-    Single-writer discipline."""
-    live = {os.path.normpath(r) for rels in st["parts"].values() for r in rels}
-    live |= {os.path.normpath(r) for r in st["edge_buckets"].values()}
-    for vname in os.listdir(workdir):
-        vdir = os.path.join(workdir, vname)
-        if not (vname.startswith("v") and os.path.isdir(vdir)):
-            continue
-        for sub in os.listdir(vdir):
-            subp = os.path.join(vdir, sub)
-            rel = os.path.normpath(os.path.join(vname, sub))
-            if not os.path.isdir(subp):
-                continue
-            if sub.startswith("edges"):
-                # edges dir contains _bucket=K children
-                for b in os.listdir(subp):
-                    brel = os.path.normpath(os.path.join(rel, b))
-                    bp = os.path.join(subp, b)
-                    if os.path.isdir(bp) and brel not in live:
-                        shutil.rmtree(bp, ignore_errors=True)
-                if not any(n.startswith("_bucket=") for n in os.listdir(subp)):
-                    shutil.rmtree(subp, ignore_errors=True)
-            elif rel not in live:
-                shutil.rmtree(subp, ignore_errors=True)
-        if not os.listdir(vdir):
-            shutil.rmtree(vdir, ignore_errors=True)
 
 
 def apply_crawl_delta(
@@ -143,16 +102,15 @@ def apply_crawl_delta(
     when the delta was already applied (replay no-op)."""
     from sigraph_spark.operators.extract import extract_pages
     from sigraph_spark.operators.linking import (
-        LinkState, canonicalize_triples, empty_link_state,
+        LinkState, canonical_edges, empty_link_state,
         incremental_link_entities,
     )
     from sigraph_spark.operators.triples import triples_from_docs
 
-    st = _read_state(workdir)
+    st = _state(workdir)
     # GC BEFORE the ledger check: crash orphans from an interrupted apply
     # must be collected even when every subsequent invocation is a replay
-    if os.path.isdir(workdir):
-        _gc(workdir, st)
+    ledger.gc(workdir, _live(st))
     if delta_id in st["applied"]:
         return None
 
@@ -173,93 +131,47 @@ def apply_crawl_delta(
     )
     mapping_total, new_state = incremental_link_entities(triples, prev)
 
-    canon = canonicalize_triples(triples, mapping_total).join(
-        docs.select("url", "warc_ts"), "url"
-    )
-    edge_delta = (
-        canon.groupBy(F.col("subj"), F.col("verb").alias("predicate"), F.col("obj"))
-        .agg(
-            F.max(F.struct("warc_ts", "url")).alias("_lw"),
-            F.count(F.lit(1)).alias("weight"),
-        )
-        .select(
-            "subj", "predicate", "obj",
-            F.col("_lw.warc_ts").alias("start_time"),
-            F.col("_lw.url").alias("provenance_url"),
-            "weight",
-        )
-        .withColumn("_bucket", _edge_bucket_col())
-        .localCheckpoint(eager=True)
-    )
-
     ver = st["version"] + 1
     vname = f"v{ver}"
-    shutil.rmtree(os.path.join(workdir, vname), ignore_errors=True)  # crashed try
 
     # 1) append-only linking parts: ONLY the delta rows are written
-    new_parts = {k: list(v) for k, v in st["parts"].items()}
-    for name, df in (
-        ("mapping", new_state.delta_mapping),
-        ("band_index", new_state.delta_bands),
-        ("shingle_df", new_state.delta_df),
-    ):
-        rel = os.path.join(vname, name)
-        df.write.mode("overwrite").parquet(os.path.join(workdir, rel))
-        new_parts[name].append(rel)
-        # amortized compaction: fold the accumulated parts into one
-        if len(new_parts[name]) > COMPACT_PARTS:
-            total = spark.read.parquet(
-                *[os.path.join(workdir, r) for r in new_parts[name]]
-            )
-            if name == "shingle_df":
-                total = total.groupBy("sh").agg(F.sum("_df").alias("_df"))
-            crel = os.path.join(vname, name + "_compact")
-            total.write.mode("overwrite").parquet(os.path.join(workdir, crel))
-            new_parts[name] = [crel]
+    parts = {
+        name: ledger.append_part(
+            workdir, st["parts"][name], os.path.join(vname, name), df,
+            _sum_df if name == "shingle_df" else None,
+        )
+        for name, df in (
+            ("mapping", new_state.delta_mapping),
+            ("band_index", new_state.delta_bands),
+            ("shingle_df", new_state.delta_df),
+        )
+    }
 
     # 2) bucketed edge merge: only delta-touched buckets rewrite
-    touched = sorted(
-        r["_bucket"] for r in edge_delta.select("_bucket").distinct().collect()
+    buckets, merged = merge_buckets(
+        workdir, st["edge_buckets"],
+        canonical_edges(triples, mapping_total, docs),
+        os.path.join(vname, "edges"),
     )
-    new_buckets = dict(st["edge_buckets"])
-    bucket_rows = dict(st.get("edge_bucket_rows", {}))
-    if touched:
-        existing_paths = [
-            os.path.join(workdir, st["edge_buckets"][str(b)])
-            for b in touched
-            if str(b) in st["edge_buckets"]
-        ]
-        existing = (
-            spark.read.parquet(*existing_paths) if existing_paths else None
-        )
-        merged = _merge_edges(existing, edge_delta.drop("_bucket")).withColumn(
-            "_bucket", _edge_bucket_col()
-        ).localCheckpoint(eager=True)
-        edir = os.path.join(workdir, vname, "edges")
-        merged.write.partitionBy("_bucket").mode("overwrite").parquet(edir)
-        # per-bucket row counts ride in the state so the report's
-        # edges_total stays O(touched), never a full-table scan
-        for r in merged.groupBy("_bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect():
-            bucket_rows[str(r["_bucket"])] = int(r["n"])
-        for b in touched:
-            new_buckets[str(b)] = os.path.join(vname, "edges", f"_bucket={b}")
+    # per-bucket row counts ride in the state so the report's edges_total
+    # stays O(touched), never a full-table scan
+    touched_rows = {} if merged is None else {
+        str(r["_bucket"]): int(r["n"])
+        for r in merged.groupBy("_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    bucket_rows = {**st["edge_bucket_rows"], **touched_rows}
 
-    # 3) THE commit: one atomic state swap (ledger + all references)
+    # 3) THE commit: one ledger commit (ledger + all references)
     new_st = {
         "applied": sorted({*st["applied"], delta_id}),
         "version": ver,
         "n_entities": new_state.n_entities,
-        "parts": new_parts,
-        "edge_buckets": new_buckets,
+        "parts": parts,
+        "edge_buckets": buckets,
         "edge_bucket_rows": bucket_rows,
     }
-    tmp = os.path.join(workdir, _STATE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_st, f, indent=1)
-    os.replace(tmp, os.path.join(workdir, _STATE))
-    _gc(workdir, new_st)
+    ledger.commit(workdir, new_st)
+    ledger.gc(workdir, _live(new_st))
 
     return {
         "delta_id": delta_id,
@@ -270,6 +182,6 @@ def apply_crawl_delta(
         # summed from the per-bucket counts in the state — O(buckets), no
         # full-table scan in the report path
         "edges_total": sum(bucket_rows.values()),
-        "touched_buckets": len(touched),
-        "parts": {k: len(v) for k, v in new_parts.items()},
+        "touched_buckets": len(touched_rows),
+        "parts": {k: len(v) for k, v in parts.items()},
     }

@@ -7,15 +7,17 @@ a versioned workdir holding
 - append-only PERCEPTUAL-HASH INDEX parts (the ``audio_index`` /
   ``image_index`` relation with a ``plane`` tag) — each delta's
   payloads are decoded exactly once, and prior parts are never
-  rewritten (amortized compaction folds them past ``COMPACT_PARTS``);
+  rewritten (amortized compaction folds them past
+  ``ledger.COMPACT_PARTS``);
 - append-only PAIR parts — each delta contributes only pairs with a
   new endpoint (``incremental_image_candidates`` /
   ``incremental_audio_candidates`` probing the stored index), which
   by the band-decomposition guarantee reconstructs exactly the
   from-scratch pair set;
-- a JSON ledger: one atomic ``_state.json`` rename commits each
-  delta; a replayed ``delta_id`` is a no-op; interrupted applies
-  leave orphan ``v{N}`` dirs that GC collects on the next call.
+- the ``plans/ledger.py`` state ledger: one atomic ``_state.json``
+  commit per delta; a replayed ``delta_id`` is a no-op; interrupted
+  applies leave orphan ``v{N}`` dirs that its GC collects on the next
+  call.
 
 The keeplist is NOT stored — it is derived (connected components over
 the accumulated pairs, O(duplicates) not O(corpus)) via
@@ -24,42 +26,32 @@ the accumulated pairs, O(duplicates) not O(corpus)) via
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_STATE = "_state.json"
-COMPACT_PARTS = 32
+from sigraph_spark.plans import ledger
 
 __all__ = ["apply_media_delta", "media_state_tables",
            "media_delta_keeplist"]
 
 
-def _read_state(workdir: str) -> dict:
-    p = os.path.join(workdir, _STATE)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"applied": [], "version": 0,
-            "parts": {"index": [], "pairs": [], "ids": []}}
+def _state(workdir: str) -> dict:
+    return ledger.load(workdir, {
+        "applied": [], "version": 0,
+        "parts": {"index": [], "pairs": [], "ids": []},
+    })
 
 
-def _gc(workdir: str, st: dict) -> None:
-    """Remove v* dirs not referenced by the committed state (crash
-    orphans from interrupted applies)."""
-    live = {r.split(os.sep)[0] for v in st["parts"].values() for r in v}
-    for d in os.listdir(workdir):
-        if d.startswith("v") and d[1:].isdigit() and d not in live:
-            shutil.rmtree(os.path.join(workdir, d), ignore_errors=True)
+def _live(st: dict) -> list[str]:
+    return [r for rels in st["parts"].values() for r in rels]
 
 
 def media_state_tables(spark: SparkSession, workdir: str) -> dict:
     """Read the accumulated state -> {'index': df|None, 'pairs':
     df|None, 'ids': df|None}."""
-    st = _read_state(workdir)
+    st = _state(workdir)
     out = {}
     for name in ("index", "pairs", "ids"):
         rels = st["parts"][name]
@@ -88,9 +80,8 @@ def apply_media_delta(
         incremental_image_candidates,
     )
 
-    os.makedirs(workdir, exist_ok=True)
-    st = _read_state(workdir)
-    _gc(workdir, st)
+    st = _state(workdir)
+    ledger.gc(workdir, _live(st))
     if delta_id in st["applied"]:
         return None
 
@@ -136,35 +127,20 @@ def apply_media_delta(
         F.col("media_id").cast("string").alias("media_id"))
 
     ver = st["version"] + 1
-    vname = f"v{ver}"
-    shutil.rmtree(os.path.join(workdir, vname), ignore_errors=True)
-    new_parts = {k: list(v) for k, v in st["parts"].items()}
-    for name, df, dedup_cols in (
-        ("index", delta_index, None),
-        ("pairs", delta_pairs, None),
-        ("ids", delta_ids, None),
-    ):
-        rel = os.path.join(vname, name)
-        df.write.mode("overwrite").parquet(os.path.join(workdir, rel))
-        new_parts[name].append(rel)
-        if len(new_parts[name]) > COMPACT_PARTS:
-            total = spark.read.parquet(
-                *[os.path.join(workdir, r) for r in new_parts[name]])
-            crel = os.path.join(vname, name + "_compact")
-            total.write.mode("overwrite").parquet(
-                os.path.join(workdir, crel))
-            new_parts[name] = [crel]
-
+    parts = {
+        name: ledger.append_part(
+            workdir, st["parts"][name], os.path.join(f"v{ver}", name), df)
+        for name, df in (
+            ("index", delta_index), ("pairs", delta_pairs), ("ids", delta_ids),
+        )
+    }
     new_st = {
         "applied": sorted({*st["applied"], delta_id}),
         "version": ver,
-        "parts": new_parts,
+        "parts": parts,
     }
-    tmp = os.path.join(workdir, _STATE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_st, f, indent=1)
-    os.replace(tmp, os.path.join(workdir, _STATE))
-    _gc(workdir, new_st)
+    ledger.commit(workdir, new_st)
+    ledger.gc(workdir, _live(new_st))
 
     return {
         "delta_id": delta_id,
@@ -172,7 +148,7 @@ def apply_media_delta(
         "payloads": delta_media.count(),
         "new_index_rows": delta_index.count(),
         "new_pairs": delta_pairs.count(),
-        "parts": {k: len(v) for k, v in new_parts.items()},
+        "parts": {k: len(v) for k, v in parts.items()},
     }
 
 

@@ -176,7 +176,7 @@ def run_pipeline(
     output invalidates s2-s4 even when the pages table is unchanged.
     """
     from sigraph_spark.operators.extract import extract_pages
-    from sigraph_spark.operators.linking import canonicalize_triples, link_entities
+    from sigraph_spark.operators.linking import canonical_edges, link_entities
     from sigraph_spark.operators.skew import choose_salting, salted_adjacency
     from sigraph_spark.operators.triples import triples_from_docs
 
@@ -205,28 +205,9 @@ def run_pipeline(
         fp_s2 + ":s3v1",
     )
     fp_s3 = out_fp("s3_mapping")
-    def build_edges() -> DataFrame:
-        canon = canonicalize_triples(triples, mapping)
-        joined = canon.join(docs.select("url", "warc_ts"), "url")
-        # edge identity (subj, predicate=verb, obj); last-writer-wins on
-        # provenance props by (warc_ts, url) — deterministic under reshuffle
-        return (
-            joined.groupBy(
-                F.col("subj"), F.col("verb").alias("predicate"), F.col("obj")
-            )
-            .agg(
-                F.max(F.struct("warc_ts", "url")).alias("_lw"),
-                F.count(F.lit(1)).alias("weight"),
-            )
-            .select(
-                "subj", "predicate", "obj",
-                F.col("_lw.warc_ts").alias("start_time"),
-                F.col("_lw.url").alias("provenance_url"),
-                "weight",
-            )
-        )
     edges = run_stage(
-        spark, "s4_edges", os.path.join(workdir, "s4_edges"), build_edges,
+        spark, "s4_edges", os.path.join(workdir, "s4_edges"),
+        lambda: canonical_edges(triples, mapping, docs),
         fp_s1 + ":" + fp_s2 + ":" + fp_s3 + ":s4v1",
     )
     # auto-salting: parameters come from the data (degree sketch), and the

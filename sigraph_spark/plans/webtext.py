@@ -34,13 +34,12 @@ gate; this module adds the materialized, resumable composition.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sigraph_spark.plans import ledger
 from sigraph_spark.plans.pipeline import (
     read_manifest, run_stage, table_fingerprint,
 )
@@ -233,17 +232,18 @@ def _quote_claims(docs: DataFrame) -> DataFrame:
 
 # --- continuous-crawl append path -------------------------------------------
 
-def _wt_state(workdir: str) -> dict:
-    p = os.path.join(workdir, "_state.json")
-    if os.path.exists(p):
-        with open(p) as fh:
-            return json.load(fh)
-    return {"applied": [], "version": 0, "claim_parts": []}
+def _state(workdir: str) -> dict:
+    return ledger.load(workdir, {"applied": [], "version": 0, "claim_parts": []})
+
+
+def _live(st: dict) -> list[str]:
+    """Every claim part, and only the current version's fused table."""
+    return st["claim_parts"] + [os.path.join(f"v{st['version']}", "fused")]
 
 
 def webtext_state_tables(spark: SparkSession, workdir: str):
     """(claims, fused) DataFrames of the current state, or (None, None)."""
-    st = _wt_state(workdir)
+    st = _state(workdir)
     if not st["claim_parts"]:
         return None, None
     claims = spark.read.parquet(
@@ -274,10 +274,10 @@ def apply_webtext_delta(
       can flip any winner — so each apply re-derives it from the (small,
       fact-vocabulary-sized) claims table; the ``triple_fusion_merge``
       gate pins merged-state fuse == from-scratch fuse;
-    * durability mirrors plans/incremental.py: part + fused dirs land
-      first, then ONE atomic ``_state.json`` rename (carrying the
+    * durability is the ``plans/ledger.py`` protocol: part + fused dirs
+      land first, then ONE atomic ``_state.json`` commit (carrying the
       applied-delta ledger) makes them live together; superseded fused
-      versions are GC'd on the next apply.
+      versions are GC'd.
 
     Returns the apply report, or None on a replayed ``delta_id``.
     """
@@ -286,17 +286,10 @@ def apply_webtext_delta(
     from sigraph_spark.operators.hearst import hearst_pairs
     from sigraph_spark.operators.triples import triples_from_docs
 
-    os.makedirs(workdir, exist_ok=True)
-    st = _wt_state(workdir)
-    # GC before the replay check: superseded fused copies always go; a
-    # version dir goes entirely once no claim part references it (crash
-    # orphans from an interrupted apply land here too)
-    for d in os.listdir(workdir):
-        if d.startswith("v") and d != f"v{st['version']}":
-            shutil.rmtree(os.path.join(workdir, d, "fused"), ignore_errors=True)
-            keep = any(p.startswith(d + os.sep) for p in st["claim_parts"])
-            if not keep:
-                shutil.rmtree(os.path.join(workdir, d), ignore_errors=True)
+    st = _state(workdir)
+    # GC before the replay check: crash orphans from an interrupted apply
+    # go even when every later call is a replay
+    ledger.gc(workdir, _live(st))
     if delta_id in st["applied"]:
         return None
 
@@ -337,7 +330,6 @@ def apply_webtext_delta(
 
     ver = st["version"] + 1
     vname = f"v{ver}"
-    shutil.rmtree(os.path.join(workdir, vname), ignore_errors=True)
     part_rel = os.path.join(vname, "claims")
     novel.write.mode("overwrite").parquet(os.path.join(workdir, part_rel))
     parts = st["claim_parts"] + [part_rel]
@@ -350,15 +342,13 @@ def apply_webtext_delta(
     )
     fused.write.mode("overwrite").parquet(os.path.join(workdir, vname, "fused"))
 
-    new_state = {
+    new_st = {
         "applied": st["applied"] + [delta_id],
         "version": ver,
         "claim_parts": parts,
     }
-    tmp = os.path.join(workdir, "_state.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(new_state, fh, indent=1)
-    os.replace(tmp, os.path.join(workdir, "_state.json"))
+    ledger.commit(workdir, new_st)
+    ledger.gc(workdir, _live(new_st))
     return {
         "delta_id": delta_id,
         "new_claims": novel.count(),

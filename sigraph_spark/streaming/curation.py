@@ -14,43 +14,57 @@ for continuous crawl intake: each micro-batch of documents is
   3. only ``new``-status survivors are appended to the corpus directory,
      and their (content_hash, id) rows are appended to the index.
 
-Exactly-once = streaming checkpoint (offset tracking) + the same
-applied-batch-id ledger device as ``streaming/ingest.py``: the ledger
-rides inside the index directory and commits atomically with it, so a
-redelivered micro-batch (crash between table swap and checkpoint commit)
-is a no-op — a doc can never be admitted twice, and a doc REJECTED as a
-duplicate can never sneak in on replay.
+Exactly-once = streaming checkpoint (offset tracking) + the
+``plans/ledger.py`` state ledger, as in ``streaming/ingest.py``: each
+batch writes the new index as ``hash_index/v{N}/data`` and one ledger
+commit makes it and the applied-batch entry live together, so a
+redelivered micro-batch (crash between the commit and the checkpoint
+commit) is a no-op — a doc can never be admitted twice, and a doc
+REJECTED as a duplicate can never sneak in on replay.
 
-At 100 TB the index/corpus swap seam is an Iceberg MERGE INTO / append
+At 100 TB the index/corpus commit seam is an Iceberg MERGE INTO / append
 with a batch-id snapshot property; the parquet-local binding keeps the
 identical contract testable here.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-_LEDGER = "_applied.json"
+from sigraph_spark.plans import ledger
+
+# The versioned-table state of the three ledger sinks here and in
+# streaming/fusion.py and streaming/sketches.py: the table lives at
+# ``v{version}/data`` under the state directory.
 
 
-def _applied(index_dir: str) -> set[int]:
-    # crash recovery for the two-rename swap in curate_batch: if we died
-    # between demoting the old index and promoting the new one, the '.old'
-    # copy is the only complete index — restore it before reading.
-    old = index_dir + ".old"
-    if not os.path.exists(index_dir) and os.path.exists(old):
-        os.replace(old, index_dir)
-    p = os.path.join(index_dir, _LEDGER)
-    if os.path.exists(p):
-        with open(p) as f:
-            return set(json.load(f))
-    return set()
+def _state(state_dir: str) -> dict:
+    """The committed state, after collecting what it does not name."""
+    st = ledger.load(state_dir, {"applied": [], "version": 0})
+    ledger.gc(state_dir, [os.path.join(f"v{st['version']}", "data")])
+    return st
+
+
+def _stored(spark: SparkSession, state_dir: str, st: dict) -> DataFrame | None:
+    if not st["version"]:
+        return None
+    return spark.read.parquet(os.path.join(state_dir, f"v{st['version']}", "data"))
+
+
+def _commit(state_dir: str, st: dict, batch_id: int, table: DataFrame) -> None:
+    """Write ``table`` as the next version, then one ledger commit makes it
+    and ``batch_id``'s ledger entry live together."""
+    rel = os.path.join(f"v{st['version'] + 1}", "data")
+    table.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+    ledger.commit(state_dir, {
+        "applied": sorted({*st["applied"], int(batch_id)}),
+        "version": st["version"] + 1,
+    })
+    ledger.gc(state_dir, [rel])
 
 
 def curate_batch(
@@ -64,8 +78,8 @@ def curate_batch(
 
     index_dir = os.path.join(workdir, "hash_index")
     corpus_dir = os.path.join(workdir, "corpus")
-    applied = _applied(index_dir)
-    if batch_id in applied:
+    st = _state(index_dir)
+    if batch_id in st["applied"]:
         return None
 
     spark = batch.sparkSession
@@ -79,42 +93,26 @@ def curate_batch(
         verdicts.filter(F.col("verdict") == "pass").select("doc_id"), "doc_id"
     ).localCheckpoint(eager=True)
 
-    if os.path.exists(os.path.join(index_dir, "data")):
-        index = spark.read.parquet(os.path.join(index_dir, "data"))
-    else:
+    index = _stored(spark, index_dir, st)
+    if index is None:
         index = spark.createDataFrame([], "id long, content_hash string")
     statuses = incremental_exact_dedup(passed, index).localCheckpoint(eager=True)
     new_rows = statuses.filter(F.col("status") == "new")
     admitted = passed.join(new_rows.select("doc_id"), "doc_id")
 
-    # atomic commit: new index (old ∪ new hashes) + ledger swap together;
-    # the corpus append lands BEFORE the index swap, so a crash in between
-    # re-delivers the batch, the ledger check no-ops, and the only residue
-    # is an orphaned corpus part-file for a batch that IS in the corpus —
-    # guarded by writing the corpus per-batch into its own subdirectory
-    # keyed by batch_id (replays overwrite the same path idempotently).
+    # one ledger commit makes the new index (old ∪ new hashes) and the
+    # ledger entry live together; the corpus append lands BEFORE it, so a
+    # crash in between re-delivers the batch, the ledger check no-ops, and
+    # the only residue is an orphaned corpus part-file for a batch that IS
+    # in the corpus — guarded by writing the corpus per-batch into its own
+    # subdirectory keyed by batch_id (replays overwrite the same path
+    # idempotently).
     admitted.write.mode("overwrite").parquet(
         os.path.join(corpus_dir, f"batch_id={int(batch_id)}")
     )
-    new_index = index.unionByName(
+    _commit(index_dir, st, batch_id, index.unionByName(
         new_rows.select(F.col("doc_id").alias("id"), "content_hash")
-    ).localCheckpoint(eager=True)
-    tmp = index_dir + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    new_index.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-    with open(os.path.join(tmp, _LEDGER), "w") as f:
-        json.dump(sorted(applied | {int(batch_id)}), f)
-    # swap via two renames so there is NO window where the index (and its
-    # ledger of every previously applied batch) is absent from disk: a
-    # crash between the renames leaves either the old or the new index
-    # directory live, never neither — delete-then-rename would let a crash
-    # drop the whole ledger and re-admit every prior doc on restart.
-    old = index_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(index_dir):
-        os.replace(index_dir, old)
-    os.replace(tmp, index_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    ))
 
     return {
         "input": batch.count(),

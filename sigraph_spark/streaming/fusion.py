@@ -9,26 +9,26 @@ no-ops by construction, and the fused table recomputed from the state is
 bit-identical to a from-scratch fuse over every claim ever seen
 (pinned by the ``triple_fusion_merge`` gate).
 
-Exactly-once = the same applied-batch-id ledger + two-rename atomic swap
-device as ``streaming/curation.py`` (the ledger rides inside the state
-directory and commits with it). At 100 TB the swap seam is an Iceberg
-MERGE INTO keyed on the full claim tuple; the parquet-local binding
-keeps the identical contract testable here. The fused table is a DERIVED
-artifact — rebuilt per batch from the state, never merged incrementally,
-so a crash mid-rebuild costs recomputation, never correctness.
+Exactly-once = the ``plans/ledger.py`` state ledger, as in
+``streaming/curation.py``: the claim set lives at
+``claims_state/v{N}/data`` and one ledger commit makes it and the
+applied-batch entry live together. At 100 TB the commit seam is an
+Iceberg MERGE INTO keyed on the full claim tuple; the parquet-local
+binding keeps the identical contract testable here. The fused table is a
+DERIVED artifact — rebuilt per batch from the merged claims, never merged
+incrementally, and written before the commit, so a crash mid-rebuild
+costs recomputation, never correctness, and a batch whose commit landed
+never leaves a stale fused table behind.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from sigraph_spark.streaming.curation import _applied
+from sigraph_spark.streaming.curation import _commit, _state, _stored
 
 _CLAIM_COLS = ["subject", "predicate", "object", "source"]
 
@@ -42,33 +42,17 @@ def fold_claims_batch(
     from sigraph_spark.operators.fusion import fuse_triples, merge_claims
 
     state_dir = os.path.join(workdir, "claims_state")
-    applied = _applied(state_dir)
-    if batch_id in applied:
+    st = _state(state_dir)
+    if batch_id in st["applied"]:
         return None
 
-    spark = batch.sparkSession
-    if os.path.exists(os.path.join(state_dir, "data")):
-        state = spark.read.parquet(os.path.join(state_dir, "data"))
-    else:
-        state = None
+    state = _stored(batch.sparkSession, state_dir, st)
     merged = merge_claims(state, batch.select(*_CLAIM_COLS)).localCheckpoint(
         eager=True
     )
-
-    tmp = state_dir + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-    with open(os.path.join(tmp, "_applied.json"), "w") as f:
-        json.dump(sorted(applied | {int(batch_id)}), f)
-    old = state_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(state_dir):
-        os.replace(state_dir, old)
-    os.replace(tmp, state_dir)
-    shutil.rmtree(old, ignore_errors=True)
-
     fused = fuse_triples(merged, *_CLAIM_COLS)
     fused.write.mode("overwrite").parquet(os.path.join(workdir, "fused"))
+    _commit(state_dir, st, batch_id, merged)
     return {"claims_state": merged.count(), "fused": fused.count()}
 
 

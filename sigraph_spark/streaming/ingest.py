@@ -22,29 +22,29 @@ merge semantics (and tests) are shared, not re-implemented:
 
 BUCKETED LOCAL BINDING (O(delta), not O(table), per batch): the edge
 table is stored as N_BUCKETS hash buckets of the triple key, each bucket
-a versioned parquet directory, with a single ``_manifest.json`` mapping
-bucket -> current version path (the ledger rides inside the manifest).
-A micro-batch merges ONLY the buckets its delta touches, writes them as
-new versions under ``v{batch_id}/``, then commits everything with ONE
-atomic manifest rename — untouched bucket files are never rewritten
+a versioned parquet directory, with the ``plans/ledger.py`` state file
+mapping bucket -> current version path (the applied-batch ledger rides
+inside it). A micro-batch merges ONLY the buckets its delta touches
+(:func:`merge_buckets`, shared with the crawl-delta append), writes them
+as new versions under ``v{batch_id}/``, then commits everything with the
+ledger's ONE atomic rename — untouched bucket files are never rewritten
 (byte-identical across the batch, pinned by test). A crash before the
-manifest swap leaves the old manifest live and only orphan version dirs,
-garbage-collected on the next batch. This is the parquet-local analog of
+commit leaves the old state live and only orphan version dirs, which the
+ledger's GC collects on the next batch. This is the parquet-local analog of
 the production Iceberg MERGE INTO against a bucket(subj)-partitioned
 table with a batch-id snapshot property.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-_MANIFEST = "_manifest.json"
+from sigraph_spark.plans import ledger
+
 N_BUCKETS = 16
 
 
@@ -52,24 +52,20 @@ def _bucket_col() -> Column:
     return F.pmod(F.xxhash64("subj", "predicate", "obj"), F.lit(N_BUCKETS))
 
 
-def _read_manifest(edges_dir: str) -> dict:
-    p = os.path.join(edges_dir, _MANIFEST)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"applied": [], "buckets": {}}
+def _state(edges_dir: str) -> dict:
+    return ledger.load(edges_dir, {"applied": [], "buckets": {}})
 
 
 def applied_batch_ids(edges_dir: str) -> set[int]:
-    return set(_read_manifest(edges_dir)["applied"])
+    return set(_state(edges_dir)["applied"])
 
 
 def read_edges(spark: SparkSession, edges_dir: str) -> DataFrame | None:
-    """The current edge table: the union of every bucket's manifest-
+    """The current edge table: the union of every bucket's state-
     referenced version directory. Returns None when nothing is committed."""
-    man = _read_manifest(edges_dir)
     paths = sorted(
-        os.path.join(edges_dir, rel) for rel in man["buckets"].values()
+        os.path.join(edges_dir, rel)
+        for rel in _state(edges_dir)["buckets"].values()
     )
     if not paths:
         return None
@@ -97,23 +93,35 @@ def _merge_edges(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
     )
 
 
-def _gc_unreferenced(edges_dir: str, man: dict) -> None:
-    """Remove bucket version subdirectories no longer referenced by the
-    manifest (superseded versions + orphans from crashes before a manifest
-    swap), then drop emptied version dirs. Single-writer discipline: the
-    streaming query is the only writer, so anything unreferenced is dead."""
-    live = {os.path.normpath(rel) for rel in man["buckets"].values()}
-    for vname in list(os.listdir(edges_dir)) if os.path.isdir(edges_dir) else []:
-        vdir = os.path.join(edges_dir, vname)
-        if not os.path.isdir(vdir) or not vname.startswith("v"):
-            continue
-        for bname in os.listdir(vdir):
-            rel = os.path.normpath(os.path.join(vname, bname))
-            sub = os.path.join(vdir, bname)
-            if os.path.isdir(sub) and rel not in live:
-                shutil.rmtree(sub, ignore_errors=True)
-        if not any(n.startswith("_bucket=") for n in os.listdir(vdir)):
-            shutil.rmtree(vdir, ignore_errors=True)
+def merge_buckets(
+    root: str, buckets: dict[str, str], delta: DataFrame, out_rel: str
+) -> tuple[dict[str, str], DataFrame | None]:
+    """Upsert the ``delta`` edge rows into the bucketed edge table at
+    ``root`` whose bucket -> path map is ``buckets``: only the buckets the
+    delta touches are read, merged (:func:`_merge_edges`) and written,
+    partitioned by ``_bucket``, under ``root/out_rel``; every other bucket
+    keeps its files. Returns the new map and the merged rows (with
+    ``_bucket``, checkpointed; None when the delta is empty)."""
+    spark = delta.sparkSession
+    delta = delta.withColumn("_bucket", _bucket_col()).localCheckpoint(eager=True)
+    touched = sorted(
+        r["_bucket"] for r in delta.select("_bucket").distinct().collect()
+    )
+    if not touched:
+        return buckets, None
+    paths = [os.path.join(root, buckets[str(b)]) for b in touched
+             if str(b) in buckets]
+    existing = spark.read.parquet(*paths) if paths else None
+    merged = _merge_edges(existing, delta.drop("_bucket")).withColumn(
+        "_bucket", _bucket_col()
+    ).localCheckpoint(eager=True)
+    merged.write.partitionBy("_bucket").mode("overwrite").parquet(
+        os.path.join(root, out_rel)
+    )
+    new = dict(buckets)
+    for b in touched:
+        new[str(b)] = os.path.join(out_rel, f"_bucket={b}")
+    return new, merged
 
 
 def apply_pages_batch(batch: DataFrame, batch_id: int, edges_dir: str) -> bool:
@@ -121,85 +129,30 @@ def apply_pages_batch(batch: DataFrame, batch_id: int, edges_dir: str) -> bool:
     ``edges_dir``.
 
     Returns False (no-op) when ``batch_id`` is already in the ledger —
-    the redelivery path after a crash between manifest swap and checkpoint
-    commit. Otherwise: extract -> triples -> link -> per-batch delta ->
-    merge ONLY the touched buckets -> one atomic manifest rename.
+    the redelivery path after a crash between the state commit and the
+    checkpoint commit. Otherwise: extract -> triples -> link -> per-batch
+    edge delta -> merge ONLY the touched buckets -> one ledger commit.
     """
     from sigraph_spark.operators.extract import extract_pages
-    from sigraph_spark.operators.linking import (
-        canonicalize_triples, link_entities,
-    )
+    from sigraph_spark.operators.linking import canonical_edges, link_entities
     from sigraph_spark.operators.triples import triples_from_docs
 
-    spark = batch.sparkSession
-    man = _read_manifest(edges_dir)
+    st = _state(edges_dir)
     # GC BEFORE the ledger check so crash orphans are collected even when
     # the stream is only re-delivering already-applied batches
-    if os.path.isdir(edges_dir):
-        _gc_unreferenced(edges_dir, man)
-    if int(batch_id) in set(man["applied"]):
+    ledger.gc(edges_dir, st["buckets"].values())
+    if int(batch_id) in st["applied"]:
         return False
 
     docs = extract_pages(batch).select("url", "warc_ts", "text")
     triples = triples_from_docs(docs)
-    mapping = link_entities(triples)
-    canon = canonicalize_triples(triples, mapping).join(
-        docs.select("url", "warc_ts"), "url"
-    )
-    delta = (
-        canon.groupBy(F.col("subj"), F.col("verb").alias("predicate"), F.col("obj"))
-        .agg(F.max(F.struct("warc_ts", "url")).alias("_lw"), F.count(F.lit(1)).alias("weight"))
-        .select(
-            "subj", "predicate", "obj",
-            F.col("_lw.warc_ts").alias("start_time"),
-            F.col("_lw.url").alias("provenance_url"),
-            "weight",
-        )
-        .withColumn("_bucket", _bucket_col())
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(r["_bucket"] for r in delta.select("_bucket").distinct().collect())
-    if not touched:
-        # empty micro-batch still commits its ledger entry (one manifest swap)
-        new_man = {"applied": sorted({*man["applied"], int(batch_id)}),
-                   "buckets": man["buckets"]}
-        _commit_manifest(edges_dir, new_man)
-        return True
-
-    existing_paths = [
-        os.path.join(edges_dir, man["buckets"][str(b)])
-        for b in touched
-        if str(b) in man["buckets"]
-    ]
-    existing = spark.read.parquet(*existing_paths) if existing_paths else None
-    merged = _merge_edges(existing, delta.drop("_bucket"))
-
-    vname = f"v{int(batch_id)}"
-    vdir = os.path.join(edges_dir, vname)
-    shutil.rmtree(vdir, ignore_errors=True)  # crashed prior attempt
-    merged.withColumn("_bucket", _bucket_col()).write.partitionBy(
-        "_bucket"
-    ).mode("overwrite").parquet(vdir)
-
-    new_buckets = dict(man["buckets"])
-    for b in touched:
-        new_buckets[str(b)] = os.path.join(vname, f"_bucket={b}")
-    new_man = {
-        "applied": sorted({*man["applied"], int(batch_id)}),
-        "buckets": new_buckets,
-    }
-    # THE commit: one atomic rename makes (data versions + ledger) live
-    _commit_manifest(edges_dir, new_man)
-    _gc_unreferenced(edges_dir, new_man)
+    delta = canonical_edges(triples, link_entities(triples), docs)
+    buckets, _ = merge_buckets(edges_dir, st["buckets"], delta, f"v{int(batch_id)}")
+    # an empty micro-batch still commits its ledger entry
+    st = {"applied": sorted({*st["applied"], int(batch_id)}), "buckets": buckets}
+    ledger.commit(edges_dir, st)
+    ledger.gc(edges_dir, buckets.values())
     return True
-
-
-def _commit_manifest(edges_dir: str, man: dict) -> None:
-    os.makedirs(edges_dir, exist_ok=True)
-    tmp = os.path.join(edges_dir, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, os.path.join(edges_dir, _MANIFEST))
 
 
 def stream_pages_to_edges(

@@ -4,8 +4,8 @@ The streaming form of the media-dedup pipeline, built for continuous
 crawl intake of binary payloads: each micro-batch IS a delta of
 :func:`plans.media_delta.apply_media_delta` — payloads decode once,
 probe the stored perceptual-hash index (image dHash + acoustic
-fingerprint planes), and commit as append-only index/pair parts behind
-the atomic ``_state.json`` ledger.
+fingerprint planes), and commit as append-only index/pair parts through
+the ``plans/ledger.py`` state ledger (one atomic ``_state.json`` commit).
 
 Exactly-once = streaming checkpoint (offset tracking) + that ledger:
 the micro-batch id is the delta id, so a redelivered batch (crash

@@ -5,31 +5,30 @@ The streaming form of ``operators/sketches.py``: each micro-batch of
 (key, value) observations sketches locally and max-merges into the
 stored register table. Because the HLL merge is an IDEMPOTENT
 semilattice (max), a replayed batch folds to a no-op even WITHOUT the
-ledger — the ledger is still kept (same applied-batch device as
-``streaming/curation.py``) so the returned counts stay exactly-once and
+ledger — the ledger is still kept (the ``plans/ledger.py`` state ledger,
+registers at ``hll_state/v{N}/data`` as in ``streaming/curation.py``)
+so the returned counts stay exactly-once and
 the contract matches the other intakes; the register state itself is
 safe under at-least-once delivery either way. Contrast with a Count-Min
 fold, whose per-cell SUM is NOT idempotent and MUST dedup batches via
 the ledger first — the reason cms lives behind the same seam but is not
 offered ledgerless.
 
-The estimates table is a DERIVED artifact rebuilt from the state per
-batch (crash mid-rebuild costs recomputation, never correctness). At
-100 TB the swap seam is an Iceberg MERGE keyed on (key..., reg) with
+The estimates table is a DERIVED artifact rebuilt from the merged
+registers per batch and written before the commit (crash mid-rebuild
+costs recomputation, never correctness). At 100 TB the commit seam is an Iceberg MERGE keyed on (key..., reg) with
 ``rho = greatest(old, new)``; the parquet-local binding keeps the
 identical contract testable here.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from sigraph_spark.streaming.curation import _applied
+from sigraph_spark.streaming.curation import _commit, _state, _stored
 
 
 def fold_sketch_batch(
@@ -47,33 +46,18 @@ def fold_sketch_batch(
     )
 
     state_dir = os.path.join(workdir, "hll_state")
-    applied = _applied(state_dir)
-    if batch_id in applied:
+    st = _state(state_dir)
+    if batch_id in st["applied"]:
         return None
 
-    spark = batch.sparkSession
     delta = hll_registers(batch, key_cols, value_col, p)
-    if os.path.exists(os.path.join(state_dir, "data")):
-        state = spark.read.parquet(os.path.join(state_dir, "data"))
-        merged = hll_merge(state, delta, key_cols)
-    else:
-        merged = delta
-    merged = merged.localCheckpoint(eager=True)
-
-    tmp = state_dir + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-    with open(os.path.join(tmp, "_applied.json"), "w") as f:
-        json.dump(sorted(applied | {int(batch_id)}), f)
-    old = state_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(state_dir):
-        os.replace(state_dir, old)
-    os.replace(tmp, state_dir)
-    shutil.rmtree(old, ignore_errors=True)
-
+    state = _stored(batch.sparkSession, state_dir, st)
+    merged = (
+        delta if state is None else hll_merge(state, delta, key_cols)
+    ).localCheckpoint(eager=True)
     est = hll_estimate(merged, key_cols, p)
     est.write.mode("overwrite").parquet(os.path.join(workdir, "estimates"))
+    _commit(state_dir, st, batch_id, merged)
     return {"registers": merged.count(), "keys": est.count()}
 
 

@@ -6,16 +6,16 @@ The Structured Streaming form of the webtext multi-extractor plan
 as a stream, and every micro-batch folds into the persistent claims
 state through ``apply_webtext_delta`` — the SAME append path the batch
 CLI uses (one fused scan of the batch's html, set-union semilattice
-claim parts, global re-fuse, atomic ``_state.json`` swap), so
+claim parts, global re-fuse, one ledger commit of ``_state.json``), so
 stream == batch by construction and the ``webtext_state_tables`` view
 is the single source of truth either way.
 
 Exactly-once: the streaming checkpoint tracks source offsets, and the
 applied-delta LEDGER inside ``_state.json`` (keyed ``batch-<id>``)
-makes redelivery a no-op — a crash between the state swap and the
+makes redelivery a no-op — a crash between the state commit and the
 checkpoint commit re-delivers the micro-batch, the ledger check
 answers ``None``, and no claim is ever double-counted (the
-``streaming/ingest.py`` / ``streaming/curation.py`` ledger device).
+``plans/ledger.py`` state ledger every delta applier commits through).
 
 At 100 TB the claim parts and fused table are Iceberg appends/MERGEs
 with batch-id snapshot properties; the parquet-local state keeps the

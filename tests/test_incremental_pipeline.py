@@ -155,7 +155,7 @@ def test_cross_delta_variant_adopts_frozen_canonical(spark, tmp_path):
 def test_shingle_df_parts_compact(spark, tmp_path):
     """Past COMPACT_PARTS appended increments, parts fold into one and the
     summed totals are preserved."""
-    import sigraph_spark.plans.incremental as inc
+    import sigraph_spark.plans.ledger as inc  # owns COMPACT_PARTS
 
     wd = str(tmp_path / "crawl3")
     os.makedirs(wd)

@@ -72,10 +72,10 @@ def test_redelivered_batch_is_noop(spark, tmp_path):
 
 def _bucket_files(edges_dir: str) -> dict[str, dict[str, tuple[int, float]]]:
     """manifest bucket -> {filename: (size, mtime)} for every data file."""
-    from sigraph_spark.streaming.ingest import _read_manifest
+    from sigraph_spark.plans.ledger import load
 
     out: dict[str, dict[str, tuple[int, float]]] = {}
-    man = _read_manifest(edges_dir)
+    man = load(edges_dir)
     for b, rel in man["buckets"].items():
         d = os.path.join(edges_dir, rel)
         out[b] = {
@@ -92,15 +92,14 @@ def test_sink_rewrites_only_touched_buckets(spark, tmp_path):
     exact files (same path, size, mtime — never rewritten) across a batch;
     touched buckets move to a new version dir; superseded versions are
     garbage-collected after the atomic manifest swap."""
-    from sigraph_spark.streaming.ingest import (
-        _read_manifest, apply_pages_batch,
-    )
+    from sigraph_spark.plans.ledger import load
+    from sigraph_spark.streaming.ingest import apply_pages_batch
 
     pages = gen_pages(spark, sf=0.001).localCheckpoint()
     edges_dir = str(tmp_path / "edges")
     assert apply_pages_batch(pages, 0, edges_dir) is True
     before = _bucket_files(edges_dir)
-    man0 = _read_manifest(edges_dir)
+    man0 = load(edges_dir)
     assert len(man0["buckets"]) > 1  # the fixture spreads across buckets
 
     w0 = {(r["subj"], r["predicate"], r["obj"]): r["weight"]
@@ -109,7 +108,7 @@ def test_sink_rewrites_only_touched_buckets(spark, tmp_path):
     # a tiny second batch touches only a few buckets
     small = pages.limit(2).localCheckpoint()
     assert apply_pages_batch(small, 1, edges_dir) is True
-    man1 = _read_manifest(edges_dir)
+    man1 = load(edges_dir)
     after = _bucket_files(edges_dir)
 
     touched = {b for b in man1["buckets"] if man1["buckets"][b] != man0["buckets"].get(b)}

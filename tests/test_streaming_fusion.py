@@ -4,6 +4,7 @@ import os
 
 from conftest import spark  # noqa: F401
 
+from sigraph_spark.plans.ledger import load
 from sigraph_spark.streaming.fusion import fold_claims_batch, stream_claims
 
 SCHEMA = "subject string, predicate string, object string, source string"
@@ -20,7 +21,8 @@ def test_fold_replay_noop_and_semilattice(spark, tmp_path):
     assert r2 == {"claims_state": 4, "fused": 2}  # dup claim deduped
     # replayed batch id -> None, state untouched
     assert fold_claims_batch(spark.createDataFrame(B2, SCHEMA), 1, wd) is None
-    state = spark.read.parquet(os.path.join(wd, "claims_state", "data"))
+    sd = os.path.join(wd, "claims_state")
+    state = spark.read.parquet(os.path.join(sd, f"v{load(sd)['version']}", "data"))
     assert state.count() == 4
     # fused equals a from-scratch fuse over all claims
     from sigraph_spark.operators.fusion import fuse_triples

@@ -15,7 +15,10 @@ B2 = [("a", f"x{i}") for i in range(25, 75)] + [("b", "y1")]
 
 
 def _registers(spark, wd):
-    return spark.read.parquet(os.path.join(wd, "hll_state", "data"))
+    from sigraph_spark.plans.ledger import load
+
+    sd = os.path.join(wd, "hll_state")
+    return spark.read.parquet(os.path.join(sd, f"v{load(sd)['version']}", "data"))
 
 
 def test_fold_replay_noop_and_merge_equals_full(spark, tmp_path):
