@@ -116,6 +116,11 @@ def apply_crawl_delta(
 
     docs = extract_pages(delta_pages).select("url", "warc_ts", "text")
     triples = triples_from_docs(docs).localCheckpoint(eager=True)
+    if triples.isEmpty():
+        # nothing to link or merge: record the delta as applied and keep
+        # version, parts and buckets as they are
+        ledger.commit(workdir, {**st, "applied": sorted({*st["applied"], delta_id})})
+        return _report(delta_id, delta_pages, 0, st, 0)
 
     stored = crawl_state_tables(spark, workdir)
     empty = empty_link_state(spark)
@@ -172,16 +177,23 @@ def apply_crawl_delta(
     }
     ledger.commit(workdir, new_st)
     ledger.gc(workdir, _live(new_st))
+    return _report(delta_id, delta_pages, triples.count(), new_st, len(touched_rows))
 
+
+def _report(
+    delta_id: str, delta_pages: DataFrame, triples: int, st: dict,
+    touched_buckets: int,
+) -> dict:
+    """The apply report of the committed state ``st``."""
     return {
         "delta_id": delta_id,
-        "version": ver,
+        "version": st["version"],
         "pages": delta_pages.count(),
-        "triples": triples.count(),
-        "entities_total": new_state.n_entities,
+        "triples": triples,
+        "entities_total": st["n_entities"],
         # summed from the per-bucket counts in the state — O(buckets), no
         # full-table scan in the report path
-        "edges_total": sum(bucket_rows.values()),
-        "touched_buckets": len(touched_rows),
-        "parts": {k: len(v) for k, v in parts.items()},
+        "edges_total": sum(st["edge_bucket_rows"].values()),
+        "touched_buckets": touched_buckets,
+        "parts": {k: len(v) for k, v in st["parts"].items()},
     }

@@ -112,6 +112,10 @@ def run_stage(
     dir and renames into place (atomic on one filesystem), then writes the
     manifest last — a crash anywhere leaves either the old complete output
     or no manifest (=> recompute), never a half-written current one.
+
+    The returned frame is read with the schema the lineage read of the
+    temp dir already inferred, so the renamed output is not re-inferred
+    (one Spark job fewer per stage).
     """
     existing = read_manifest(out_dir)
     if (
@@ -154,7 +158,7 @@ def run_stage(
         json.dump(manifest, f, indent=1)
     shutil.rmtree(out_dir, ignore_errors=True)
     os.replace(tmp, out_dir)
-    return spark.read.parquet(os.path.join(out_dir, "data"))
+    return spark.read.schema(out.schema).parquet(os.path.join(out_dir, "data"))
 
 
 def run_pipeline(

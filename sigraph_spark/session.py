@@ -12,6 +12,15 @@ Scale posture (designed for a 1000-executor cluster, tested on local[k]):
 * Arrow enabled for the two pandas-UDF stages (text extraction, triple
   matching); everything else is pure Column expressions inside whole-stage
   codegen.
+* ICU case mappings off (``spark.sql.icu.caseMappings.enabled``). The
+  first ``lower``/``upper`` of a Spark 4 JVM otherwise initializes
+  ``CollationAwareUTF8String``, which builds an ICU title-case table over
+  all 1,114,112 code points for ``initcap`` alone (nothing here calls it):
+  ~2 s of fixed CPU in every fresh session's first entity normalization.
+  Off, UTF8_BINARY ``lower``/``upper`` take Spark 3.x's path (ASCII fast
+  path, else the JVM's full Unicode mapping) — the same fold apart from
+  characters whose mapping changed between the JDK's and ICU's Unicode
+  versions.
 """
 
 from __future__ import annotations
@@ -64,6 +73,12 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # deterministic float behavior for golden hashing
         .config("spark.sql.legacy.allowHashOnMapType", "false")
+        # Spark 4's ICU lower/upper builds a title-case table over every
+        # code point on first use. Measured at local[4] on a 4-core VM: a
+        # fresh session's 20k-row lower() distinct takes 2.9-4.2 s on and
+        # 1.2-1.9 s off; the first crawl rebuild's link_entities leg drops
+        # from 6.9 s to 5.0 s. Only initcap reads the table.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -186,3 +186,21 @@ def test_shingle_df_parts_compact(spark, tmp_path):
         assert df["dll"] == 5.0 and df[".dl"] == 5.0
     finally:
         inc.COMPACT_PARTS = old
+
+
+def test_empty_delta_records_ledger_only(spark, tmp_path):
+    """A delta with no triples commits only its ledger entry: no new
+    version directory, no empty linking parts, and a replay no-ops."""
+    wd = str(tmp_path / "crawl_empty")
+    os.makedirs(wd)
+    pages = gen_pages(spark, sf=0.001)
+
+    r = apply_crawl_delta(spark, pages.limit(0), wd, "empty")
+    assert r["version"] == 0 and r["triples"] == 0
+    assert r["parts"] == {"mapping": 0, "band_index": 0, "shingle_df": 0}
+    assert not os.path.exists(os.path.join(wd, "v1"))
+    st = json.load(open(os.path.join(wd, "_state.json")))
+    assert st["applied"] == ["empty"] and st["version"] == 0
+    assert all(parts == [] for parts in st["parts"].values())
+    assert st["edge_buckets"] == {}
+    assert apply_crawl_delta(spark, pages.limit(0), wd, "empty") is None

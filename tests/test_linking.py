@@ -15,11 +15,18 @@ from sigraph_spark.operators.linking import (
 
 
 def test_normalize_entity(spark):
-    df = spark.createDataFrame(
-        [("  EVIL[.]Example.COM  ",), ("C:\\Path\\File.EXE",)], "e string"
-    )
+    inputs = [
+        "  EVIL[.]Example.COM  ", "C:\\Path\\File.EXE",
+        # non-ASCII folds: accents, final sigma, Cyrillic, capital sharp s,
+        # dotted capital I, a titlecase digraph, a ligature, fullwidth
+        "  ÉVIL[.]Exämple.COM ", "ΣΊΣΥΦΟΣ", "ПРИВЕТ.РФ", "STRAẞE",
+        "İSTANBUL", "ǅemal", "ﬁle.EXE", "ＡＢＣ",
+    ]
+    df = spark.createDataFrame([(s,) for s in inputs], "e string")
     out = [r["n"] for r in df.select(normalize_entity(F.col("e")).alias("n")).collect()]
-    assert out == ["evil.example.com", "c:\\path\\file.exe"]
+    assert out[:2] == ["evil.example.com", "c:\\path\\file.exe"]
+    # the reference's own fold (ai_agent.py:389-403)
+    assert out == [s.strip().lower().replace("[.]", ".") for s in inputs]
 
 
 def test_remove_lucene_chars(spark):

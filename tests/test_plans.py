@@ -179,6 +179,73 @@ def test_crash_mid_stage_recovers(spark, tmp_path):
     assert df2.count() == 7
 
 
+def test_run_stage_crash_injection_resumes_identically(spark, tmp_path, monkeypatch):
+    """A build that raises leaves the previous complete output resumable;
+    a crash at the data rename recomputes to the uninterrupted output; a
+    partitioned stage's returned frame equals a fresh read of it."""
+    import pytest
+
+    from sigraph_spark.plans import pipeline
+
+    calls = {"n": 0}
+
+    def builder(scale):
+        def build():
+            calls["n"] += 1
+            return spark.range(12).select(
+                (F.col("id") * scale).alias("id"), (F.col("id") % 3).alias("k"))
+        return build
+
+    build_a, build_b = builder(1), builder(2)
+    # an uninterrupted fp-B run's output_fingerprint (pinned equal to
+    # table_fingerprint by test_run_stage_writes_manifest_and_resumes)
+    want = table_fingerprint(build_b())
+
+    out = str(tmp_path / "stage")
+    run_stage(spark, "s", out, build_a, input_fingerprint="fp-A")
+    fp_a = read_manifest(out)["output_fingerprint"]
+    assert fp_a != want
+
+    # 1) a build that raises leaves the committed fp-A output in place
+    def broken():
+        raise RuntimeError("injected build failure")
+
+    with pytest.raises(RuntimeError, match="injected"):
+        run_stage(spark, "s", out, broken, input_fingerprint="fp-B")
+    n = calls["n"]
+    df = run_stage(spark, "s", out, build_a, input_fingerprint="fp-A")
+    assert calls["n"] == n
+    assert read_manifest(out)["output_fingerprint"] == fp_a
+    assert table_fingerprint(df) == fp_a
+
+    # 2) crash at the rename of the fp-B output: the rerun rebuilds
+    real_replace = pipeline.os.replace
+    crashes = {"left": 1}
+
+    def replace_once(src, dst):
+        if crashes["left"]:
+            crashes["left"] -= 1
+            raise OSError("injected crash at rename")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(pipeline.os, "replace", replace_once)
+    with pytest.raises(OSError, match="injected"):
+        run_stage(spark, "s", out, build_b, input_fingerprint="fp-B")
+    n = calls["n"]
+    run_stage(spark, "s", out, build_b, input_fingerprint="fp-B")
+    monkeypatch.undo()
+    assert calls["n"] == n + 1
+    assert read_manifest(out)["output_fingerprint"] == want
+
+    # 3) partitionBy: the schema-given read equals a fresh inferred read
+    out_k = str(tmp_path / "stage_k")
+    got = run_stage(spark, "s", out_k, build_a, input_fingerprint="fp-A",
+                    partition_by=["k"])
+    fresh = spark.read.parquet(os.path.join(out_k, "data"))
+    assert got.schema == fresh.schema
+    assert sorted(got.collect()) == sorted(fresh.collect())
+
+
 def test_run_curation_stages_and_resume(spark, tmp_path):
     import pyspark.sql.functions as F
 
