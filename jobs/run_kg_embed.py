@@ -57,6 +57,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
+    from sigraph_spark import signals
     from sigraph_spark.operators.dedup import hash32_md5_le
     from sigraph_spark.operators.transe import (
         transe_eval_summary, transe_rank_tails, transe_train,
@@ -114,11 +115,12 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     add = args.total_rounds - rounds_done
-    metrics: dict = {}
-    emb = transe_train(
-        facts, dim=args.dim, rounds=add, lr=args.lr,
-        init_emb=prior, round_offset=rounds_done, metrics=metrics,
-    ).localCheckpoint(eager=True)
+    with signals.collect() as rec:
+        emb = transe_train(
+            facts, dim=args.dim, rounds=add, lr=args.lr,
+            init_emb=prior, round_offset=rounds_done,
+        ).localCheckpoint(eager=True)
+    violations = rec["transe_train"]["violations"]
 
     rel = os.path.join(f"v{st['version'] + 1}", "data")
     emb.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
@@ -127,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
         "dim": args.dim,
         "rounds_done": args.total_rounds,
         "lr": args.lr,
-        "violations_this_run": metrics.get("violations", []),
+        "violations_this_run": violations,
     })
     ledger.gc(state_dir, [rel])
 
@@ -138,7 +140,7 @@ def main(argv: list[str] | None = None) -> int:
         .select("id").distinct().count(),
         "rounds_done": args.total_rounds,
         "rounds_this_run": add,
-        "violations": metrics.get("violations", []),
+        "violations": violations,
     }
     if args.eval_rate:
         h = hash32_md5_le(F.concat_ws("|", "subj", "predicate", "obj"))

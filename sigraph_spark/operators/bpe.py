@@ -60,6 +60,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
+
 SEP = "\x1f"          # U+001F unit separator: never occurs in [a-z0-9] words
 SEP2 = SEP + SEP      # double boundary -> greedy-exact literal replace
 END = "\x1e"          # U+001E end-of-word symbol
@@ -215,7 +217,6 @@ def bpe_train(
     num_merges: int = 12,
     min_freq: int = 1,
     checkpoint_every: int = 16,
-    metrics: dict | None = None,
     batch_candidates: int = 256,
 ) -> DataFrame:
     """Train ``num_merges`` BPE merges; returns the merge table
@@ -229,9 +230,9 @@ def bpe_train(
     applies the longest provably-sequential-exact prefix in one rewrite
     (:func:`_select_batch`), cutting driver round-trips several-fold
     without changing a single emitted merge; ``batch_candidates=1`` is
-    the classic one-merge-per-job loop. ``metrics['driver_jobs']``
-    records the realized round-trip count (vs ``metrics['rounds']``
-    merges learned) so the batching win is measurable."""
+    the classic one-merge-per-job loop. The ``bpe_train`` signal's
+    ``driver_jobs`` records the realized round-trip count (vs its
+    ``rounds``, merges learned) so the batching win is measurable."""
     spark = docs.sparkSession
     vocab = bpe_word_counts(docs, text_col)
     if min_freq > 1:
@@ -268,10 +269,9 @@ def bpe_train(
         if len(merges) - last_cp >= checkpoint_every:
             vocab = vocab.localCheckpoint(eager=True)
             last_cp = len(merges)
-    if metrics is not None:
-        metrics["rounds"] = len(merges)
-        metrics["driver_jobs"] = jobs
-        metrics["exhausted"] = exhausted
+    signals.emit(
+        "bpe_train", rounds=len(merges), driver_jobs=jobs, exhausted=exhausted
+    )
 
     rows = [
         (i + 1, l.replace(END, END_PRINT), r.replace(END, END_PRINT), c)

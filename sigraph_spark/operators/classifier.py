@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sigraph_spark import signals
 from sigraph_spark.operators.dedup import hash32_md5_le
 
 #: bucket id reserved for the bias term (every doc gets cnt=1 of it).
@@ -113,7 +114,6 @@ def perceptron_train(
     rounds: int = 4,
     id_col: str = "doc_id",
     label_col: str = "y",
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Train integer perceptron weights; returns ``(bucket, w)`` BIGINT
     (``bucket = -1`` is the bias).
@@ -145,11 +145,9 @@ def perceptron_train(
             .localCheckpoint(eager=True)
         )
         n_upd = delta.count()
-        if metrics is not None:
-            metrics[f"round_{r}_updated_buckets"] = n_upd
+        signals.emit("perceptron_train", **{f"round_{r}_updated_buckets": n_upd})
         if n_upd == 0:
-            if metrics is not None:
-                metrics["converged_round"] = r
+            signals.emit("perceptron_train", converged_round=r)
             break
         weights = (
             weights.join(delta, "bucket", "full_outer")
@@ -196,7 +194,6 @@ def train_quality_classifier(
     text_col: str = "text",
     dim: int = 256,
     rounds: int = 4,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """End-to-end convenience: hash features, train on ``label`` (a
     Column evaluating to +1/-1 over ``docs`` — e.g. a heuristic teacher
@@ -204,9 +201,7 @@ def train_quality_classifier(
     Returns ``(id, score, pred, label)``."""
     lbl = docs.select(F.col(id_col), label.cast("long").alias("y"))
     feats = hashed_features(docs, id_col, text_col, dim).persist()
-    weights = perceptron_train(
-        feats, lbl, rounds=rounds, id_col=id_col, metrics=metrics
-    )
+    weights = perceptron_train(feats, lbl, rounds=rounds, id_col=id_col)
     scored = classifier_score(feats, lbl, weights, id_col)
     out = scored.join(lbl, id_col).select(
         id_col, "score", "pred", F.col("y").alias("label")

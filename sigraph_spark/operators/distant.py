@@ -29,8 +29,8 @@ Scale design (the part that matters at 10^12 documents):
 * Anchor skew guard: an entity anchored on a stop-word-frequency token
   would fan one join key out to a large share of the corpus.
   ``max_anchor_df`` (measured in sentences, on THIS corpus) drops such
-  anchors loudly into the returned metrics rather than silently
-  stalling a reducer — the stop-shingle device of containment_pairs.
+  anchors loudly into a signal rather than silently stalling a
+  reducer — the stop-shingle device of containment_pairs.
   Dropped anchors lose those entities' mentions (recall, not
   correctness); re-run with a higher cap or a cleaned vocabulary.
 * The fact table joins mentions twice (subject, object) on entity
@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
 from sigraph_spark.operators.corpus import split_sentences
 
 
@@ -62,7 +63,6 @@ def distant_supervision(
     pred_col: str = "predicate",
     obj_col: str = "obj",
     max_anchor_df: int | None = None,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Sentence-level distant supervision: one row per (sentence, fact)
     where the sentence mentions both the fact's subject and object.
@@ -70,7 +70,8 @@ def distant_supervision(
 
     ``facts`` needs columns (subj, predicate, obj) — typically the
     canonicalized KG edge table. Duplicate facts collapse (DISTINCT on
-    the fact key before matching)."""
+    the fact key before matching). Entities cut by ``max_anchor_df``
+    are the signal's ``dropped_entities``."""
     sents = split_sentences(docs, text_col, id_col).select(
         F.col(id_col).alias("_id"),
         "sentence_id",
@@ -117,11 +118,10 @@ def distant_supervision(
             F.count(F.lit(1)).alias("_df")
         )
         hot = df_counts.filter(F.col("_df") > max_anchor_df)
-        if metrics is not None:
-            dropped = (
-                ents.join(F.broadcast(hot), "_anchor").select("entity").collect()
-            )
-            metrics["dropped_entities"] = sorted(r["entity"] for r in dropped)
+        if signals.active():
+            dropped = ents.join(F.broadcast(hot), "_anchor").select("entity")
+            names = sorted(r["entity"] for r in dropped.collect())
+            signals.emit("distant_supervision", dropped_entities=names)
         ents = ents.join(F.broadcast(hot.select("_anchor")), "_anchor", "left_anti")
     # explicit broadcast of the vocabulary: its size estimate is opaque
     # after the union+distinct, and a missed broadcast would shuffle the

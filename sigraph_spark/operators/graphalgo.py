@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
 from sigraph_spark.functions.fixpoint import semi_naive
 from sigraph_spark.operators.pagerank import _edge_set, pagerank
 
@@ -140,7 +141,6 @@ def shortest_paths(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 40,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Multi-source BFS distances over the DIRECTED edge relation:
     ``(node_id, distance)`` for every node reachable from ``seeds``
@@ -154,8 +154,7 @@ def shortest_paths(
     Deterministic: distances are unique minima, independent of partition
     order. If ``max_iter`` rounds are exhausted first, the result is a
     PARTIAL distance table (nodes at depth > max_iter are missing, not
-    unreachable); pass a ``metrics`` dict and check
-    ``metrics["converged"]`` to distinguish the cases on
+    unreachable); the signal's ``converged`` distinguishes the cases on
     high-eccentricity graphs.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
@@ -174,12 +173,9 @@ def shortest_paths(
         )
 
     dist, rounds, converged = semi_naive(seed, step, ["node"], max_iter)
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        # distinguish an emptied frontier (true BFS completion) from
-        # max_iter exhaustion: on truncation, distances are a PARTIAL
-        # lower-frontier — absent nodes are not necessarily unreachable.
-        metrics["converged"] = converged
+    # converged: the frontier emptied (true BFS completion) rather than a
+    # max_iter cut, whose distances are a PARTIAL lower-frontier
+    signals.emit("shortest_paths", rounds=rounds, converged=converged)
     return dist.select(F.col("node").alias("node_id"), "distance")
 
 
@@ -190,7 +186,6 @@ def weighted_shortest_paths(
     dst: str = "dst",
     weight: str = "weight",
     max_hops: int = 20,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Hop-bounded weighted shortest paths (Bellman-Ford) from ``seeds``
     over the DIRECTED edge relation: ``(node_id, cost)`` where cost is
@@ -208,9 +203,8 @@ def weighted_shortest_paths(
     Costs are exact BIGINT sums (no float drift between engines). For
     100 TB graphs pre-bucket the edge table on ``src``.
 
-    Deterministic: min-aggregates only. Pass ``metrics`` to read
-    ``rounds`` and ``converged`` (True = quiesced before the bound, the
-    hop bound did not bite).
+    Deterministic: min-aggregates only. The signal's ``converged`` is
+    True when relaxation quiesced before the hop bound bit.
     """
     e = (
         edges.select(
@@ -236,9 +230,7 @@ def weighted_shortest_paths(
         )
 
     dist, rounds, converged = semi_naive(seed, step, ["node"], max_hops, minimize="cost")
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["converged"] = converged
+    signals.emit("weighted_shortest_paths", rounds=rounds, converged=converged)
     return dist.select(F.col("node").alias("node_id"), F.col("cost"))
 
 
@@ -273,7 +265,6 @@ def temporal_reachability(
     dst: str = "dst",
     time: str = "t",
     max_hops: int = 20,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Time-respecting earliest-arrival reachability: ``(node_id,
     earliest_arrival)`` for every node reachable from ``seeds`` along a
@@ -322,9 +313,7 @@ def temporal_reachability(
         )
 
     arr, rounds, converged = semi_naive(seed, step, ["node"], max_hops, minimize="arr")
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["converged"] = converged
+    signals.emit("temporal_reachability", rounds=rounds, converged=converged)
     return arr.select(
         F.col("node").alias("node_id"),
         F.when(~F.col("_seed"), F.col("arr")).alias("earliest_arrival"),
@@ -360,7 +349,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """K-core decomposition for a fixed ``k``: iteratively peel nodes of
     undirected degree < k until a fixpoint; return the surviving nodes
@@ -372,7 +360,7 @@ def kcore(
     mode growing the set of deleted node ids: each round one degree
     aggregation over the edges with neither endpoint deleted, whose
     nodes below ``k`` join the set. Rounds are bounded by the peel depth
-    (degeneracy ordering), tiny for web-like graphs; ``metrics['rounds']``
+    (degeneracy ordering), tiny for web-like graphs; signal ``rounds``
     counts them, the final round that deletes nothing included. A peel
     cut at ``max_iter`` rounds reports degrees over the edges it left.
     The deleted set is built from
@@ -392,8 +380,7 @@ def kcore(
 
     nothing = e.select(F.col("x").alias("n")).limit(0)
     gone, rounds, _ = semi_naive(nothing, peel, ["n"], max_iter)
-    if metrics is not None:
-        metrics["rounds"] = rounds
+    signals.emit("kcore", rounds=rounds)
     return (
         _degrees(live(gone))
         .filter(F.col("d") >= k)
@@ -446,7 +433,6 @@ def ktruss(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """k-truss of the undirected graph: the maximal subgraph in which
     every edge closes at least ``k - 2`` triangles WITHIN the subgraph
@@ -467,7 +453,7 @@ def ktruss(
     edges below ``k - 2`` join the set. Each round is two equi-joins +
     one count agg on edge keys; rounds = peel depth (small in practice),
     the final round that deletes nothing included. Converged vs truncated
-    lands in ``metrics`` (the kcore/shortest_paths contract). The deleted
+    lands in the signal (the kcore/shortest_paths contract). The deleted
     set is built from ``localCheckpoint`` parts (the :func:`semi_naive`
     storage caveat: no lineage, lost with their executor) that the
     returned frame reads. Deterministic: counts and thresholds only.
@@ -513,9 +499,7 @@ def ktruss(
 
     nothing = ek.select("x", "y").limit(0)
     gone, rounds, converged = semi_naive(nothing, peel, ["x", "y"], max_iter)
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["converged"] = converged
+    signals.emit("ktruss", rounds=rounds, converged=converged)
     return with_support(gone)
 
 
@@ -815,7 +799,6 @@ def strongly_connected_components(
     dst: str = "dst",
     max_peel: int = 12,
     max_prop: int = 60,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Strongly connected components of the DIRECTED edge relation:
     ``(node_id, scc_id)`` with ``scc_id`` = min node id in the component
@@ -844,12 +827,11 @@ def strongly_connected_components(
     equi-joins on node keys (uniform after hash partitioning). At
     100 TB the edge table should be bucketed on both endpoints so the
     repeated joins are storage-partitioned. Rounds are data-dependent:
-    pass ``metrics`` and check ``metrics['converged']`` — on truncation
-    (``max_peel`` peels, or a coloring cut at ``max_prop`` rounds) the
-    unassigned remainder is NOT emitted (absent rows, never wrong
-    labels). The returned frame reads ``localCheckpoint`` parts (the
-    :func:`semi_naive` storage caveat: no lineage, lost with their
-    executor).
+    check the signal's ``converged`` — on truncation (``max_peel`` peels,
+    or a coloring cut at ``max_prop`` rounds) the unassigned remainder is
+    NOT emitted (absent rows, never wrong labels). The returned frame
+    reads ``localCheckpoint`` parts (the :func:`semi_naive` storage
+    caveat: no lineage, lost with their executor).
     """
     e_all = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -922,9 +904,7 @@ def strongly_connected_components(
         )
     else:
         converged = remaining.isEmpty()
-    if metrics is not None:
-        metrics["peels"] = peels
-        metrics["converged"] = converged
+    signals.emit("strongly_connected_components", peels=peels, converged=converged)
     out = assigned
     if out is None:
         out = e_all.sparkSession.createDataFrame(
@@ -961,7 +941,6 @@ def topo_levels(
     src: str = "src_scc",
     dst: str = "dst_scc",
     max_iter: int = 100,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Longest-path layering of a DAG: ``(node_id, level)`` with sources
     at level 0 and ``level(v) = 1 + max(level(u) : u→v)`` — the standard
@@ -995,9 +974,7 @@ def topo_levels(
             f"topo_levels did not converge in {max_iter} rounds "
             "(cyclic input or depth > max_iter)"
         )
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["converged"] = True
+    signals.emit("topo_levels", rounds=rounds, converged=True)
     return lvl.select(F.col("node").alias("node_id"), (-F.col("neg")).alias("level"))
 
 

@@ -14,8 +14,8 @@ never a Python UDF. The load-bearing Spark behavior (test-pinned): parsing
 with ``map<string,string>`` / ``array<string>`` schemas RAW-CAPTURES any
 nested subtree as its compact JSON text, so one pass splits an entity
 into (key, raw value) pairs and a second ``from_json`` re-parses just the
-nested values we keep. Malformed blocks parse to NULL and drop silently
-(count them with the ``metrics`` dict), exactly like real crawl data.
+nested values we keep. Malformed blocks parse to NULL and drop silently,
+exactly like real crawl data.
 
 Semantics (pinned by the ``jsonld_triples`` gate + tests):
 * every ld+json script block gets a ``block_idx`` (document order;

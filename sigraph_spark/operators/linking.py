@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
 from sigraph_spark.functions.fixpoint import semi_naive
 
 
@@ -341,7 +342,6 @@ def connected_components(
     src: str = "a",
     dst: str = "b",
     max_iter: int = 50,
-    metrics: dict | None = None,
     small_graph_edges: int = 100_000,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components (SURVEY.md
@@ -354,8 +354,8 @@ def connected_components(
     shuffles. Star contraction converges in O(log n) rounds regardless of
     diameter, each round two algebraic min-aggregations + joins whose keys
     are spread across the component (no single hub groupBy). One driver job
-    per round checks convergence (edge set unchanged). Pass ``metrics`` to
-    capture {rounds, edges_final} for the stage manifest.
+    per round checks convergence (edge set unchanged). Its signal holds
+    {rounds, edges_final} for the stage manifest, at no extra job.
 
     The min-label propagation routine
     ``connected_components_propagation`` is kept only as the reference
@@ -379,9 +379,8 @@ def connected_components(
         # under a driver heartbeat of memory; a 100 TB near-dup graph
         # takes the distributed path as before.
         mapping = sorted(_min_roots([], e.collect()).items())
-        if metrics is not None:
-            metrics["rounds"] = 0
-            metrics["edges_final"] = sum(1 for x, c in mapping if x != c)
+        edges_final = sum(1 for x, c in mapping if x != c)
+        signals.emit("connected_components", rounds=0, edges_final=edges_final)
         return edges.sparkSession.createDataFrame(
             mapping,
             schema=(
@@ -403,9 +402,8 @@ def connected_components(
         e, n_prev = e2, n_new
         if not changed:
             break
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["edges_final"] = e.count()
+    # n_prev is the count of the final (converged) edge set
+    signals.emit("connected_components", rounds=rounds, edges_final=n_prev)
     # at convergence e is a star forest (child -> component min); roots
     # label themselves
     children = e.select(F.col("u").alias("entity"), F.col("v").alias("canonical_id"))
@@ -419,7 +417,6 @@ def connected_components_resume(
     src: str = "a",
     dst: str = "b",
     max_iter: int = 50,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Incremental connected components for the crawl-delta path: fold
     NEW edges into a stored (entity, canonical_id) mapping without
@@ -436,9 +433,7 @@ def connected_components_resume(
         .select(F.col("entity").alias("u"), F.col("canonical_id").alias("v"))
     )
     d = delta_edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    return connected_components(
-        star.unionByName(d), "u", "v", max_iter=max_iter, metrics=metrics
-    )
+    return connected_components(star.unionByName(d), "u", "v", max_iter=max_iter)
 
 
 def connected_components_propagation(

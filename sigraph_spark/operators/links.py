@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
 from sigraph_spark.functions.fixpoint import pointer_double
 
 HREF_RE = r"""href=["']([^"']+)["']"""
@@ -364,7 +365,6 @@ def resolve_redirects(
     src_col: str = "src",
     dst_col: str = "dst",
     max_steps: int = 16,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Resolve redirect / rel=canonical alias chains to their terminal url:
     ``(url, resolved)``, one row per url with an outgoing alias.
@@ -386,15 +386,16 @@ def resolve_redirects(
     ``max_steps`` must be a power of two >= 1 (``ValueError``). Runs
     ``functions/fixpoint.py``'s :func:`pointer_double` with ``least``:
     at most log2(max_steps) self-joins of the O(|aliases|) pointer table.
-    ``metrics['unterminated']`` counts walks that hit the cap (cycle
+    The signal's ``unterminated`` counts walks that hit the cap (cycle
     members land here by design).
     """
     ptr = pointer_double(
         aliases.groupBy(F.col(src_col).alias("x")).agg(F.min(dst_col).alias("y")),
         F.col("y"), F.least, max_steps,
     )
-    if metrics is not None:
-        metrics["unterminated"] = ptr.filter(~F.col("done")).count()
+    if signals.active():
+        stuck = ptr.filter(~F.col("done")).count()
+        signals.emit("resolve_redirects", unterminated=stuck)
     return ptr.select(
         F.col("x").alias("url"),
         F.when(F.col("done"), F.col("y")).otherwise(F.col("acc")).alias("resolved"),

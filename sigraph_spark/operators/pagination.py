@@ -13,8 +13,8 @@ aggregates. This family stitches them:
   (the member with no incoming next-edge) and 0-based position:
   ``functions/fixpoint.py``'s :func:`pointer_double` over the REVERSED
   edges, ``+`` accumulating the distance. Cyclic or over-long chains
-  (> ``max_steps`` backward steps) DROP loudly via
-  ``metrics['unterminated']`` — a malformed pagination loop must not
+  (> ``max_steps`` backward steps) DROP loudly via the signal's
+  ``unterminated`` count — a malformed pagination loop must not
   fabricate a head;
 * :func:`stitch_chains` — chain texts concatenated in position order:
   one groupBy(head) with ``array_agg`` of (pos, text) structs sorted
@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
 from sigraph_spark.functions.fixpoint import pointer_double
 
 NEXT_RE = (
@@ -63,7 +64,6 @@ def page_chains(
     src_col: str = "url",
     dst_col: str = "next",
     max_steps: int = 64,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Next-edges -> ``(url, head, pos)`` for every chain member
     (heads included at pos 0). ``max_steps``, a power of two >= 1
@@ -73,8 +73,9 @@ def page_chains(
         next_links.groupBy(F.col(dst_col).alias("x")).agg(F.min(src_col).alias("y")),
         F.lit(1), lambda a, b: a + b, max_steps,
     )
-    if metrics is not None:
-        metrics["unterminated"] = ptr.filter(~F.col("done")).count()
+    if signals.active():
+        stuck = ptr.filter(~F.col("done")).count()
+        signals.emit("page_chains", unterminated=stuck)
     members = ptr.filter(F.col("done")).select(
         F.col("x").alias("url"), F.col("y").alias("head"),
         F.col("acc").alias("pos"),

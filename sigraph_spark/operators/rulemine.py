@@ -35,7 +35,7 @@ Scale design (the 100 TB story):
   ``z`` — never a predicate or fact cross product;
 * a hot mid entity (in- OR out-degree above ``max_mid_degree``) would
   make that join fan out quadratically, so hot mids are excluded
-  LOUDLY (count + sample into ``metrics``) — the same guard device as
+  LOUDLY (count + sample into a signal) — the same guard device as
   ``distant.distant_supervision``'s stop-anchor cap, keeping per-key
   fan-out bounded by ``max_mid_degree**2``;
 * candidate rules are gated on support/confidence BEFORE the PCA
@@ -56,6 +56,7 @@ import itertools
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
 from sigraph_spark.functions.fixpoint import semi_naive
 
 
@@ -100,22 +101,18 @@ def _chains(left: DataFrame, right: DataFrame, hot: DataFrame) -> DataFrame:
     return hop_l.join(hop_r, "z").select("p1", "p2", "x", "y")
 
 
-def _chain_bodies(
-    sig: DataFrame,
-    max_mid_degree: int,
-    metrics: dict | None = None,
-) -> DataFrame:
+def _chain_bodies(sig: DataFrame, max_mid_degree: int) -> DataFrame:
     """Distinct chain groundings ``(p1, p2, x, y)`` with the hot-mid
     guard applied. A mid entity is any ``z`` that occurs both as an
     object (left hop lands on it) and as a subject (right hop leaves
     it); one with in- or out-degree above the cap is dropped from
-    grounding and recorded in ``metrics['hot_mids']``.
+    grounding and counted in the ``_chain_bodies`` signal.
     """
     hot = _hot_mids(sig, max_mid_degree)
-    if metrics is not None:
+    if signals.active():
         sample = [r["z"] for r in hot.orderBy("z").limit(20).collect()]
-        metrics["hot_mids"] = len(sample) if len(sample) < 20 else hot.count()
-        metrics["hot_mid_sample"] = sample
+        n_hot = len(sample) if len(sample) < 20 else hot.count()
+        signals.emit("_chain_bodies", hot_mids=n_hot, hot_mid_sample=sample)
     return _chains(sig, sig, hot).distinct()
 
 
@@ -127,7 +124,6 @@ def mine_chain_rules(
     min_support: int = 2,
     min_conf_pct: int = 25,
     max_mid_degree: int = 10_000,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Mine length-2 chain rules ``p1(x,z) AND p2(z,y) => head(x,y)``.
 
@@ -139,7 +135,7 @@ def mine_chain_rules(
     coverage columns are DOUBLE ratios derived from the integers.
     """
     sig = _signature(facts, subj_col, pred_col, obj_col)
-    bodies = _chain_bodies(sig, max_mid_degree, metrics)
+    bodies = _chain_bodies(sig, max_mid_degree)
 
     n_body = bodies.groupBy("p1", "p2").agg(
         F.count(F.lit(1)).cast("long").alias("n_body")
@@ -200,7 +196,6 @@ def chase(
     min_pca_conf_pct: int = 50,
     max_mid_degree: int = 10_000,
     max_rounds: int = 5,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Datalog-style materialization: forward-chain the mined rules to
     fixpoint (or ``max_rounds``), returning the saturated KG as
@@ -226,10 +221,10 @@ def chase(
     each round (degrees only grow, so the hot set only grows — the
     semi-naive and naive groundings stay equivalent under it).
 
-    ``metrics`` (optional) records ``rounds`` (per-round new-fact
-    counts, the final empty round of a fixpoint included; derived from
-    the output's ``round`` column, one extra Spark job) and
-    ``converged`` — mirroring the ``graphalgo`` loop contract, so
+    The ``chase`` signal holds ``rounds`` (per-round new-fact counts,
+    the final empty round of a fixpoint included; derived from the
+    output's ``round`` column, one extra Spark job) and ``converged`` —
+    mirroring the ``graphalgo`` loop contract, so
     callers can distinguish a fixpoint from a ``max_rounds``
     truncation.
     """
@@ -261,12 +256,12 @@ def chase(
 
     seed = sig.withColumn("round", F.lit(0))
     known, rounds, converged = semi_naive(seed, step, ["s", "p", "o"], max_rounds)
-    if metrics is not None:
+    if signals.active():
         per_round = dict(
             known.filter(F.col("round") >= 1).groupBy("round").count().collect()
         )
-        metrics["rounds"] = [per_round.get(r, 0) for r in range(1, rounds + 1)]
-        metrics["converged"] = converged
+        new = [per_round.get(r, 0) for r in range(1, rounds + 1)]
+        signals.emit("chase", rounds=new, converged=converged)
     return known.select(
         F.col("s").alias(subj_col),
         F.col("p").alias(pred_col),

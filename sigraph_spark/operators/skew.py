@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
+
 
 def hot_keys(df: DataFrame, key: str, threshold_rows: int) -> DataFrame:
     """Keys whose row count exceeds the threshold. One shuffle over (key),
@@ -82,7 +84,7 @@ def choose_salting(
     """Data-driven salting decision from the degree sketch (VERDICT r2
     item 9): pick ``threshold_rows`` and ``salt_buckets`` for
     :func:`salted_adjacency` from the data instead of static defaults, and
-    return the whole decision (sketch included) for the stage manifest.
+    emit and return the whole decision (sketch included) for the manifest.
 
     Heuristic: the target per-reducer group size is
     ``max(floor_rows, total_rows / shuffle_partitions)`` — a key above
@@ -112,7 +114,7 @@ def choose_salting(
         if max_deg > target
         else 1
     )
-    return {
+    decision = {
         "total_rows": int(total),
         "target_rows_per_reducer": int(target),
         "threshold_rows": int(target),
@@ -123,6 +125,8 @@ def choose_salting(
             {"key": r[src], "degree": int(r["degree"])} for r in top_src[:5]
         ],
     }
+    signals.emit("salting", **decision)
+    return decision
 
 
 def top_degree_entities(edges: DataFrame, n: int = 20) -> DataFrame:

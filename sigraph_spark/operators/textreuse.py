@@ -17,8 +17,8 @@ Scale design:
   shuffled per gram, never the text;
 * the only dangerous key is a BOILERPLATE gram shared by thousands of
   docs (quadratic join fan-out): ``max_gram_df`` drops grams above a
-  document-frequency ceiling BEFORE the self-join — loudly, via
-  ``metrics`` — passim's df-cut, which also removes alignment-useless
+  document-frequency ceiling BEFORE the self-join — loudly, via a
+  signal — passim's df-cut, which also removes alignment-useless
   grams;
 * the islands window partitions by (doc_a, doc_b, diagonal) — bounded by
   a single document's length, immune to corpus-level skew.
@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from sigraph_spark import signals
 
 
 def kgram_index(
@@ -72,7 +74,6 @@ def reuse_spans(
     k: int = 5,
     min_run: int = 3,
     max_gram_df: int = 8,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Maximal aligned reuse spans between document pairs:
     ``(doc_a, doc_b, start_a, start_b, n_grams, len_tokens)`` with
@@ -90,9 +91,9 @@ def reuse_spans(
         F.countDistinct("doc_id").alias("_df")
     )
     hot = df_counts.filter(F.col("_df") > max_gram_df).select("gram")
-    if metrics is not None:
+    if signals.active():
         hot = hot.localCheckpoint(eager=True)
-        metrics["hot_grams_dropped"] = hot.count()
+        signals.emit("reuse_spans", hot_grams_dropped=hot.count())
     pruned = idx.join(hot, "gram", "left_anti")
     # pair generation: ONE shuffle groups each surviving gram's postings
     # and explodes the cross pairs in place. The old a-join-b self-join

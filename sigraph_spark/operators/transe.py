@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
 from sigraph_spark.operators.dedup import hash32_md5_le
 
 SCALE = 10**6
@@ -93,7 +94,6 @@ def transe_train(
     subj_col: str = "subj",
     pred_col: str = "predicate",
     obj_col: str = "obj",
-    metrics: dict | None = None,
     init_emb: DataFrame | None = None,
     round_offset: int = 0,
 ) -> DataFrame:
@@ -102,9 +102,8 @@ def transe_train(
     or 'r' (relations), k in [0, dim), v in SCALE micro-units.
 
     ``lr`` and ``margin`` are in micro-units (defaults: 0.02 and 1.0).
-    ``metrics['violations']``, when a dict is passed, records the
-    per-round violated-fact counts (the training curve) — one extra
-    count action per round.
+    The signal's ``violations`` are the per-round violated-fact counts
+    (the training curve) — one extra count action per round.
 
     **Warm start** (the continuous-crawl path): pass the STORED
     embedding table as ``init_emb`` and the number of rounds it was
@@ -150,6 +149,7 @@ def transe_train(
         rel = rel.join(prior_r, ["id", "k"], "left").select(
             "id", "k", F.coalesce("_pv", "v").alias("v")
         )
+    violations: list[int] = []
     for rnd in range(round_offset + 1, round_offset + rounds + 1):
         neg_rank = hash32_md5_le(
             F.concat_ws("|", F.col("s"), F.col("p"), F.col("o"),
@@ -198,8 +198,8 @@ def transe_train(
             )
             .localCheckpoint(eager=False)
         )
-        if metrics is not None:
-            metrics.setdefault("violations", []).append(
+        if signals.active():
+            violations.append(
                 g.select("s", "p", "o", "neg").distinct().count()
             )
         ent_upd = (
@@ -230,6 +230,7 @@ def transe_train(
                     (F.col("v") + F.coalesce("d", F.lit(0))).alias("v"))
             .localCheckpoint(eager=False)
         )
+    signals.emit("transe_train", violations=violations)
     return ent.select(F.lit("e").alias("kind"), "id", "k", "v").unionByName(
         rel.select(F.lit("r").alias("kind"), "id", "k", "v")
     )

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import read_manifest, run_stage, table_fingerprint
+from .pipeline import run_stage, stage_fingerprint, table_fingerprint
 
 __all__ = ["run_media_curation"]
 
@@ -103,10 +103,6 @@ def run_media_curation(
     ``media``: ``(media_id, payload binary)``. Returns the per-stage
     tables; counts are the curation report."""
 
-    def out_fp(stage_dir: str) -> str:
-        m = read_manifest(os.path.join(workdir, stage_dir))
-        return m["output_fingerprint"] if m else "missing"
-
     # content proxy: id + payload length (an in-place payload edit with
     # an unchanged id must invalidate the chain)
     fp = input_fingerprint or table_fingerprint(
@@ -115,17 +111,17 @@ def run_media_curation(
 
     m1 = run_stage(spark, "m1_sniff", os.path.join(workdir, "m1_sniff"),
                    lambda: _sniff(media), fp + ":m1v1")
-    fp1 = out_fp("m1_sniff")
+    fp1 = stage_fingerprint(workdir, "m1_sniff")
 
     m2 = run_stage(spark, "m2_index", os.path.join(workdir, "m2_index"),
                    lambda: _hash_index(media), fp1 + ":m2v1",
                    partition_by=["plane"])
-    fp2 = out_fp("m2_index")
+    fp2 = stage_fingerprint(workdir, "m2_index")
 
     m3 = run_stage(
         spark, "m3_pairs", os.path.join(workdir, "m3_pairs"),
         lambda: _pairs(m2, max_hamming), fp2 + f":m3v1:h{max_hamming}")
-    fp3 = out_fp("m3_pairs")
+    fp3 = stage_fingerprint(workdir, "m3_pairs")
 
     def build_keep() -> DataFrame:
         from sigraph_spark.operators.dedup import dedup_keeplist

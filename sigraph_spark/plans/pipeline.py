@@ -33,6 +33,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sigraph_spark import signals
+
 MANIFEST = "_manifest.json"
 
 
@@ -95,6 +97,12 @@ def read_manifest(out_dir: str) -> dict | None:
         return json.load(f)
 
 
+def stage_fingerprint(workdir: str, stage_dir: str) -> str:
+    """The committed stage's ``output_fingerprint``, or ``"missing"``."""
+    m = read_manifest(os.path.join(workdir, stage_dir))
+    return m["output_fingerprint"] if m else "missing"
+
+
 def run_stage(
     spark: SparkSession,
     name: str,
@@ -102,21 +110,25 @@ def run_stage(
     build: Callable[[], DataFrame],
     input_fingerprint: str,
     partition_by: list[str] | None = None,
-    extra_manifest: dict | None = None,
 ) -> DataFrame:
     """Run (or resume) one checkpointed stage.
 
     If ``out_dir`` holds a manifest whose stage name + input fingerprint
     match, the stage is SKIPPED and its parquet output is returned as-is —
     that is the resume path. Otherwise the stage recomputes into a temp
-    dir and renames into place (atomic on one filesystem), then writes the
-    manifest last — a crash anywhere leaves either the old complete output
-    or no manifest (=> recompute), never a half-written current one.
+    dir, writes the manifest there last and renames it into place (atomic
+    on one filesystem): a crash leaves the old output, or the new one in
+    the temp dir for the next call to promote — never a half-written one.
+    The manifest also stores the ``signals`` record of ``build()``.
 
     The returned frame is read with the schema the lineage read of the
     temp dir already inferred, so the renamed output is not re-inferred
     (one Spark job fewer per stage).
     """
+    tmp = out_dir + ".tmp"
+    if read_manifest(out_dir) is None and read_manifest(tmp) is not None:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        os.replace(tmp, out_dir)
     existing = read_manifest(out_dir)
     if (
         existing
@@ -126,8 +138,8 @@ def run_stage(
         return spark.read.parquet(os.path.join(out_dir, "data"))
 
     t0 = time.monotonic()
-    df = build()
-    tmp = out_dir + ".tmp"
+    with signals.collect() as record:
+        df = build()
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp, exist_ok=True)
     writer = df.write.mode("overwrite")
@@ -150,10 +162,7 @@ def run_stage(
         "wall_s": round(time.monotonic() - t0, 3),
         "schema": out.schema.simpleString(),
     }
-    if extra_manifest:
-        # read AFTER build() so decisions the builder records (e.g. the
-        # auto-salting sketch) land in the manifest
-        manifest.update(extra_manifest)
+    manifest.update(record)
     with open(_manifest_path(tmp), "w") as f:
         json.dump(manifest, f, indent=1)
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -184,10 +193,6 @@ def run_pipeline(
     from sigraph_spark.operators.skew import choose_salting, salted_adjacency
     from sigraph_spark.operators.triples import triples_from_docs
 
-    def out_fp(stage_dir: str) -> str:
-        m = read_manifest(os.path.join(workdir, stage_dir))
-        return m["output_fingerprint"] if m else "missing"
-
     fp = input_fingerprint or table_fingerprint(
         pages.select("url", "warc_ts", "lang")
     )
@@ -196,34 +201,32 @@ def run_pipeline(
         lambda: extract_pages(pages).select("url", "warc_ts", "text", "text_sha256"),
         fp + ":s1v1",
     )
-    fp_s1 = out_fp("s1_docs")
+    fp_s1 = stage_fingerprint(workdir, "s1_docs")
     triples = run_stage(
         spark, "s2_triples", os.path.join(workdir, "s2_triples"),
         lambda: triples_from_docs(docs),
         fp_s1 + ":s2v1",
     )
-    fp_s2 = out_fp("s2_triples")
+    fp_s2 = stage_fingerprint(workdir, "s2_triples")
     mapping = run_stage(
         spark, "s3_mapping", os.path.join(workdir, "s3_mapping"),
         lambda: link_entities(triples),
         fp_s2 + ":s3v1",
     )
-    fp_s3 = out_fp("s3_mapping")
+    fp_s3 = stage_fingerprint(workdir, "s3_mapping")
     edges = run_stage(
         spark, "s4_edges", os.path.join(workdir, "s4_edges"),
         lambda: canonical_edges(triples, mapping, docs),
         fp_s1 + ":" + fp_s2 + ":" + fp_s3 + ":s4v1",
     )
-    # auto-salting: parameters come from the data (degree sketch), and the
-    # decision itself is recorded in the stage manifest for the audit trail
-    salting: dict = {}
-
+    # auto-salting: parameters come from the data (degree sketch); the
+    # decision lands in the stage manifest as choose_salting's signal
     def build_adjacency() -> DataFrame:
         e = edges.select(
             F.col("subj").alias("src"), "predicate",
             F.col("obj").alias("dst"), "start_time", "weight",
         )
-        salting.update(choose_salting(e))
+        salting = choose_salting(e)
         return salted_adjacency(
             e,
             threshold_rows=salting["threshold_rows"],
@@ -233,8 +236,7 @@ def run_pipeline(
     adjacency = run_stage(
         spark, "s4_adjacency", os.path.join(workdir, "s4_adjacency"),
         build_adjacency,
-        out_fp("s4_edges") + ":s4adjv2",
-        extra_manifest={"salting": salting},
+        stage_fingerprint(workdir, "s4_edges") + ":s4adjv2",
     )
     return {
         "docs": docs,
@@ -277,10 +279,6 @@ def run_curation(
     )
     from sigraph_spark.operators.dedup import exact_dedup, minhash_dedup
 
-    def out_fp(stage_dir: str) -> str:
-        m = read_manifest(os.path.join(workdir, stage_dir))
-        return m["output_fingerprint"] if m else "missing"
-
     # fingerprint includes a cheap content proxy (text length + lang), not
     # just doc_id: an in-place edit with unchanged ids must invalidate the
     # resume chain, else c1-c6 silently replay stale manifests.
@@ -298,18 +296,18 @@ def run_curation(
 
     c1 = run_stage(spark, "c1_normalize", os.path.join(workdir, "c1_normalize"),
                    build_c1, fp + ":c1v1")
-    fp1 = out_fp("c1_normalize")
+    fp1 = stage_fingerprint(workdir, "c1_normalize")
 
     c2 = run_stage(spark, "c2_funnel", os.path.join(workdir, "c2_funnel"),
                    lambda: curation_funnel(c1), fp1 + ":c2v1")
-    fp2 = out_fp("c2_funnel")
+    fp2 = stage_fingerprint(workdir, "c2_funnel")
     survivors = c1.join(
         c2.filter(F.col("verdict") == "pass").select("doc_id"), "doc_id"
     )
 
     c3 = run_stage(spark, "c3_exact", os.path.join(workdir, "c3_exact"),
                    lambda: exact_dedup(survivors), fp2 + ":c3v1")
-    fp3 = out_fp("c3_exact")
+    fp3 = stage_fingerprint(workdir, "c3_exact")
     exact_kept = survivors.join(
         c3.filter(F.col("doc_id") == F.col("canonical_id")).select("doc_id"),
         "doc_id",
@@ -317,7 +315,7 @@ def run_curation(
 
     c4 = run_stage(spark, "c4_neardup", os.path.join(workdir, "c4_neardup"),
                    lambda: minhash_dedup(exact_kept), fp3 + ":c4v1")
-    fp4 = out_fp("c4_neardup")
+    fp4 = stage_fingerprint(workdir, "c4_neardup")
     near_kept = exact_kept.join(
         c4.filter(F.col("doc_id") == F.col("canonical_id")).select("doc_id"),
         "doc_id",
@@ -328,7 +326,7 @@ def run_curation(
             spark, "c5_decontam", os.path.join(workdir, "c5_decontam"),
             lambda: decontaminate(near_kept, evalset), fp4 + ":c5v1",
         )
-        fp5 = out_fp("c5_decontam")
+        fp5 = stage_fingerprint(workdir, "c5_decontam")
         clean = near_kept.join(
             c5.filter(~F.col("contaminated")).select("doc_id"), "doc_id"
         )

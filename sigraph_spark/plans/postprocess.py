@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sigraph_spark.plans.pipeline import (
-    read_manifest, run_stage, table_fingerprint,
+    run_stage, stage_fingerprint, table_fingerprint,
 )
 
 
@@ -65,10 +65,6 @@ def run_kg_post(
     )
     from sigraph_spark.operators.literals import typed_literals
 
-    def out_fp(stage_dir: str) -> str:
-        m = read_manifest(os.path.join(workdir, stage_dir))
-        return m["output_fingerprint"] if m else "missing"
-
     # full content fingerprint over the columns the stages consume — any
     # in-place edit (actor, verb, or object, even same-length) must
     # invalidate the chain
@@ -94,7 +90,7 @@ def run_kg_post(
         spark, "k1_claims", os.path.join(workdir, "k1_claims"),
         build_claims, fp_k1,
     )
-    claims_fp = out_fp("k1_claims")
+    claims_fp = stage_fingerprint(workdir, "k1_claims")
 
     fused = run_stage(
         spark, "k2_fused", os.path.join(workdir, "k2_fused"),

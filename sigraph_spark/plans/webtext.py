@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from sigraph_spark.plans import ledger
 from sigraph_spark.plans.pipeline import (
-    read_manifest, run_stage, table_fingerprint,
+    run_stage, stage_fingerprint, table_fingerprint,
 )
 
 
@@ -116,10 +116,6 @@ def run_webtext_kg(
     from sigraph_spark.operators.hearst import hearst_pairs
     from sigraph_spark.operators.triples import triples_from_docs
 
-    def out_fp(stage_dir: str) -> str:
-        m = read_manifest(os.path.join(workdir, stage_dir))
-        return m["output_fingerprint"] if m else "missing"
-
     fp = input_fingerprint or table_fingerprint(
         pages.select("url", "warc_ts", F.length("html").alias("n"))
     )
@@ -128,13 +124,13 @@ def run_webtext_kg(
         lambda: fused_page_scan(pages),
         fp + ":w0v1",
     )
-    fp_scan = out_fp("w0_scan")
+    fp_scan = stage_fingerprint(workdir, "w0_scan")
     docs = run_stage(
         spark, "w1_docs", os.path.join(workdir, "w1_docs"),
         lambda: scan.select("url", "warc_ts", "text"),
         fp_scan + ":w1v2",
     )
-    fp_docs = out_fp("w1_docs")
+    fp_docs = stage_fingerprint(workdir, "w1_docs")
     # all html-derived claims channels come out of the ONE w0 scan
     html_claims = run_stage(
         spark, "w9_html_claims", os.path.join(workdir, "w9_html_claims"),
@@ -178,7 +174,7 @@ def run_webtext_kg(
     tables = html_claims.filter(F.col("source") == "table")
     struct = html_claims.filter(F.col("source").isin(*_STRUCT_SOURCES))
     fp_views = ":".join(
-        out_fp(d) for d in (
+        stage_fingerprint(workdir, d) for d in (
             "w2_sent", "w4_hearst", "w8_quotes", "w9_html_claims",
         )
     )
@@ -188,7 +184,7 @@ def run_webtext_kg(
         .unionByName(html_claims).distinct(),
         fp_views + ":w5v4",
     )
-    fp_claims = out_fp("w5_claims")
+    fp_claims = stage_fingerprint(workdir, "w5_claims")
     fused = run_stage(
         spark, "w6_fused", os.path.join(workdir, "w6_fused"),
         lambda: fuse_triples(

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from sigraph_spark.signals import collect
+
 
 def _toy(spark):
     return spark.createDataFrame(
@@ -89,11 +91,12 @@ def test_train_exhausted_vocab(spark):
     from sigraph_spark.operators.bpe import bpe_train
 
     docs = spark.createDataFrame([(1, "ab ab ab")], "doc_id int, text string")
-    metrics: dict = {}
-    rows = bpe_train(docs, num_merges=50, metrics=metrics).collect()
+    with collect() as rec:
+        rows = bpe_train(docs, num_merges=50).collect()
     # "ab" has symbols a, b, </w>: exactly 2 merges exist
     assert len(rows) == 2
-    assert metrics["exhausted"] is True and metrics["rounds"] == 2
+    sig = rec["bpe_train"]
+    assert sig["exhausted"] is True and sig["rounds"] == 2
 
 
 def test_split_sentences(spark):
@@ -141,13 +144,12 @@ def test_batched_training_equals_sequential(spark):
         (4, "x y z x y z xy yz zx the a an and then them"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    m_seq, m_bat = {}, {}
-    seq = bpe_train(
-        docs, num_merges=24, metrics=m_seq, batch_candidates=1
-    ).collect()
-    bat = bpe_train(
-        docs, num_merges=24, metrics=m_bat, batch_candidates=64
-    ).collect()
+    with collect() as rec:
+        seq = bpe_train(docs, num_merges=24, batch_candidates=1).collect()
+    m_seq = rec["bpe_train"]
+    with collect() as rec:
+        bat = bpe_train(docs, num_merges=24, batch_candidates=64).collect()
+    m_bat = rec["bpe_train"]
     assert [tuple(r) for r in seq] == [tuple(r) for r in bat]
     assert m_seq["rounds"] == m_bat["rounds"] == 24
     assert m_seq["driver_jobs"] == 24

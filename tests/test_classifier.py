@@ -15,6 +15,7 @@ from sigraph_spark.operators.classifier import (
     perceptron_train,
     train_quality_classifier,
 )
+from sigraph_spark.signals import collect
 
 GOOD = [
     "the quick brown fox jumps over the lazy dog",
@@ -120,12 +121,13 @@ def test_partition_order_invariance(spark):
 
 def test_converges_on_separable_corpus(spark):
     docs = _docs(spark)
-    metrics: dict = {}
-    out = train_quality_classifier(
-        docs, F.col("y"), dim=64, rounds=10, metrics=metrics
-    ).collect()
+    with collect() as rec:
+        out = train_quality_classifier(
+            docs, F.col("y"), dim=64, rounds=10
+        ).collect()
     assert all(r["pred"] == r["label"] for r in out)  # train acc 1.0
-    assert "converged_round" in metrics  # stopped before 10 rounds
+    # stopped before 10 rounds
+    assert "converged_round" in rec["perceptron_train"]
     # the quality head separates unseen same-distribution docs too
     held = spark.createDataFrame(
         [(900, "the dog and the fox read a book", 1),

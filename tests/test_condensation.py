@@ -9,6 +9,7 @@ from sigraph_spark.operators.graphalgo import (
     strongly_connected_components,
     topo_levels,
 )
+from sigraph_spark.signals import collect
 
 # two cycles (abc, fg) glued by a DAG: p -> abc -> d -> fg; d -> e
 EDGES = [
@@ -31,9 +32,9 @@ def test_condensation_is_dag_with_expected_edges(spark):
 def test_topo_levels_longest_path(spark):
     df = spark.createDataFrame(EDGES, "src string, dst string")
     dag = condensation(df, strongly_connected_components(df))
-    m: dict = {}
-    lv = {r["node_id"]: r["level"] for r in topo_levels(dag, metrics=m).collect()}
-    assert m["converged"]
+    with collect() as rec:
+        lv = {r["node_id"]: r["level"] for r in topo_levels(dag).collect()}
+    assert rec["topo_levels"]["converged"]
     assert lv == {"p": 0, "a": 1, "d": 2, "f": 3, "e": 3}
 
 

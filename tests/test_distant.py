@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sigraph_spark.operators.distant import distant_supervision
+from sigraph_spark.signals import collect
 
 DOCS = "doc_id long, text string"
 FACTS = "subj string, predicate string, obj string"
@@ -86,17 +87,18 @@ def test_whitespace_normalization(spark):
 def test_hot_anchor_guard_drops_loudly(spark):
     docs = [(i, f"the common word x{i} appears") for i in range(20)]
     facts = [("the common", "p", "appears"), (f"x5", "p", "appears")]
-    metrics: dict = {}
-    out = distant_supervision(
-        spark.createDataFrame(docs, DOCS),
-        spark.createDataFrame(facts, FACTS),
-        max_anchor_df=5,
-        metrics=metrics,
-    )
+    with collect() as rec:
+        out = distant_supervision(
+            spark.createDataFrame(docs, DOCS),
+            spark.createDataFrame(facts, FACTS),
+            max_anchor_df=5,
+        )
     got = {tuple(r)[3:] for r in out.collect()}
     # 'the' and 'appears' anchor in every sentence -> entities dropped,
     # recorded loudly
-    assert metrics["dropped_entities"] == ["appears", "the common"]
+    assert rec["distant_supervision"]["dropped_entities"] == [
+        "appears", "the common",
+    ]
     assert ("the common", "p", "appears") not in got
     # rare-anchored entity survives; 'appears' is also hot as an OBJECT
     # anchor, so the x5 fact is dropped too unless its anchor survives

@@ -8,6 +8,7 @@ from itertools import combinations
 import pytest
 
 from sigraph_spark.operators.graphalgo import triangle_count, triangle_total
+from sigraph_spark.signals import collect
 
 
 def _brute(edges):
@@ -98,17 +99,17 @@ def test_shortest_paths_chain_and_branch(spark):
     ]
     e = spark.createDataFrame(edges, "src string, dst string")
     seeds = spark.createDataFrame([("s",)], "node_id string")
-    metrics = {}
-    got = {
-        r["node_id"]: r["distance"]
-        for r in shortest_paths(e, seeds, metrics=metrics).collect()
-    }
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["distance"]
+            for r in shortest_paths(e, seeds).collect()
+        }
     assert got == _bfs(edges, ["s"])
     assert "q" not in got and "r" not in got
     # d is at distance 2 via the shortcut, not 4 via the chain
     assert got["d"] == 2
-    assert metrics["rounds"] >= 4
-    assert metrics["converged"] is True
+    assert rec["shortest_paths"]["rounds"] >= 4
+    assert rec["shortest_paths"]["converged"] is True
 
 
 def test_shortest_paths_truncation_flagged(spark):
@@ -119,12 +120,13 @@ def test_shortest_paths_truncation_flagged(spark):
     chain = [(f"n{i}", f"n{i+1}") for i in range(6)]
     e = spark.createDataFrame(chain, "src string, dst string")
     seeds = spark.createDataFrame([("n0",)], "node_id string")
-    metrics = {}
-    got = {
-        r["node_id"]: r["distance"]
-        for r in shortest_paths(e, seeds, max_iter=3, metrics=metrics).collect()
-    }
-    assert metrics["converged"] is False and metrics["rounds"] == 3
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["distance"]
+            for r in shortest_paths(e, seeds, max_iter=3).collect()
+        }
+    sig = rec["shortest_paths"]
+    assert sig["converged"] is False and sig["rounds"] == 3
     assert got == {"n0": 0, "n1": 1, "n2": 2, "n3": 3}  # truncated at depth 3
 
 
@@ -176,13 +178,13 @@ def test_kcore_peels_tail_into_fixpoint(spark):
     k4 = [(a, b) for a, b in combinations(["a", "b", "c", "d"], 2)]
     chain = [("d", "e"), ("e", "f"), ("f", "g")]
     e = spark.createDataFrame(k4 + chain, "src string, dst string")
-    metrics = {}
-    got = {
-        r["node_id"]: r["core_degree"]
-        for r in kcore(e, k=2, metrics=metrics).collect()
-    }
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["core_degree"]
+            for r in kcore(e, k=2).collect()
+        }
     assert got == _peel(k4 + chain, 2) == {"a": 3, "b": 3, "c": 3, "d": 3}
-    assert metrics["rounds"] >= 3  # one chain link per round
+    assert rec["kcore"]["rounds"] >= 3  # one chain link per round
 
 
 def test_kcore_empty_when_k_exceeds_density(spark):
@@ -266,14 +268,14 @@ def test_ktruss_cascading_peel(spark):
     strip = [("u", "w"), ("v", "w"), ("v", "x"), ("w", "x"),
              ("w", "y"), ("x", "y")]
     e = spark.createDataFrame(k5 + strip, "src string, dst string")
-    metrics = {}
-    got = {
-        (r["x"], r["y"]): r["support"]
-        for r in ktruss(e, k=4, metrics=metrics).collect()
-    }
+    with collect() as rec:
+        got = {
+            (r["x"], r["y"]): r["support"]
+            for r in ktruss(e, k=4).collect()
+        }
     assert got == _truss_peel(k5 + strip, 4)
     assert all(s == 3 for s in got.values()) and len(got) == 10  # the K5
-    assert metrics["converged"] and metrics["rounds"] >= 3
+    assert rec["ktruss"]["converged"] and rec["ktruss"]["rounds"] >= 3
 
 
 def test_ktruss_vs_kcore_separation(spark):
@@ -715,16 +717,16 @@ def test_weighted_paths_cheaper_long_path(spark):
     ]
     e = spark.createDataFrame(edges, "src string, dst string, weight long")
     seeds = spark.createDataFrame([("s",)], "node_id string")
-    metrics = {}
-    got = {
-        r["node_id"]: r["cost"]
-        for r in weighted_shortest_paths(e, seeds, metrics=metrics).collect()
-    }
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["cost"]
+            for r in weighted_shortest_paths(e, seeds).collect()
+        }
     assert got == _bounded_bf(edges, ["s"], 20)
     # the 3-hop path beats both parallel direct edges
     assert got["a"] == 3
     assert "q" not in got and "r" not in got
-    assert metrics["converged"] is True
+    assert rec["weighted_shortest_paths"]["converged"] is True
 
 
 def test_weighted_paths_hop_bound_is_semantic(spark):
@@ -738,16 +740,15 @@ def test_weighted_paths_hop_bound_is_semantic(spark):
     ]
     e = spark.createDataFrame(edges, "src string, dst string, weight long")
     seeds = spark.createDataFrame([("s",)], "node_id string")
-    metrics = {}
-    got = {
-        r["node_id"]: r["cost"]
-        for r in weighted_shortest_paths(
-            e, seeds, max_hops=2, metrics=metrics
-        ).collect()
-    }
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["cost"]
+            for r in weighted_shortest_paths(e, seeds, max_hops=2).collect()
+        }
     assert got == _bounded_bf(edges, ["s"], 2)
     assert got["a"] == 10  # bounded minimum, not the unbounded 3
-    assert metrics["converged"] is False  # the bound bit — caller can tell
+    # the bound bit — caller can tell
+    assert rec["weighted_shortest_paths"]["converged"] is False
 
 
 def test_weighted_paths_multi_source_and_zero_weight(spark):
@@ -828,14 +829,14 @@ def test_temporal_reach_respects_time(spark):
     ]
     e = spark.createDataFrame(edges, "src string, dst string, t long")
     seeds = spark.createDataFrame([("s",)], "node_id string")
-    metrics = {}
-    got = {
-        r["node_id"]: r["earliest_arrival"]
-        for r in temporal_reachability(e, seeds, metrics=metrics).collect()
-    }
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["earliest_arrival"]
+            for r in temporal_reachability(e, seeds).collect()
+        }
     assert got == _bounded_ea(edges, ["s"], 20)
     assert got == {"s": None, "a": 10, "b": 30, "c": 20}
-    assert metrics["converged"] is True
+    assert rec["temporal_reachability"]["converged"] is True
 
 
 def test_temporal_reach_earlier_arrival_unlocks_more(spark):
@@ -862,19 +863,17 @@ def test_temporal_reach_hop_bound_and_multiseed(spark):
     chain = [(f"n{i}", f"n{i+1}", i + 1) for i in range(6)]
     e = spark.createDataFrame(chain, "src string, dst string, t long")
     seeds = spark.createDataFrame([("n0",), ("n4",)], "node_id string")
-    metrics = {}
-    got = {
-        r["node_id"]: r["earliest_arrival"]
-        for r in temporal_reachability(
-            e, seeds, max_hops=2, metrics=metrics
-        ).collect()
-    }
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["earliest_arrival"]
+            for r in temporal_reachability(e, seeds, max_hops=2).collect()
+        }
     assert got == _bounded_ea(chain, ["n0", "n4"], 2)
     # n3 is 3 hops from n0 — out of contract; n5/n6 come from seed n4
     assert got == {
         "n0": None, "n4": None, "n1": 1, "n2": 2, "n5": 5, "n6": 6,
     }
-    assert metrics["converged"] is False
+    assert rec["temporal_reachability"]["converged"] is False
 
 
 def test_temporal_reach_oracle_matches_duckdb(spark):

@@ -12,6 +12,7 @@ from sigraph_spark.operators.linking import (
     normalize_entity,
     remove_lucene_chars,
 )
+from sigraph_spark.signals import collect
 
 
 def test_normalize_entity(spark):
@@ -60,12 +61,13 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
         [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(n - 1)],
         "a string, b string",
     )
-    metrics: dict = {}
-    cc = connected_components(edges, metrics=metrics)
+    with collect() as rec:
+        cc = connected_components(edges)
     labels = {r["entity"]: r["canonical_id"] for r in cc.collect()}
     assert len(labels) == n
     assert set(labels.values()) == {"n0000"}
-    assert metrics["rounds"] <= 12  # log-ish, far below diameter 511
+    # log-ish, far below diameter 511
+    assert rec["connected_components"]["rounds"] <= 12
 
 
 def test_cc_skewed_giant_component_and_equivalence(spark):
@@ -392,17 +394,18 @@ def test_cc_small_graph_fast_path_equals_star_contraction(spark):
     rows += [(f"x{k}a", f"x{k}b") for k in range(4)]
     rng.shuffle(rows)
     edges = spark.createDataFrame(rows, "a string, b string")
-    fast_metrics: dict = {}
-    fast = {r["entity"]: r["canonical_id"]
-            for r in connected_components(
-                edges, metrics=fast_metrics).collect()}
-    assert fast_metrics["rounds"] == 0  # fast path engaged
-    star_metrics: dict = {}
-    star = {r["entity"]: r["canonical_id"]
-            for r in connected_components(
-                edges, metrics=star_metrics,
-                small_graph_edges=0).collect()}
-    assert star_metrics["rounds"] >= 1  # distributed path engaged
+    with collect() as fast_rec:
+        fast = {r["entity"]: r["canonical_id"]
+                for r in connected_components(edges).collect()}
+    assert fast_rec["connected_components"]["rounds"] == 0  # fast path engaged
+    with collect() as star_rec:
+        star = {r["entity"]: r["canonical_id"]
+                for r in connected_components(
+                    edges, small_graph_edges=0).collect()}
+    star_sig = star_rec["connected_components"]
+    assert star_sig["rounds"] >= 1  # distributed path engaged
+    # the converged edge set is the star forest: one edge per non-root
+    assert star_sig["edges_final"] == sum(1 for x, c in star.items() if x != c)
     assert fast == star
     # schema parity: both paths must expose identical column types
     a = connected_components(edges)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from sigraph_spark.operators.links import extract_links, host_link_graph, page_host
+from sigraph_spark.signals import collect
 from pyspark.sql import functions as F
 
 
@@ -205,15 +206,14 @@ def test_resolve_redirects_chain_and_terminal(spark):
 def test_resolve_redirects_cycle_members_agree(spark):
     from sigraph_spark.operators.links import resolve_redirects
 
-    m: dict = {}
-    out = {r["url"]: r["resolved"] for r in resolve_redirects(
-        _aliases(spark, [("p", "q"), ("q", "r"), ("r", "p"), ("t", "p")]),
-        metrics=m,
-    ).collect()}
+    with collect() as rec:
+        out = {r["url"]: r["resolved"] for r in resolve_redirects(
+            _aliases(spark, [("p", "q"), ("q", "r"), ("r", "p"), ("t", "p")]),
+        ).collect()}
     # every cycle member resolves to the cycle's min url; the tail node
     # joins them (its successor set IS the cycle here)
     assert out == {"p": "p", "q": "p", "r": "p", "t": "p"}
-    assert m["unterminated"] == 4
+    assert rec["resolve_redirects"]["unterminated"] == 4
 
 
 def test_resolve_redirects_conflict_takes_min_dst(spark):
@@ -232,13 +232,13 @@ def test_resolve_redirects_long_chain_capped(spark):
     # walks that don't reach the terminal resolve to min of first 4
     # successors (their immediate next, names ascending)
     rows = [(f"n{i}", f"n{i+1}") for i in range(9)]
-    m: dict = {}
-    out = {r["url"]: r["resolved"] for r in resolve_redirects(
-        _aliases(spark, rows), max_steps=4, metrics=m
-    ).collect()}
+    with collect() as rec:
+        out = {r["url"]: r["resolved"] for r in resolve_redirects(
+            _aliases(spark, rows), max_steps=4
+        ).collect()}
     assert out["n5"] == "n9"  # 4 steps away exactly
     assert out["n0"] == "n1"  # capped: min(n1..n4)
-    assert m["unterminated"] == 5
+    assert rec["resolve_redirects"]["unterminated"] == 5
     full = {r["url"]: r["resolved"] for r in resolve_redirects(
         _aliases(spark, rows), max_steps=16
     ).collect()}

@@ -2,7 +2,7 @@
 
 Pins next-link extraction (link + a forms, first-declaration-wins),
 head/pos labeling via backward pointer doubling with distance
-accumulation, cycle/over-long drops with loud metrics, and
+accumulation, cycle/over-long drops with a loud signal, and
 position-ordered stitching.
 """
 
@@ -11,6 +11,7 @@ from __future__ import annotations
 from sigraph_spark.operators.pagination import (
     extract_next_links, page_chains, stitch_chains,
 )
+from sigraph_spark.signals import collect
 
 
 def _links(spark, rows):
@@ -45,23 +46,23 @@ def test_chain_heads_and_positions(spark):
 
 def test_cycle_drops_loudly(spark):
     links = _links(spark, [("c1", "c2"), ("c2", "c1"), ("d1", "d2")])
-    metrics = {}
-    got = {
-        (r["url"], r["head"], r["pos"])
-        for r in page_chains(links, metrics=metrics).collect()
-    }
+    with collect() as rec:
+        got = {
+            (r["url"], r["head"], r["pos"])
+            for r in page_chains(links).collect()
+        }
     assert got == {("d1", "d1", 0), ("d2", "d1", 1)}
-    assert metrics["unterminated"] == 2  # both cycle members
+    assert rec["page_chains"]["unterminated"] == 2  # both cycle members
 
 
 def test_overlong_chain_drops(spark):
     links = _links(
         spark, [(f"p{i}", f"p{i+1}") for i in range(10)]
     )
-    metrics = {}
-    out = page_chains(links, max_steps=4, metrics=metrics)
+    with collect() as rec:
+        out = page_chains(links, max_steps=4)
     # members deeper than 2^ceil(log2(4))=4 backward steps are unresolved
-    assert metrics["unterminated"] > 0
+    assert rec["page_chains"]["unterminated"] > 0
     assert out.filter("pos > 4").count() == 0
 
 

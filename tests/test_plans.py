@@ -181,8 +181,9 @@ def test_crash_mid_stage_recovers(spark, tmp_path):
 
 def test_run_stage_crash_injection_resumes_identically(spark, tmp_path, monkeypatch):
     """A build that raises leaves the previous complete output resumable;
-    a crash at the data rename recomputes to the uninterrupted output; a
-    partitioned stage's returned frame equals a fresh read of it."""
+    a crash at the data rename leaves the new complete output, which the
+    rerun promotes and resumes from without rebuilding; a partitioned
+    stage's returned frame equals a fresh read of it."""
     import pytest
 
     from sigraph_spark.plans import pipeline
@@ -218,7 +219,8 @@ def test_run_stage_crash_injection_resumes_identically(spark, tmp_path, monkeypa
     assert read_manifest(out)["output_fingerprint"] == fp_a
     assert table_fingerprint(df) == fp_a
 
-    # 2) crash at the rename of the fp-B output: the rerun rebuilds
+    # 2) crash at the rename of the fp-B output: the rerun promotes the
+    # complete temp output and resumes from it
     real_replace = pipeline.os.replace
     crashes = {"left": 1}
 
@@ -232,10 +234,11 @@ def test_run_stage_crash_injection_resumes_identically(spark, tmp_path, monkeypa
     with pytest.raises(OSError, match="injected"):
         run_stage(spark, "s", out, build_b, input_fingerprint="fp-B")
     n = calls["n"]
-    run_stage(spark, "s", out, build_b, input_fingerprint="fp-B")
+    df = run_stage(spark, "s", out, build_b, input_fingerprint="fp-B")
     monkeypatch.undo()
-    assert calls["n"] == n + 1
+    assert calls["n"] == n
     assert read_manifest(out)["output_fingerprint"] == want
+    assert table_fingerprint(df) == want
 
     # 3) partitionBy: the schema-given read equals a fresh inferred read
     out_k = str(tmp_path / "stage_k")

@@ -8,6 +8,7 @@ import hashlib
 from collections import Counter, defaultdict
 
 from sigraph_spark.operators.rulemine import infer_chain, mine_chain_rules
+from sigraph_spark.signals import collect
 
 FIXTURE = [
     # born_in(x, city)
@@ -140,17 +141,17 @@ def test_hot_mid_guard(spark):
     hub = [("x%d" % i, "p", "hub") for i in range(30)] + [
         ("hub", "q", "y%d" % i) for i in range(30)
     ]
-    metrics: dict = {}
-    rules = mine_chain_rules(
-        _df(spark, FIXTURE + hub),
-        min_support=1,
-        min_conf_pct=0,
-        max_mid_degree=10,
-        metrics=metrics,
-    )
+    with collect() as rec:
+        rules = mine_chain_rules(
+            _df(spark, FIXTURE + hub),
+            min_support=1,
+            min_conf_pct=0,
+            max_mid_degree=10,
+        )
     got = _collect_rules(rules)
     assert ("p", "q") not in {(p1, p2) for (p1, p2, _) in got}
-    assert metrics["hot_mids"] == 1 and metrics["hot_mid_sample"] == ["hub"]
+    hot = rec["_chain_bodies"]
+    assert hot["hot_mids"] == 1 and hot["hot_mid_sample"] == ["hub"]
     # the cold chain is untouched
     assert got[("born_in", "city_in", "nationality")] == (3, 5, 4, 4)
 
@@ -210,13 +211,11 @@ def _trans_rule(spark):
 def test_chase_transitive_closure(spark):
     from sigraph_spark.operators.rulemine import chase
 
-    metrics: dict = {}
-    out = {
-        (r["subj"], r["obj"]): r["round"]
-        for r in chase(
-            _path_facts(spark), _trans_rule(spark), metrics=metrics
-        ).collect()
-    }
+    with collect() as rec:
+        out = {
+            (r["subj"], r["obj"]): r["round"]
+            for r in chase(_path_facts(spark), _trans_rule(spark)).collect()
+        }
     # path a->b->c->d->e saturates to the full closure; a pair at
     # distance d lands in round ceil(log2(d)).
     chain = "abcde"
@@ -225,20 +224,18 @@ def test_chase_transitive_closure(spark):
     }
     assert out[("a", "b")] == 0 and out[("a", "c")] == 1
     assert out[("a", "d")] == 2 and out[("a", "e")] == 2
-    assert metrics["rounds"] == [3, 3, 0]
-    assert metrics["converged"] is True
+    assert rec["chase"]["rounds"] == [3, 3, 0]
+    assert rec["chase"]["converged"] is True
 
 
 def test_chase_truncation_flagged(spark):
     from sigraph_spark.operators.rulemine import chase
 
-    metrics: dict = {}
-    out = chase(
-        _path_facts(spark), _trans_rule(spark), max_rounds=1, metrics=metrics
-    )
+    with collect() as rec:
+        out = chase(_path_facts(spark), _trans_rule(spark), max_rounds=1)
     assert out.filter("round = 1").count() == 3
-    assert metrics["rounds"] == [3]
-    assert metrics["converged"] is False
+    assert rec["chase"]["rounds"] == [3]
+    assert rec["chase"]["converged"] is False
 
 
 def test_chase_pca_gate_blocks_weak_rules(spark):

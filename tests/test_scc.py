@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from sigraph_spark.operators.graphalgo import strongly_connected_components
+from sigraph_spark.signals import collect
 
 
 def _tarjan_scc(edges):
@@ -77,12 +78,12 @@ EDGES = [
 
 def _run(spark, edges, **kw):
     df = spark.createDataFrame(edges, "src string, dst string")
-    m: dict = {}
-    got = {
-        r["node_id"]: r["scc_id"]
-        for r in strongly_connected_components(df, metrics=m, **kw).collect()
-    }
-    return got, m
+    with collect() as rec:
+        got = {
+            r["node_id"]: r["scc_id"]
+            for r in strongly_connected_components(df, **kw).collect()
+        }
+    return got, rec["strongly_connected_components"]
 
 
 def test_matches_tarjan(spark):

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 from sigraph_spark.operators.textreuse import kgram_index, reuse_graph, reuse_spans
+from sigraph_spark.signals import collect
 
 
 def _docs(spark, rows):
@@ -47,12 +48,12 @@ def test_below_min_run_dropped_and_split_runs(spark):
 def test_boilerplate_df_cut(spark):
     boiler = "c0 c1 c2 c3 c4"
     rows = [(f"d{i:02d}", boiler + " " + _toks(f"f{i}_", 3)) for i in range(6)]
-    m: dict = {}
-    out = reuse_spans(
-        _docs(spark, rows), k=5, min_run=1, max_gram_df=4, metrics=m
-    ).collect()
+    with collect() as rec:
+        out = reuse_spans(
+            _docs(spark, rows), k=5, min_run=1, max_gram_df=4
+        ).collect()
     assert out == []  # the only shared gram exceeded the df ceiling
-    assert m["hot_grams_dropped"] == 1
+    assert rec["reuse_spans"]["hot_grams_dropped"] == 1
     # with a looser ceiling every pair matches
     loose = reuse_spans(_docs(spark, rows), k=5, min_run=1, max_gram_df=6)
     assert loose.count() == 15  # C(6,2)

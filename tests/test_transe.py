@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from sigraph_spark.operators.transe import (
     SCALE, transe_score, transe_train,
 )
+from sigraph_spark.signals import collect
 
 FACTS = "subj string, predicate string, obj string"
 
@@ -63,17 +64,16 @@ TINY = [
 
 
 def test_train_matches_python_reference(spark):
-    metrics: dict = {}
-    got = {
-        (r["kind"], r["id"], r["k"]): r["v"]
-        for r in transe_train(
-            spark.createDataFrame(TINY, FACTS), dim=4, rounds=3,
-            metrics=metrics,
-        ).collect()
-    }
+    with collect() as rec:
+        got = {
+            (r["kind"], r["id"], r["k"]): r["v"]
+            for r in transe_train(
+                spark.createDataFrame(TINY, FACTS), dim=4, rounds=3,
+            ).collect()
+        }
     ref, viols = _transe_python(TINY, dim=4, rounds=3)
     assert got == ref
-    assert metrics["violations"] == viols
+    assert rec["transe_train"]["violations"] == viols
 
 
 def test_partition_invariance(spark):
@@ -89,13 +89,11 @@ def test_training_learns_true_tails(spark):
     # (strictly) better than the average corrupted tail for most heads
     facts = [(f"h{i}", "maps_to", f"t{i}") for i in range(12)]
     df = spark.createDataFrame(facts, FACTS)
-    metrics: dict = {}
-    emb = transe_train(
-        df, dim=8, rounds=8, lr=100_000, metrics=metrics
-    ).cache()
+    with collect() as rec:
+        emb = transe_train(df, dim=8, rounds=8, lr=100_000).cache()
     # the violation curve falls as training converges (not necessarily
     # monotonically — margin violations can transiently rise)
-    v = metrics["violations"]
+    v = rec["transe_train"]["violations"]
     assert v[-1] < v[0]
     true_d = {
         (r["subj"], r["obj"]): r["dist_fp"]
